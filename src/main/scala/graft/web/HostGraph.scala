@@ -1,6 +1,8 @@
 package graft.web
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -127,7 +129,9 @@ object HostGraph {
         .localCheckpoint()
       // `next` is materialized (eager checkpoint) — the superseded iteration's
       // blocks can go NOW. Dataset.unpersist can't free them (checkpoint RDDs
-      // aren't in the CacheManager), so release the backing RDD directly.
+      // aren't in the CacheManager), so release the backing RDD directly. The
+      // initial rank frame is a projection over `nodes`, not a checkpoint, so
+      // `release` leaves it (and any checkpointed input behind it) alone.
       release(ranks)
       ranks = next
     }
@@ -138,9 +142,13 @@ object HostGraph {
   /** Free the checkpointed blocks behind a frame [[pageRank]] returned (a plain
     * `unpersist()` is a silent no-op for locally-checkpointed state — the RDD is
     * not registered in the CacheManager). Call when done with the ranks; without
-    * it the blocks live until the ContextCleaner GCs the dataset. */
-  def release(ranks: DataFrame): Unit =
-    ranks.queryExecution.logical.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+    * it the blocks live until the ContextCleaner GCs the dataset. Only a checkpoint
+    * at the top of the plan, under at most one projection, is freed: a checkpoint
+    * deeper in the lineage is an input the frame was built from, such as a caller's
+    * own checkpointed edge list, and is not this frame's to free. */
+  def release(ranks: DataFrame): Unit = ranks.queryExecution.logical match {
+    case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+    case Project(_, lr: LogicalRDD) => lr.rdd.unpersist(blocking = false)
+    case _ =>
+  }
 }

@@ -961,6 +961,23 @@ class DataOpsSpec extends SparkTestBase {
     assert(graft.web.HostGraph.pageRank(empty, "s", "d", iters = 3).count() == 0)
   }
 
+  test("pageRank and release leave a caller's checkpointed edge frame usable") {
+    import spark.implicits._
+    val edges = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")).toDF("s", "d").localCheckpoint()
+    val rddId = edges.queryExecution.logical.collectFirst {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.get
+    val before = edges.collect().toSet
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    for (iters <- Seq(0, 1, 3))
+      graft.web.HostGraph.release(graft.web.HostGraph.pageRank(edges, "s", "d", iters))
+    assert(spark.sparkContext.getPersistentRDDs.contains(rddId),
+      "the caller's checkpointed edge RDD was unpersisted")
+    // and pageRank's own checkpoints and caches are all gone
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted)
+    assert(edges.collect().toSet == before)
+  }
+
   test("dsirLogWeights matches a sequential recompute and scores target-like docs higher") {
     import spark.implicits._
     val target = "alpha beta gamma delta alpha beta"

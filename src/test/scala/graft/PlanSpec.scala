@@ -243,4 +243,41 @@ class PlanSpec extends SparkTestBase {
     assert(!p.linesIterator.exists(l => l.contains("SortMergeJoin") && l.contains("__b")),
       s"token-side shuffle join crept in:\n$p")
   }
+
+  test("selection aggregates stay inside whole-stage codegen at 150 features") {
+    import org.apache.spark.sql.execution.{InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val names = (0 until 150).map(i => s"f$i")
+    val df = spark.range(0, 2000, 1, 4).select((col("id") % 3 === 0).as("y") +:
+      names.zipWithIndex.map { case (f, i) => (col("id") * (i + 1) % 97).cast("double").as(f) }: _*)
+    val ds = GraftDataset(df, FeatureSchema((names.map(ColumnSpec.numeric(_)) :+
+      ColumnSpec.boolean("y", ColRole.Label)): _*), Nil)
+    object helper extends AdaptiveSparkPlanHelper
+    // a node belongs to a codegen stage when reached from it without crossing an InputAdapter
+    def inStage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case _ => p +: p.children.flatMap(inStage)
+    }
+    for (method <- Seq(graft.selection.SelectionMethod.Correlation, graft.selection.SelectionMethod.TTest)) {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val l = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe.executedPlan)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try {
+        graft.selection.FeatureSelector.getReport(ds, names, method)
+        val deadline = System.nanoTime() + 10000000000L // the listener bus delivers asynchronously
+        while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      } finally spark.listenerManager.unregister(l)
+      assert(plans.size == 1, s"${method.label}: expected one query, got ${plans.size}")
+      val p = plans.peek()
+      val aggs = helper.collect(p) { case a: HashAggregateExec => a }
+      val coded = helper.collect(p) { case w: WholeStageCodegenExec => inStage(w.child) }.flatten
+      assert(aggs.nonEmpty && aggs.forall(a => coded.exists(_ eq a)),
+        s"${method.label}: an aggregate fell out of whole-stage codegen:\n$p")
+    }
+  }
 }
