@@ -1,7 +1,7 @@
 package graft
 
 import graft.web.{Pages, WebFeatures}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Driver benchmark contract: one JSON line with per-query seconds, plus the headline
   * north-rule metric — feature rows/sec for as-of join + window feature synthesis over
@@ -12,50 +12,37 @@ object Bench {
     * workload is scan → features, like production, not synthetic generation.
     */
   def ensureTables(spark: SparkSession, numUrls: Long): (String, String) = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_bench_$numUrls"
-    val pagesDir = s"$base/pages"; val eventsDir = s"$base/events"
-    if (!new java.io.File(s"$base/_READY").exists()) {
-      val pages = Pages.generate(spark, numUrls, numPartitions = 128)
-      pages.write.mode("overwrite").parquet(pagesDir)
-      Pages.events(spark, spark.read.parquet(pagesDir)).write.mode("overwrite").parquet(eventsDir)
-      new java.io.File(base, "_READY").createNewFile()
+    val base = Probe.materialize(s"graft_bench_$numUrls") { base =>
+      Pages.generate(spark, numUrls, numPartitions = 128)
+        .write.mode("overwrite").parquet(s"$base/pages")
+      Pages.events(spark, spark.read.parquet(s"$base/pages"))
+        .write.mode("overwrite").parquet(s"$base/events")
     }
-    (pagesDir, eventsDir)
+    (s"$base/pages", s"$base/events")
   }
 
-  /** Best-of-`runs` headline measurement. A single sample proved untrustworthy (r2's
-    * recorded 182k rows/s vs 1.11M reproduced): host noise is one-sided — a run can
-    * only be slowed down, never sped up — so the max rate over a few runs is the
-    * honest estimate of what the engine does, same policy ScalingBench uses.
+  /** The headline job, built untimed: its output row count, and the timed region — the
+    * point-in-time features and the as-of event backfill written to noop sinks.
     */
-  def headline(spark: SparkSession, numUrls: Long, runs: Int = 5): (Long, Double) = {
+  def headlineJob(spark: SparkSession, numUrls: Long): (Long, () => Unit) = {
     val (pagesDir, eventsDir) = ensureTables(spark, numUrls)
     val pages = spark.read.parquet(pagesDir)
     val events = spark.read.parquet(eventsDir)
     val rows = pages.count() + events.count() // output cardinalities, computed untimed
-    val features = WebFeatures.pointInTime(pages)
-    // perf knob for A/B runs; default path measured faster at this payload width
-    val slim = sys.env.get("SPARK_GRAFT_SLIM_ASOF").contains("1")
-    val backfilled = WebFeatures.backfillEvents(events, pages, slimRight = slim)
-    // noop sink forces FULL computation of every feature column (a bare count() would
-    // let Catalyst prune the window expressions away) without measuring disk IO.
+    val jobs = Seq(WebFeatures.pointInTime(pages), WebFeatures.backfillEvents(events, pages))
     // The two jobs run CONCURRENTLY: Spark's scheduler interleaves their stages, so
     // per-job driver-serial fractions (planning, stage submit) overlap instead of
     // adding up — on a real cluster these are independent jobs on one app too.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val secs = (1 to runs).map { r =>
-      val t0 = System.nanoTime()
-      val jobs = Seq(features, backfilled).map(df => Future {
-        df.write.format("noop").mode("overwrite").save()
-      })
-      jobs.foreach(Await.result(_, Duration.Inf))
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (sys.env.contains("SPARK_GRAFT_BENCH_DEBUG"))
-        System.err.println(f"[headline] run $r: $dt%.1fs (${rows / dt}%.0f rows/s)")
-      dt
-    }.min
+    (rows, () => jobs.map(df => Future(Probe.noop(df))).foreach(Await.result(_, Duration.Inf)))
+  }
+
+  /** One headline run: (output rows, rows/sec). */
+  def headline(spark: SparkSession, numUrls: Long): (Long, Double) = {
+    val (rows, job) = headlineJob(spark, numUrls)
+    val (_, secs) = Probe.timed(job())
     (rows, rows / secs)
   }
 
@@ -94,28 +81,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val headlineUrls = sys.env.getOrElse("SPARK_GRAFT_HEADLINE_URLS", "200000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // cpus*8, not cpus*4: with the two headline jobs running concurrently, coarse
-      // waves (128 tasks / 32 cores = 4) idle the box at every stage tail; measured
-      // A/B (BENCH/BASELINE.md round 5): 256-512 partitions ~2x the 128 headline
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_PARTITIONS", (cpus.toInt * 8).toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE coalesce partitions INSIDE cached plans too — iterative ops (dup
-      // clusters) cache per-round frames, and pinning them at full shuffle width
-      // makes every tiny round pay hundreds of empty tasks
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // global-scalar aggregates (PMI total-N, scaler stats) sitting directly over a
-      // parquet scan answer COUNT/MIN/MAX from footers instead of scanning rows —
-      // measured ~10% off q_pmi warm; semantics unchanged (optimizer feature)
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // untimed engine warmup: JVM + codegen + parquet footer caches. The first query
     // otherwise pays ~5s of JIT that has nothing to do with its plan (measured: an
     // identical-shape rerun takes 0.2s).
@@ -124,17 +91,7 @@ object Bench {
         .groupBy(org.apache.spark.sql.functions.col("l_returnflag")).count().count()
     } catch { case _: Throwable => () }
     val errors = scala.collection.mutable.ListBuffer.empty[String]
-    // exploration knob: skip the gate queries and measure only the headline
-    val headlineOnly = sys.env.get("SPARK_GRAFT_HEADLINE_ONLY").contains("1")
-    // exploration knob: time only the named queries (comma-separated) while
-    // iterating on one — a filtered run is NOT a recordable artifact
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val queryFns = if (headlineOnly) Map.empty[String, (SparkSession, String) => DataFrame]
-      else only match {
-        case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
-        case None => SparkEntry.queries
-      }
-    val results = queryFns.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val t0 = System.nanoTime()
       val secs = try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
       catch {
@@ -149,9 +106,12 @@ object Bench {
     // drop them ALL before the headline so 45 queries' leftovers can't squeeze the
     // storage memory the measured jobs run under
     spark.catalog.clearCache()
-    headline(spark, headlineUrls, runs = 1) // untimed warmup: JIT + codegen (measured 5-8x effect)
+    // best of 5 after an untimed warm-up (JIT + codegen, measured 5-8x effect). A single
+    // sample proved untrustworthy: r2 recorded 182k rows/s where 1.11M reproduced.
     val headlineRuns = 5
-    val (hRows, hRate) = headline(spark, headlineUrls, runs = headlineRuns)
+    val (hRows, job) = headlineJob(spark, headlineUrls)
+    val (_, hSecs) = Probe.bestOf("headline", headlineRuns)(job())
+    val hRate = hRows / hSecs
     val probeSecs = cpuProbe() // after the measured work: probe under the same host state
     val gcMs = gcMillis()
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -163,7 +123,7 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"sf":"$sfDir",""" +
       s""""headline_rows":$hRows,"headline_rows_per_sec":${hRate.toLong},""" +
       s""""headline_policy":"best-of-$headlineRuns after untimed warmup",""" +
-      s""""headline_urls":$headlineUrls,"cpus":$cpus,""" +
+      s""""headline_urls":$headlineUrls,"cpus":${GraftSession.cpus},""" +
       s""""partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
       // host-envelope self-calibration: probe_secs = fixed-work single-thread
       // sort+hash (min-of-3; bigger = a slower/noisier host granted this JVM),

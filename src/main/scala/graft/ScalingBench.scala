@@ -22,50 +22,39 @@ object ScalingBench {
   private val execMemMb = sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM_MB", "8192").toInt
 
   private def session(units: Int): SparkSession = {
-    val b = SparkSession.builder()
-      .appName(s"graft-scaling-$units")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_PARTITIONS", "128"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // all workers are this host: never trade a core for locality
-      .config("spark.locality.wait", "0ms")
-      // shuffle codec A/B knob (see BENCH/BASELINE.md round 5): the headline's
-      // exchange carries wide text rows between executor JVMs; codec choice trades
-      // shuffle bytes (loopback + spill-disk bandwidth at 4N) against codec CPU
-      .config("spark.io.compression.codec", sys.env.getOrElse("SPARK_GRAFT_CODEC", "lz4"))
-    val withMaster = mode match {
+    val partitions = sys.env.get("SPARK_GRAFT_PARTITIONS").fold(128)(_.toInt)
+    val b = mode match {
       case "local-cluster" =>
-        b.master(s"local-cluster[$units,$execCores,$execMemMb]")
+        GraftSession.builder(s"local-cluster[$units,$execCores,$execMemMb]", partitions)
           // local-cluster's third arg sizes the WORKER; the executor JVM still
           // defaults to 1g (-Xmx1024M observed in the launch command) — request the
           // full worker allotment or every sort/aggregate spills
           .config("spark.executor.memory", s"${execMemMb}m")
           .config("spark.test.home", sys.env.getOrElse("SPARK_HOME", "/opt/spark"))
           // executors are fresh JVMs: they need this build's classes and the JDK17 opens
-          .config("spark.executor.extraClassPath", "/root/repo/target/scala-2.13/classes")
+          .config("spark.executor.extraClassPath",
+            new java.io.File(getClass.getProtectionDomain.getCodeSource.getLocation.toURI).getPath)
           .config("spark.executor.extraJavaOptions",
-            // Cgroup-faithful thread sizing (default ON; SPARK_GRAFT_CAP_EXEC_PROCS=0
-            // disables): without it every executor JVM sees all 32 host cores and
-            // sizes GC/JIT/netty pools for the full machine — 4 executors' pools
-            // then oversubscribe the box exactly when the 4N level runs, and the
-            // LONE N-level executor silently borrows idle host cores for GC/JIT
-            // that no container-limited cluster executor would get. Back-to-back
-            // A/B (BENCH/BASELINE.md round 3): capping raised the 4N best RAW rate
-            // 1.82M→2.00M rows/s and its occupancy 0.80→0.92.
-            (if (!sys.env.get("SPARK_GRAFT_CAP_EXEC_PROCS").contains("0"))
-              s"-XX:ActiveProcessorCount=$execCores " else "") +
+            // Cgroup-faithful thread sizing: without it every executor JVM sees all
+            // host cores and sizes GC/JIT/netty pools for the full machine — 4
+            // executors' pools then oversubscribe the box exactly when the 4N level
+            // runs, and the LONE N-level executor silently borrows idle host cores
+            // for GC/JIT that no container-limited cluster executor would get.
+            // Back-to-back A/B (BENCH/BASELINE.md round 3): capping raised the 4N
+            // best RAW rate 1.82M→2.00M rows/s and its occupancy 0.80→0.92.
+            s"-XX:ActiveProcessorCount=$execCores " +
             "-XX:+IgnoreUnrecognizedVMOptions --add-opens=java.base/java.lang=ALL-UNNAMED " +
               "--add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED " +
               "--add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED " +
               "--add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED " +
               "--add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED " +
               "--add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED")
-      case _ => b.master(s"local[$units]")
+      case _ => GraftSession.builder(s"local[$units]", partitions)
     }
-    withMaster.getOrCreate()
+    b.appName(s"graft-scaling-$units")
+      // all workers are this host: never trade a core for locality
+      .config("spark.locality.wait", "0ms")
+      .getOrCreate()
   }
 
   /** Host-side interference counters, read around each timed run so a slow run can
@@ -114,14 +103,12 @@ object ScalingBench {
       val numRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
       require(numRuns >= 1, s"SPARK_GRAFT_RUNS must be >= 1, got $numRuns")
       val cores = units * execCores
-      // runs = 1 throughout: THIS loop is the best-of-N (Bench.headline's own
-      // best-of-5 default would 5x each sample's wall and corrupt occupancy)
-      Bench.headline(spark, urls, runs = 1)
+      Bench.headline(spark, urls) // untimed warm-up
       val samples = (1 to numRuns).map { _ =>
         val l = graft.web.GraftMetricsListener.attach(spark)
         val (thr0, steal0) = hostCounters()
         val t0 = System.nanoTime()
-        val (rows, rate) = Bench.headline(spark, urls, runs = 1)
+        val (rows, rate) = Bench.headline(spark, urls)
         val wallMs = (System.nanoTime() - t0) / 1e6
         val (thr1, steal1) = hostCounters()
         Thread.sleep(300) // listener bus drain

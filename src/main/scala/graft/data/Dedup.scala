@@ -389,12 +389,9 @@ object Dedup {
         .select(col("a.id").as("id"),
           coalesce(col("__pcid"), col("a.cluster_id")).as("cluster_id"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val t0 = System.nanoTime()
       // cast BEFORE summing: a LongType sum wraps silently under ansi=false, and a
       // wrapped-sum collision would fake convergence
       val s = updated.agg(sum(col("cluster_id").cast("decimal(38,0)"))).head.getDecimal(0)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round $i: ${(System.nanoTime() - t0) / 1e9}%.2fs sum=$s")
       cached.unpersist()
       cached = updated
       labels = spark.createDataFrame(updated.rdd, updated.schema) // the lineage cut

@@ -1,18 +1,15 @@
 package graft.data
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns with typed
   * metadata, processed in partition-batched passes (the Scala analogue of
   * `mapInPandas` — one iterator per partition, batch-shaped work inside).
   *
   * Images decode for real via `javax.imageio` (PNG/JPEG/GIF/BMP — part of the JDK, no
-  * extra dependency). Audio/video codecs are NOT available in this environment, so
-  * those decode steps are a clearly-marked deterministic STUB (`FakeCodec`) that also
-  * serves as the fallback for undecodable image bytes; everything around it — schema,
-  * typed Dataset encoders, partition-batched execution, output shape — is real and
-  * tested.
+  * extra dependency). The JDK has no audio or video decoder, so those kinds have no
+  * operators here. Bytes that do not decode as an image yield no row: a made-up
+  * width or luma would pass for a real one downstream.
   */
 object Multimodal {
 
@@ -20,38 +17,10 @@ object Multimodal {
   final case class DecodedImage(doc_id: Long, width: Int, height: Int, channels: Int,
       meanLuma: Double)
   final case class ResizedImage(doc_id: Long, width: Int, height: Int, thumbnail: Array[Byte])
-  final case class SampledFrames(doc_id: Long, frameIndices: Seq[Int], frames: Seq[Array[Byte]])
-
-  /** STUB decoder — deterministic fake in lieu of an image library (???-equivalent,
-    * see module doc). Metadata derives from a hash of the payload so tests are stable.
-    */
-  object FakeCodec {
-    def decodeImage(id: Long, bytes: Array[Byte]): DecodedImage = {
-      val h = graft.functions.HashKernels.splitmix64(
-        bytes.foldLeft(id)((acc, b) => graft.functions.HashKernels.splitmix64(acc ^ b)))
-      DecodedImage(id,
-        width = 64 + (math.abs(h) % 1024).toInt,
-        height = 64 + (math.abs(h >>> 16) % 1024).toInt,
-        channels = 3,
-        meanLuma = (math.abs(h >>> 32) % 256).toDouble / 255.0)
-    }
-
-    def resize(img: DecodedImage, w: Int, hgt: Int): ResizedImage =
-      ResizedImage(img.doc_id, w, hgt,
-        Array.tabulate(math.min(w * hgt, 64))(i =>
-          (graft.functions.HashKernels.splitmix64(img.doc_id + i) & 0xFF).toByte))
-
-    def sampleFrames(id: Long, bytes: Array[Byte], every: Int, max: Int): SampledFrames = {
-      val n = math.min(max, 1 + bytes.length / math.max(every, 1))
-      SampledFrames(id, (0 until n).map(_ * every),
-        (0 until n).map(i => Array.tabulate(16)(j =>
-          (graft.functions.HashKernels.splitmix64(id + i * 131 + j) & 0xFF).toByte)))
-    }
-  }
 
   /** Real image codec on `javax.imageio` (JDK-bundled). Returns None when the bytes
-    * are not a decodable image, letting callers fall back (crawled media is dirty —
-    * undecodable payloads are the norm, not the exception).
+    * are not a decodable image (crawled media is dirty — undecodable payloads are the
+    * norm, not the exception).
     */
   object ImageIoCodec {
     import java.awt.image.BufferedImage
@@ -97,38 +66,17 @@ object Multimodal {
       }
   }
 
-  /** Synthesize a deterministic media table from the documents table (binary payload
-    * derived from text bytes) — stands in for real crawled media.
-    */
-  def syntheticMedia(docs: DataFrame): Dataset[MediaRow] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"),
-        element_at(array(lit("image"), lit("audio"), lit("video")),
-          (pmod(xxhash64(col("doc_id")), lit(3)) + 1).cast("int")).as("kind"),
-        encode(col("text"), "UTF-8").as("bytes"))
-      .as[MediaRow]
-  }
-
   /** Decode pass: partition-batched (mapPartitions keeps per-partition setup, like
-    * mapInPandas batch init). Real `javax.imageio` decode when the bytes are a
-    * readable image; deterministic FakeCodec fallback otherwise so dirty crawled
-    * payloads never kill the job.
+    * mapInPandas batch init). Rows whose payload is not a decodable image are dropped,
+    * so dirty crawled payloads never kill the job.
     */
   def decodeImages(media: Dataset[MediaRow]): Dataset[DecodedImage] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.filter(_.kind == "image").mapPartitions { it =>
       // ImageIO scans its reader SPI registry once per JVM; nothing else to init
-      it.map(m => ImageIoCodec.decodeImage(m.doc_id, m.bytes)
-        .getOrElse(FakeCodec.decodeImage(m.doc_id, m.bytes)))
+      it.flatMap(m => ImageIoCodec.decodeImage(m.doc_id, m.bytes))
     }
-  }
-
-  def resizeImages(decoded: Dataset[DecodedImage], w: Int, h: Int): Dataset[ResizedImage] = {
-    val spark = decoded.sparkSession
-    import spark.implicits._
-    decoded.mapPartitions(_.map(d => FakeCodec.resize(d, w, h)))
   }
 
   /** Real decode+resize over raw media bytes (PNG thumbnails); rows whose payload is
@@ -139,12 +87,5 @@ object Multimodal {
     import spark.implicits._
     media.filter(_.kind == "image").mapPartitions(_.flatMap(m =>
       ImageIoCodec.resizeToPng(m.doc_id, m.bytes, w, h)))
-  }
-
-  def sampleVideoFrames(media: Dataset[MediaRow], every: Int = 8, max: Int = 4): Dataset[SampledFrames] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.filter(_.kind == "video").mapPartitions(_.map(m =>
-      FakeCodec.sampleFrames(m.doc_id, m.bytes, every, max)))
   }
 }

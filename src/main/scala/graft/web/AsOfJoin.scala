@@ -32,15 +32,6 @@ object AsOfJoin {
   /** @param valueCols right columns to attach (null when no match)
     * @param tolerance max allowed `ts - right_ts` in seconds; matches older than this
     *                  are nulled out
-    * @param slimRight carry only the right TIMESTAMP through the union sort and
-    *                  re-attach `valueCols` by an equality join on (keys, matched ts)
-    *                  afterwards. Requires the right side to be unique per (keys, ts).
-    *                  MEASURED tradeoff (1M-url headline, local-cluster): the default
-    *                  already shuffles the right payload exactly once (into the window
-    *                  sort); slim replaces that sort with a second full shuffle of the
-    *                  same bytes + the join, and came out ~25% SLOWER at ~300-byte
-    *                  payloads. Reserve it for very wide right rows (tens of KB) where
-    *                  the window sort would spill.
     */
   def backward(
       left: DataFrame,
@@ -51,8 +42,7 @@ object AsOfJoin {
       rightTs: String,
       valueCols: Seq[String],
       strict: Boolean = false,
-      tolerance: Option[Long] = None,
-      slimRight: Boolean = false): DataFrame = {
+      tolerance: Option[Long] = None): DataFrame = {
     require(leftKeys.size == rightKeys.size)
     val keyNames = leftKeys
     val lCols = left.columns.toSeq
@@ -60,20 +50,19 @@ object AsOfJoin {
     // left rows must see right rows at the same timestamp when inclusive (right
     // sorts first) and must not when strict (left sorts first)
     val (leftTag, rightTag) = if (strict) (0, 1) else (1, 0)
-    val packedVals = if (slimRight) Nil else valueCols
 
     val rightPacked = right.select(
       rightKeys.zip(keyNames).map { case (r, l) => col(r).as(l) } ++ Seq(
         col(rightTs).cast("timestamp").as("__ts"),
         lit(rightTag).as("__tag"),
-        struct(col(rightTs).cast("timestamp").as("__rts") +: packedVals.map(col): _*).as("__rv"),
+        struct(col(rightTs).cast("timestamp").as("__rts") +: valueCols.map(col): _*).as("__rv"),
         lit(null).cast(structType(left)).as("__lrow")): _*)
 
     val leftPacked = left.select(
       keyNames.map(col) ++ Seq(
         col(leftTs).cast("timestamp").as("__ts"),
         lit(leftTag).as("__tag"),
-        lit(null).cast(rightStructType(right, rightTs, packedVals)).as("__rv"),
+        lit(null).cast(rightStructType(right, rightTs, valueCols)).as("__rv"),
         struct(lCols.map(col): _*).as("__lrow")): _*)
 
     val unioned = rightPacked.unionByName(leftPacked)
@@ -83,9 +72,7 @@ object AsOfJoin {
     val carried = unioned.withColumn("__match", last(col("__rv"), ignoreNulls = true).over(w))
       .where(col("__lrow").isNotNull)
 
-    if (slimRight)
-      finishSlim(carried, right, keyNames, rightKeys, rightTs, lCols, valueCols, tolerance)
-    else finish(carried, lCols, valueCols, tolerance)
+    finish(carried, lCols, valueCols, tolerance)
   }
 
   /** Skew-resistant variant: the window partition key is (keys..., time bucket). */
@@ -167,36 +154,6 @@ object AsOfJoin {
       .where(col("__lrow").isNotNull)
 
     finish(carried, lCols, valueCols, tolerance)
-  }
-
-  /** Slim-mode epilogue: the match carries only `__rts`; the (wide) right values
-    * re-attach via ONE equality join on (keys, matched ts). AQE picks the join
-    * strategy — the right side is shuffled once by its key instead of being sorted
-    * inside every (key) window partition.
-    */
-  private def finishSlim(carried: DataFrame, right: DataFrame, keyNames: Seq[String],
-      rightKeys: Seq[String], rightTs: String, lCols: Seq[String], valueCols: Seq[String],
-      tolerance: Option[Long]): DataFrame = {
-    val inTol: Column = tolerance match {
-      case Some(tol) =>
-        col("__match").isNotNull &&
-          (col("__ts").cast("long") - col("__match").getField("__rts").cast("long")) <= tol
-      case None => col("__match").isNotNull
-    }
-    val matched = carried.select(
-      lCols.map(c => col("__lrow").getField(c).as(c)) :+
-        when(inTol, col("__match").getField("__rts")).as("__mts"): _*)
-    val rightVals = right.select(
-      rightKeys.zip(keyNames).map { case (r, l) => col(r).as(s"__rk_$l") } :+
-        col(rightTs).cast("timestamp").as("__rts") :++ valueCols.map(col): _*)
-    // null-safe key equality: the window partitions NULL keys into one group, so the
-    // default path matches them — the re-attach join must too. The timestamp stays
-    // strict ===: a null __mts means "no match" and must not join (right rows with a
-    // null `rightTs` are meaningless for as-of and unsupported in slim mode).
-    val cond = keyNames.map(k => matched(k) <=> rightVals(s"__rk_$k")).reduce(_ && _) &&
-      matched("__mts") === rightVals("__rts")
-    matched.join(rightVals, cond, "left")
-      .select(lCols.map(col) ++ valueCols.map(col): _*)
   }
 
   private def finish(carried: DataFrame, lCols: Seq[String], valueCols: Seq[String],

@@ -118,12 +118,9 @@ object WebFeatures {
     regexp_replace(body, "(?s)<[^>]*>", "")
   }
 
-  /** Backfill: attach the latest page snapshot at-or-before each event's timestamp.
-    * `slimRight` is off by default — measured slower at this payload width (see
-    * [[AsOfJoin.backward]]); flip it when right rows carry multi-KB payloads.
-    */
+  /** Backfill: attach the latest page snapshot at-or-before each event's timestamp. */
   def backfillEvents(events: DataFrame, pages: DataFrame,
-      bucketSeconds: Option[Long] = None, slimRight: Boolean = false): DataFrame = {
+      bucketSeconds: Option[Long] = None): DataFrame = {
     val valueCols = Seq("warc_ts", "text", "lang")
     val paged = pages.select(col("url"), col("warc_ts"),
       col("text"), col("lang"))
@@ -131,7 +128,7 @@ object WebFeatures {
       case Some(b) => AsOfJoin.backwardBucketed(events, paged, Seq("url"), "ts",
         Seq("url"), "warc_ts", valueCols, b)
       case None => AsOfJoin.backward(events, paged, Seq("url"), "ts",
-        Seq("url"), "warc_ts", valueCols, slimRight = slimRight)
+        Seq("url"), "warc_ts", valueCols)
     }
   }
 }

@@ -12,8 +12,7 @@ import java.sql.Timestamp
   */
 class AsOfPropertySpec extends SparkTestBase {
 
-  // includes null keys: the window path groups NULLs into one partition, and the
-  // slim-right re-attach must match that via null-safe key equality
+  // includes null keys: every strategy groups NULL keys into one partition
   private val keyGen = Gen.frequency(
     (9, Gen.choose(0, 5).map(i => s"k$i")), (1, Gen.const(null: String)))
   private val tsGen = Gen.choose(0L, 2000L) // seconds; collisions on purpose
@@ -54,10 +53,8 @@ class AsOfPropertySpec extends SparkTestBase {
 
       val plain = actual(AsOfJoin.backward(leftDf, rightDf, Seq("k"), "ts",
         Seq("k"), "rts", Seq("payload")))
-      val slim = actual(AsOfJoin.backward(leftDf, rightDf, Seq("k"), "ts",
-        Seq("k"), "rts", Seq("payload"), slimRight = true))
-      val slimTol = actual(AsOfJoin.backward(leftDf, rightDf, Seq("k"), "ts",
-        Seq("k"), "rts", Seq("payload"), tolerance = Some(500L), slimRight = true))
+      val plainTol = actual(AsOfJoin.backward(leftDf, rightDf, Seq("k"), "ts",
+        Seq("k"), "rts", Seq("payload"), tolerance = Some(500L)))
       val strictRes = actual(AsOfJoin.backward(leftDf, rightDf, Seq("k"), "ts",
         Seq("k"), "rts", Seq("payload"), strict = true))
       val bucketed = actual(AsOfJoin.backwardBucketed(leftDf, rightDf, Seq("k"), "ts",
@@ -71,8 +68,7 @@ class AsOfPropertySpec extends SparkTestBase {
       val eTol = expected(strict = false, tolerance = Some(500L))
       Prop.all(
         Prop(plain == e) :| "plain mismatch",
-        Prop(slim == e) :| "slim-right mismatch",
-        Prop(slimTol == eTol) :| "slim-right tolerance mismatch",
+        Prop(plainTol == eTol) :| "plain tolerance mismatch",
         Prop(strictRes == eStrict) :| "strict mismatch",
         Prop(bucketed == e) :| "bucketed mismatch",
         Prop(bucketedStrict == eStrict) :| "bucketed-strict mismatch",

@@ -288,20 +288,26 @@ class DataOpsSpec extends SparkTestBase {
     assert(r.getLong(0) == r.getLong(1))
   }
 
-  test("multimodal plumbing: decode/resize/frame-sample stubs over typed Datasets") {
-    val media = Multimodal.syntheticMedia(docs.where(col("doc_id") < 300))
-    val decoded = Multimodal.decodeImages(media)
-    val images = decoded.collect()
-    assert(images.nonEmpty)
-    assert(images.forall(i => i.width >= 64 && i.height >= 64 && i.channels == 3 &&
-      i.meanLuma >= 0 && i.meanLuma <= 1))
-    val resized = Multimodal.resizeImages(decoded, 32, 32).collect()
-    assert(resized.length == images.length && resized.forall(_.thumbnail.nonEmpty))
-    val frames = Multimodal.sampleVideoFrames(media).collect()
-    assert(frames.nonEmpty && frames.forall(f => f.frames.size == f.frameIndices.size))
-    // determinism: same input → same decode
-    val again = Multimodal.decodeImages(media).collect()
-    assert(images.sortBy(_.doc_id).toSeq == again.sortBy(_.doc_id).toSeq)
+  test("multimodal plumbing: undecodable and non-image media yield no rows") {
+    import spark.implicits._
+    val img = new java.awt.image.BufferedImage(6, 4, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", bos)
+    val png = bos.toByteArray
+    // crawled-media shape: document text bytes tagged as every kind, plus one real PNG
+    // tagged image (decodes) and the same PNG tagged video (not an image row)
+    val text = docs.where(col("doc_id") < 300).select(col("doc_id"),
+        element_at(array(lit("image"), lit("audio"), lit("video")),
+          (pmod(xxhash64(col("doc_id")), lit(3)) + 1).cast("int")).as("kind"),
+        encode(col("text"), "UTF-8").as("bytes"))
+      .as[Multimodal.MediaRow]
+    assert(text.filter(_.kind == "image").count() > 0)
+    val media = text.union(spark.createDataset(Seq(
+      Multimodal.MediaRow(-1L, "image", png), Multimodal.MediaRow(-2L, "video", png))))
+    val decoded = Multimodal.decodeImages(media).collect()
+    assert(decoded.map(d => (d.doc_id, d.width, d.height)).toSeq == Seq((-1L, 6, 4)))
+    val thumbs = Multimodal.resizeImageBytes(media, 3, 2).collect()
+    assert(thumbs.map(t => (t.doc_id, t.width, t.height)).toSeq == Seq((-1L, 3, 2)))
   }
 
   test("multimodal real decode: generated PNGs yield exact dimensions and luma") {
@@ -329,9 +335,9 @@ class DataOpsSpec extends SparkTestBase {
       val back = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(t.thumbnail))
       assert(back.getWidth == 4 && back.getHeight == 4)
     }
-    // undecodable payloads (kind=image, garbage bytes) fall back to the stub, not a crash
+    // undecodable payloads (kind=image, garbage bytes) are dropped, not faked or a crash
     val dirty = spark.createDataset(Seq(Multimodal.MediaRow(9L, "image", Array[Byte](1, 2, 3))))
-    assert(Multimodal.decodeImages(dirty).collect().head.doc_id == 9L)
+    assert(Multimodal.decodeImages(dirty).collect().isEmpty)
   }
 
   test("multimodal decode fixpoint: re-encode → re-decode stats are stable") {

@@ -90,4 +90,19 @@ class MiscSpec extends SparkTestBase {
       RollingWrapper(CountTransformer(), ColumnSpec.numeric("NUMERIC_FEATURE"), "2d")
     }
   }
+
+  test("the test session carries every GraftSession conf value") {
+    GraftSession.conf.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
+  }
+
+  test("README coverage matrix names every gate query") {
+    val readme = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("README.md")), "UTF-8")
+    val start = readme.indexOf("## SURVEY §2 coverage matrix")
+    assert(start >= 0, "coverage matrix heading not found")
+    val matrix = readme.substring(start, readme.indexOf("\n## ", start + 1))
+    val missing = SparkEntry.queries.keys.toSeq.sorted
+      .filterNot(k => s"(?<!\\w)$k(?!\\w)".r.findFirstIn(matrix).isDefined)
+    assert(missing.isEmpty, s"gates missing from the README coverage matrix: $missing")
+  }
 }

@@ -143,22 +143,6 @@ class PlanSpec extends SparkTestBase {
     assert(exchanges <= 1, s"as-of should shuffle once on the key, got $exchanges exchanges")
   }
 
-  test("slim-right as-of keeps wide payloads out of the union sort") {
-    val pages = Pages.generate(spark, 1000, seed = 3L, numPartitions = 4)
-    val events = Pages.events(spark, pages)
-    val df = WebFeatures.backfillEvents(events, pages, slimRight = true)
-    val asofWindows = df.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.child.output.exists(_.name == "__lrow") => w
-    }
-    assert(asofWindows.nonEmpty, "expected the as-of union window in the plan")
-    asofWindows.foreach { w =>
-      val carried = w.child.output.map(_.name)
-      assert(!carried.contains("text") && !carried.contains("lang"),
-        s"union sort carries page payload: $carried")
-    }
-  }
-
   test("bucketed+sorted storage makes the per-key window family exchange-free") {
     // the 100-TB layout recipe: persist the page table bucketed by url (Iceberg
     // sorted-partition analogue) and the whole per-url window family needs NO shuffle
