@@ -14,15 +14,7 @@ import org.apache.spark.sql.functions._
   * outputs are non-trivial.
   */
 object DataQueries {
-
-  private def r6(cRaw: org.apache.spark.sql.Column) = {
-    val c = cRaw.cast("double")
-    when(isnan(c) || c === Double.PositiveInfinity || c === Double.NegativeInfinity, c)
-      .otherwise(floor(c * 1e6 + 0.5).cast("double") / 1e6)
-  }
-  private def r6sql(e: String): String =
-    s"CASE WHEN isnan(($e)::DOUBLE) OR NOT isfinite(($e)::DOUBLE) THEN ($e)::DOUBLE " +
-      s"ELSE floor(($e)::DOUBLE * 1000000 + 0.5) / 1000000 END"
+  import Queries.{r6, r6sql}
 
   /** documents ∪ exact copies (ids +100000) ∪ perturbed copies (ids +200000). */
   private def docsWithDups(spark: SparkSession, dir: String): DataFrame = {
@@ -550,9 +542,10 @@ object DataQueries {
         "bullet_line_frac", "ellipsis_line_frac").map(n => s"${r6sql(n)} AS $n").mkString(", ")} " +
       "FROM s ORDER BY doc_id"
 
-  /** Benchmark decontamination, substring path: snippets are chars 21–60 of every
-    * 50th document (planted from the corpus itself, so matches are guaranteed and
-    * the same text appearing in other documents flags them too).
+  /** Benchmark decontamination, substring path (one Aho–Corasick pass per
+    * document): snippets are chars 21–60 of every 50th document (planted from the
+    * corpus itself, so matches are guaranteed and the same text appearing in other
+    * documents flags them too).
     */
   private val qDecontam: (SparkSession, String) => DataFrame = (spark, dir) => {
     val d = spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
@@ -567,16 +560,15 @@ object DataQueries {
       "SELECT d.doc_id, (EXISTS (SELECT 1 FROM s WHERE length(s.snip) > 0 " +
       "AND contains(d.text, s.snip)))::INT AS contaminated FROM documents d ORDER BY doc_id"
 
-  /** Decontamination, token-8-gram path (the PRODUCTION compiled sorted-set probe —
-    * per-document cost log-ish in the benchmark size): the engine compares xxhash64
-    * of the grams (only hashes ship); the oracle compares the gram STRINGS — equal
-    * outputs certify the gram extraction AND that hashing introduced no false
-    * positives on this corpus. Lazy/compiled parity is ScalaTest-pinned.
+  /** Decontamination, token-8-gram path (the distributed semi-join
+    * [[Decontaminate.flagNgramOverlap]]): the engine compares xxhash64 of the grams;
+    * the oracle compares the gram STRINGS — equal outputs certify the gram
+    * extraction AND that hashing introduced no false positives on this corpus.
     */
   private val qDecontamNgram: (SparkSession, String) => DataFrame = (spark, dir) => {
     val d = spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
     val bench = d.where(col("doc_id") % 50 === 7)
-    Decontaminate.flagNgramOverlapCompiled(d, "text", bench, "text", n = 8)
+    Decontaminate.flagNgramOverlap(d, "doc_id", "text", bench, "text", n = 8)
       .select(col("doc_id"), col("contaminated").cast("int").as("contaminated"))
       .orderBy("doc_id")
   }
@@ -589,16 +581,15 @@ object DataQueries {
       "SELECT t.doc_id, (EXISTS (SELECT 1 FROM dg JOIN bg ON dg.g = bg.g " +
       "WHERE dg.doc_id = t.doc_id))::INT AS contaminated FROM tok t ORDER BY doc_id"
 
-  /** The distributed semi-join decontamination path — the formulation for benchmark
-    * gram sets beyond collect/broadcast range — over a different benchmark slice
-    * than q_decontam_ngram, so the two paths gate independently. The oracle joins
-    * gram STRINGS; the engine joins xxhash64 hashes (certified no-false-positive on
-    * the gate corpus by the comparison itself).
+  /** The same n-gram semi-join as q_decontam_ngram over a different benchmark slice
+    * (`doc_id % 50 = 23`), so the two certify independently. The oracle joins gram
+    * STRINGS; the engine joins xxhash64 hashes (certified no-false-positive on the
+    * gate corpus by the comparison itself).
     */
   private val qDecontamJoin: (SparkSession, String) => DataFrame = (spark, dir) => {
     val d = spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
     val bench = d.where(col("doc_id") % 50 === 23)
-    Decontaminate.flagNgramOverlapJoin(d, "doc_id", "text", bench, "text", n = 8)
+    Decontaminate.flagNgramOverlap(d, "doc_id", "text", bench, "text", n = 8)
       .select(col("doc_id"), col("contaminated").cast("int").as("contaminated"))
       .orderBy("doc_id")
   }

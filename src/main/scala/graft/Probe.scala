@@ -157,34 +157,20 @@ object Probe {
         "lines_per_sec" -> (docs * 30 / secs).toLong)
     }),
     // n-gram decontamination against doc-id slices of the corpus at three benchmark
-    // sizes (so a fixed fraction is really contaminated); size = docs. The compiled
-    // sorted-set probe should stay near-flat as the gram set grows; the lazy
-    // per-row scan is linear in it.
+    // sizes (so a fixed fraction is really contaminated); size = docs. The semi-join
+    // should stay near-flat as the gram set grows.
     "decontam" -> Workload("100000", (spark, size, _) => {
       val n = size.toLong
       val docs = wordBag(spark, n)
-      def flagged(df: DataFrame): Long = df.where(col("contaminated")).count()
       Seq("docs" -> n, "points" -> Seq(300L, 30L, 3L).map { m =>
         // ~33 8-grams per 40-token doc: modulus m yields ≈ n/m · 33 distinct grams
         val bench = docs.where(col("doc_id") % m === 0)
         val grams = bench.select(explode(Decontaminate.tokenNgramHashes(col("text"), 8)))
           .distinct().count()
-        val (cFlagged, compiled) = bestOf(s"decontam compiled m=$m")(flagged(
-          Decontaminate.flagNgramOverlapCompiled(docs, "text", bench, "text", n = 8)))
-        // the collect- and broadcast-free semi-join, for gram sets past the compiled
-        // path's driver-collect range
-        val (jFlagged, join) = bestOf(s"decontam join m=$m")(flagged(
-          Decontaminate.flagNgramOverlapJoin(docs, "doc_id", "text", bench, "text", n = 8)))
-        require(jFlagged == cFlagged, s"join/compiled disagree at m=$m: $jFlagged vs $cFlagged")
-        // past 2·10⁵ grams the lazy scan costs ~10¹¹ probe steps: skipped
-        val lazySecs = Option.when(grams <= 200000) {
-          val (f, secs) = bestOf(s"decontam lazy m=$m")(flagged(
-            Decontaminate.flagNgramOverlap(docs, "text", bench, "text", n = 8)))
-          require(f == cFlagged, s"lazy/compiled disagree at m=$m: $f vs $cFlagged")
-          secs
-        }
-        Obj("modulus" -> m, "grams" -> grams, "compiled_secs" -> compiled,
-          "join_secs" -> join, "lazy_secs" -> lazySecs, "flagged" -> cFlagged)
+        val (flagged, secs) = bestOf(s"decontam m=$m")(
+          Decontaminate.flagNgramOverlap(docs, "doc_id", "text", bench, "text", n = 8)
+            .where(col("contaminated")).count())
+        Obj("modulus" -> m, "grams" -> grams, "secs" -> secs, "flagged" -> flagged)
       })
     }),
     // trigram LM quality screen; size = docs. Training is paid once per corpus and

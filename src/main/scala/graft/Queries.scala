@@ -33,14 +33,14 @@ object Queries {
   /** Floor-based 6-dp rounding that Spark and DuckDB compute bit-identically. NaN/Inf
     * pass through. The DuckDB twin is [[r6sql]].
     */
-  private def r6(cRaw: org.apache.spark.sql.Column) = {
+  private[graft] def r6(cRaw: org.apache.spark.sql.Column) = {
     val c = cRaw.cast("double")
     when(isnan(c) || c === Double.PositiveInfinity || c === Double.NegativeInfinity, c)
       .otherwise(floor(c * 1e6 + 0.5).cast("double") / 1e6)
   }
 
   /** `r6sql("x")` — DuckDB expression identical to [[r6]] for column/simple exprs. */
-  private def r6sql(e: String): String =
+  private[graft] def r6sql(e: String): String =
     s"CASE WHEN isnan(($e)::DOUBLE) OR NOT isfinite(($e)::DOUBLE) THEN ($e)::DOUBLE " +
       s"ELSE floor(($e)::DOUBLE * 1000000 + 0.5) / 1000000 END"
 

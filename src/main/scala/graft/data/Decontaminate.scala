@@ -3,41 +3,23 @@ package graft.data
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Benchmark decontamination: flag (or drop) training documents that contain
-  * evaluation-set content, so test questions never leak into the training corpus.
+/** Benchmark decontamination: flag training documents that contain evaluation-set
+  * content, so test questions never leak into the training corpus.
   *
-  * Two public, complementary paths:
+  * One path per semantic:
   *
-  *  - [[flagContains]] — exact SUBSTRING match against a set of benchmark snippets.
-  *    The snippet set is aggregated to a single array row and broadcast; each
-  *    document is checked in one codegen'd projection (`exists(snips, contains)`).
-  *    No shuffle of the corpus, no explode — the plan is scan → project — but the
-  *    per-row CPU is O(#snippets × |text|): each snippet re-scans the document.
-  *    Fully lazy (no driver action), right for interactive use and small snippet
-  *    sets. For a real eval suite (10⁴–10⁶ snippets) against a 100-TB corpus use
-  *    [[flagContainsCompiled]], which matches ALL snippets in one O(|text|)
-  *    Aho–Corasick pass per document.
+  *  - [[flagContains]] — exact SUBSTRING match against a set of benchmark snippets,
+  *    all snippets matched in one O(|text|) Aho–Corasick pass per document.
   *
   *  - [[flagNgramOverlap]] — token n-gram HASH overlap (the published-method shape:
   *    mark a document contaminated if any of its token n-grams appears in the
-  *    benchmark; n=8..13 typical). Only 64-bit hashes of the benchmark grams are
-  *    broadcast — independent of snippet text size — and the document side computes
-  *    its gram hashes inline in the same projection. Robust to the snippet not
-  *    being a verbatim substring (whitespace/punctuation differences collapse at
-  *    tokenization), at the price of token-boundary granularity. Fully lazy, but
-  *    the `arrays_overlap` probe scans the gram set per row — for a real eval
-  *    suite use [[flagNgramOverlapCompiled]], whose sorted-set binary search is
-  *    O(doc grams · log set) per document.
+  *    benchmark; n=8..13 typical), as a distributed semi-join with no driver action
+  *    and no broadcast. Robust to the snippet not being a verbatim substring
+  *    (whitespace/punctuation differences collapse at tokenization), at the price
+  *    of token-boundary granularity. [[ngramOverlapFraction]] is its graded twin.
   *
   * Both flags are null-safe: a null/empty benchmark flags nothing; a null document
   * text is flagged false (it cannot contain anything).
-  *
-  * Scale note: the lazy paths broadcast ONE aggregated row; the compiled paths
-  * ship one shared automaton / sorted long[] per executor (fine to ~10⁷ grams).
-  * Beyond that — a multi-benchmark suite at 10⁸–10⁹ grams — use
-  * [[flagNgramOverlapJoin]]: a distributed explode + shuffle semi-join with no
-  * driver action and no broadcast, trading one corpus-side explode for the
-  * per-row probe.
   */
 object Decontaminate {
 
@@ -57,28 +39,14 @@ object Decontaminate {
 
   /** Add boolean `outCol`: does the document contain ANY benchmark snippet as an
     * exact substring?
+    *
+    * Collects the distinct snippet set to the driver ONCE (an EAGER action at
+    * plan-assembly time — the same documented contract as `Ann.assign`'s centroid
+    * collect and `PrefixAgg`'s quantile bounds), compiles it to one Aho–Corasick
+    * automaton shipped once per executor, and scans each document in a single
+    * O(|text|) pass regardless of snippet count.
     */
   def flagContains(docs: DataFrame, textCol: String, bench: DataFrame,
-      snippetCol: String, outCol: String = "contaminated"): DataFrame = {
-    // aggregate with no groupBy: exactly one row even for an empty benchmark, so the
-    // broadcast cross join is always 1:1 with the corpus
-    val snips = bench
-      .where(col(snippetCol).isNotNull && length(col(snippetCol)) > 0)
-      .agg(collect_set(col(snippetCol)).as("__graft_snips"))
-    docs.crossJoin(broadcast(snips))
-      .withColumn(outCol,
-        coalesce(exists(col("__graft_snips"), s => contains(col(textCol), s)), lit(false)))
-      .drop("__graft_snips")
-  }
-
-  /** Substring path compiled to an Aho–Corasick automaton: collects the distinct
-    * snippet set to the driver ONCE (an EAGER action at plan-assembly time — the
-    * same documented contract as `Ann.assign`'s centroid collect and `PrefixAgg`'s
-    * quantile bounds) and scans each document in a single O(|text|) pass regardless
-    * of snippet count. Identical semantics to [[flagContains]] (exact substring,
-    * null text → false); the production substring path for large benchmarks.
-    */
-  def flagContainsCompiled(docs: DataFrame, textCol: String, bench: DataFrame,
       snippetCol: String, outCol: String = "contaminated"): DataFrame = {
     val snips = bench
       .where(col(snippetCol).isNotNull && length(col(snippetCol)) > 0)
@@ -90,63 +58,23 @@ object Decontaminate {
 
   /** Add boolean `outCol`: does any token `n`-gram of the document appear among the
     * benchmark texts' token `n`-grams?
-    */
-  def flagNgramOverlap(docs: DataFrame, textCol: String, bench: DataFrame,
-      benchTextCol: String, n: Int = 8, outCol: String = "contaminated"): DataFrame = {
-    val grams = bench
-      .select(explode(tokenNgramHashes(col(benchTextCol), n)).as("__g"))
-      .agg(collect_set(col("__g")).as("__graft_grams"))
-    docs.crossJoin(broadcast(grams))
-      .withColumn(outCol,
-        coalesce(arrays_overlap(tokenNgramHashes(col(textCol), n), col("__graft_grams")),
-          lit(false)))
-      .drop("__graft_grams")
-  }
-
-  /** N-gram path compiled to a sorted-hash probe: collects the DISTINCT benchmark
-    * gram hashes to the driver ONCE (same eager plan-assembly contract as
-    * [[flagContainsCompiled]] — hashes only, 8 bytes per gram, so 10⁶ grams ≈ 8 MB)
-    * and tests each document's grams by binary search against one shared sorted
-    * long[] per executor. Per-document cost is O(grams · log set) — log-ish in the
-    * benchmark size — where [[flagNgramOverlap]]'s `arrays_overlap` scans the
-    * broadcast gram array per row. Identical semantics; the production n-gram path
-    * for real eval suites (10⁵–10⁶ grams) against a 100-TB corpus.
-    */
-  def flagNgramOverlapCompiled(docs: DataFrame, textCol: String, bench: DataFrame,
-      benchTextCol: String, n: Int = 8, outCol: String = "contaminated"): DataFrame = {
-    val grams: Array[Long] = bench
-      .select(explode(tokenNgramHashes(col(benchTextCol), n)).as("__g"))
-      .distinct().collect().map(_.getLong(0))
-    docs.withColumn(outCol,
-      coalesce(graft.functions.hashfns.anyInSortedLongs(
-        tokenNgramHashes(col(textCol), n), grams), lit(false)))
-  }
-
-  /** N-gram path as a DISTRIBUTED SEMI-JOIN — the scale escape hatch for benchmark
-    * gram sets too large to collect or broadcast at all (a multi-benchmark suite at
-    * 10⁸–10⁹ grams ≈ GBs of hashes; the compiled probe's driver collect and
-    * per-executor array stop being reasonable around 10⁷). No driver action, no
-    * broadcast: the corpus explodes to `(doc id, gram hash)` pairs (within-doc
-    * duplicates collapsed first — `tokenNgramHashes` output is array_distinct'd
-    * here — so a repetitive page costs its distinct grams only), left-semi-joins
-    * the benchmark gram table on the hash (both sides shuffle on the gram key;
-    * AQE's skew-join split absorbs a corpus-hot phrase gram), and the surviving
-    * contaminated doc ids — a small set by construction — re-attach with one
-    * left join that AQE turns into a broadcast in practice.
     *
-    * Identical flag semantics to [[flagNgramOverlap]]/[[flagNgramOverlapCompiled]]
-    * (any-gram-overlap, null text → false), pinned by the q_decontam_join gate and
-    * a three-path parity ScalaTest. Requires an id column to carry the flag back;
-    * rows with a NULL id cannot anchor the join and are flagged false — give docs
-    * real ids before decontaminating (house policy of [[Dedup.dedupLines]]).
+    * A distributed semi-join with no driver action and no broadcast, so the
+    * benchmark gram set may be any size: the corpus explodes to distinct
+    * `(doc id, gram hash)` pairs (a repetitive page costs its distinct grams only),
+    * left-semi-joins the distinct benchmark grams on the hash (both sides shuffle
+    * on the gram key; AQE's skew-join split absorbs a corpus-hot phrase gram), and
+    * the surviving contaminated doc ids — a small set by construction — re-attach
+    * with one left join that AQE turns into a broadcast in practice.
+    *
+    * The id column carries the flag back: a row with a NULL id cannot anchor the
+    * join and is flagged false, whatever its text — give docs real ids before
+    * decontaminating (house policy of [[Dedup.dedupLines]]).
     */
-  def flagNgramOverlapJoin(docs: DataFrame, idCol: String, textCol: String,
+  def flagNgramOverlap(docs: DataFrame, idCol: String, textCol: String,
       bench: DataFrame, benchTextCol: String, n: Int = 8,
       outCol: String = "contaminated"): DataFrame = {
-    val grams = bench
-      .select(explode(tokenNgramHashes(col(benchTextCol), n)).as("__g")).distinct()
-    val docGrams = docs
-      .select(col(idCol), explode(array_distinct(tokenNgramHashes(col(textCol), n))).as("__g"))
+    val (docGrams, grams) = gramPairs(docs, idCol, textCol, bench, benchTextCol, n)
     val hits = docGrams.join(grams, Seq("__g"), "left_semi")
       .select(col(idCol)).distinct()
     docs.join(hits.withColumn("__graft_hit", lit(true)), Seq(idCol), "left")
@@ -156,24 +84,20 @@ object Decontaminate {
 
   /** Add double `outCol`: the FRACTION of the document's distinct token
     * `n`-gram hashes that appear in the benchmark gram set — the graded
-    * complement of [[flagNgramOverlapJoin]]'s boolean, for threshold policies
+    * complement of [[flagNgramOverlap]]'s boolean, for threshold policies
     * ("drop above 10% overlap, flag above 1%") and contamination dashboards.
     * A document with no `n`-grams at all (fewer than `n` tokens, or a null
     * text/id) can contain nothing and scores 0.0.
     *
-    * Scale shape (same family as the join path — no driver action, no
-    * broadcast): corpus explodes ONCE to distinct `(id, gram-hash)` pairs, one
-    * shuffle left join against the distinct benchmark grams marks hits (AQE
-    * skew-splits corpus-hot grams), one map-side-combinable groupBy reduces to
-    * `(id, total, hits)`, and one small join re-attaches the fraction.
+    * Same shape as [[flagNgramOverlap]]: one shuffle left join of the distinct
+    * `(id, gram-hash)` pairs against the distinct benchmark grams marks hits, one
+    * map-side-combinable groupBy reduces to `(id, total, hits)`, and one small
+    * join re-attaches the fraction.
     */
   def ngramOverlapFraction(docs: DataFrame, idCol: String, textCol: String,
       bench: DataFrame, benchTextCol: String, n: Int = 8,
       outCol: String = "overlap_frac"): DataFrame = {
-    val grams = bench
-      .select(explode(tokenNgramHashes(col(benchTextCol), n)).as("__g")).distinct()
-    val docGrams = docs
-      .select(col(idCol), explode(array_distinct(tokenNgramHashes(col(textCol), n))).as("__g"))
+    val (docGrams, grams) = gramPairs(docs, idCol, textCol, bench, benchTextCol, n)
     val stats = docGrams
       .join(grams.withColumn("__m", lit(1)), Seq("__g"), "left")
       .groupBy(col(idCol))
@@ -185,17 +109,15 @@ object Decontaminate {
       .drop("__tot", "__hit")
   }
 
-  /** Drop contaminated documents (substring path). */
-  def removeContains(docs: DataFrame, textCol: String, bench: DataFrame,
-      snippetCol: String): DataFrame = {
-    val out = "__graft_contaminated"
-    flagContains(docs, textCol, bench, snippetCol, out).where(!col(out)).drop(out)
-  }
-
-  /** Drop contaminated documents (n-gram path). */
-  def removeNgramOverlap(docs: DataFrame, textCol: String, bench: DataFrame,
-      benchTextCol: String, n: Int = 8): DataFrame = {
-    val out = "__graft_contaminated"
-    flagNgramOverlap(docs, textCol, bench, benchTextCol, n, out).where(!col(out)).drop(out)
+  /** The corpus's distinct `(id, __g)` gram-hash pairs and the benchmark's
+    * distinct `__g` gram hashes.
+    */
+  private def gramPairs(docs: DataFrame, idCol: String, textCol: String,
+      bench: DataFrame, benchTextCol: String, n: Int): (DataFrame, DataFrame) = {
+    val docGrams = docs
+      .select(col(idCol), explode(array_distinct(tokenNgramHashes(col(textCol), n))).as("__g"))
+    val grams = bench
+      .select(explode(tokenNgramHashes(col(benchTextCol), n)).as("__g")).distinct()
+    (docGrams, grams)
   }
 }

@@ -445,59 +445,6 @@ case class RollingFingerprint(child: Expression) extends StringLongExpression {
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-/** The benchmark gram set for [[AnyInSortedLongs]]: a sorted primitive long[]
-  * shipped ONCE to executors as a codegen reference object (the `MultiContains`
-  * automaton mechanism). 10⁶ grams ≈ 8 MB — broadcast-range by construction.
-  */
-final class SortedLongSet(values0: Array[Long]) extends Serializable {
-  private val values: Array[Long] = {
-    val v = values0.clone(); java.util.Arrays.sort(v); v
-  }
-  def size: Int = values.length
-  /** Any element of the long array present in the set? O(|arr| · log |set|) —
-    * no per-row linear scan of the set, unlike `arrays_overlap` against a
-    * broadcast array column. Null elements never match.
-    */
-  def anyIn(arr: org.apache.spark.sql.catalyst.util.ArrayData): Boolean = {
-    if (values.length == 0) return false
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      if (!arr.isNullAt(i) &&
-        java.util.Arrays.binarySearch(values, arr.getLong(i)) >= 0) return true
-      i += 1
-    }
-    false
-  }
-}
-
-/** Boolean: does ANY element of the child `array<bigint>` appear in `hashes`?
-  * The production probe for n-gram benchmark decontamination at real eval-suite
-  * sizes (10⁵–10⁶ grams): per-document cost is O(grams · log set) against a
-  * shared sorted long[], where the `arrays_overlap`-on-broadcast formulation
-  * scans the gram set per row. Null input array → null (coalesced by callers).
-  */
-case class AnyInSortedLongs(child: Expression, hashes: Seq[Long])
-    extends UnaryExpression {
-  // Seq, not Array: case-class equality on an Array is reference-based, which
-  // would defeat semanticEquals/subexpression-elimination between structurally
-  // identical probes (same fix shape as MultiContains' Seq[String])
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  @transient private lazy val set = new SortedLongSet(hashes.toArray)
-
-  override def nullSafeEval(v: Any): Any =
-    set.anyIn(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("graftGramSet", set, classOf[SortedLongSet].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.anyIn($c)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 object hashfns {
   def simhash64(c: Column): Column = ColumnBridge.column(SimHash64(ColumnBridge.expression(c)))
   def minhashSignature(c: Column, k: Int, numHashes: Int): Column =
@@ -520,10 +467,4 @@ object hashfns {
     ColumnBridge.column(SimhashBucketKeys(ColumnBridge.expression(sim), width, combos))
   def srpSketchBands(c: Column, bits: Int, bands: Int): Column =
     ColumnBridge.column(SrpSketchBands(ColumnBridge.expression(c), bits, bands))
-  /** True iff any element of the long-array column is in `hashes` (sorted-set
-    * binary search, one shared copy per executor).
-    */
-  def anyInSortedLongs(arr: Column, hashes: Array[Long]): Column =
-    ColumnBridge.column(AnyInSortedLongs(ColumnBridge.expression(arr),
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(hashes)))
 }

@@ -459,7 +459,7 @@ case class MultiContains(child: Expression, patterns: Seq[String]) extends Unary
 /** A trained character-trigram language model: packed code-point-trigram keys
   * (3 × 21 bits in one long, sorted) with their smoothed log-probabilities, plus
   * the shared unseen-trigram log-probability. Ships ONCE per executor as a codegen
-  * reference object (the `MultiContains`/`SortedLongSet` mechanism); lookup is a
+  * reference object (the `MultiContains` mechanism); lookup is a
   * binary search, scoring one document is a single code-point pass.
   */
 final class TrigramLmModel(
@@ -601,13 +601,14 @@ case class TrigramLogProb(child: Expression, model: TrigramLmModel)
   * a crawl shard carries a handful of distinct charsets across millions of records.
   */
 object CharsetKernels {
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, java.nio.charset.Charset]()
+  private[graft] val cache =
+    new java.util.concurrent.ConcurrentHashMap[String, java.nio.charset.Charset]()
   // the names are attacker-controlled (per-row HTTP headers): normalize the key so
   // case/whitespace variants of one charset share an entry, and BOUND the map —
   // a shard with millions of distinct junk names must not grow executor memory
-  // without limit (r6 ADVICE). A flood simply drops the handful of real entries
-  // and re-resolves them; charset lookup is case-insensitive, so the lowercased
-  // key resolves identically.
+  // without limit (r6 ADVICE). Once full, new names resolve without being cached,
+  // so a flood never evicts the real charsets cached before it; charset lookup is
+  // case-insensitive, so the lowercased key resolves identically.
   private val MaxCacheEntries = 4096
   def resolve(name: String): java.nio.charset.Charset = {
     if (name == null) return java.nio.charset.StandardCharsets.UTF_8
@@ -619,8 +620,7 @@ object CharsetKernels {
       try java.nio.charset.Charset.forName(key)
       catch { case _: IllegalArgumentException | _: java.nio.charset.UnsupportedCharsetException =>
         java.nio.charset.StandardCharsets.UTF_8 }
-    if (cache.size() >= MaxCacheEntries) cache.clear()
-    cache.put(key, cs)
+    if (cache.size() < MaxCacheEntries) cache.put(key, cs)
     cs
   }
 

@@ -52,17 +52,12 @@ object StreamingFeatures {
     *
     * Per micro-batch, each url's events are buffered and sorted in memory
     * (`toSeq.sortBy`) — bounded by one key's rows in one micro-batch, not by the
-    * stream; a hot url in a huge batch is the only spike. With
-    * `perKeyOrdered = true` (the documented kafka-partitioned-by-url setup, where
-    * each key's rows arrive in event-time order) the group is instead STREAMED:
-    * one row in, one feature out, state threaded incrementally — no per-group
-    * materialization at all, so even a hot url in a huge trigger is O(1) memory.
-    * Laziness is test-pinned (consuming k outputs consumes exactly k inputs).
+    * stream; a hot url in a huge batch is the only spike. Sorting makes the result
+    * correct for any arrival order.
     */
   def features(pages: Dataset[PageEvent], sessionGapSeconds: Long,
       watermarkDelay: String = "30 days",
-      stateTtlSeconds: Long = 365L * 86400,
-      perKeyOrdered: Boolean = false): Dataset[PageFeature] = {
+      stateTtlSeconds: Long = 365L * 86400): Dataset[PageFeature] = {
     require(stateTtlSeconds > 0, s"stateTtlSeconds must be > 0, got $stateTtlSeconds")
     val spark = pages.sparkSession
     import spark.implicits._
@@ -76,46 +71,30 @@ object StreamingFeatures {
           Iterator.empty
         } else {
           val s0 = state.getOption.getOrElse(UrlState(0L, Long.MinValue, -1L, 0L, 0.0))
+          // the INPUT is already materialized for the sort, so materializing the
+          // (same-cardinality) output and committing EAGERLY costs the same order of
+          // memory and makes the state update unconditional — immune to a
+          // downstream that stops consuming
+          val ordered = events.toSeq.sortBy(_.warc_ts.getTime).iterator
+          var s = s0
+          val out = foldFeatures(url, ordered, s0, sessionGapSeconds)
+            .map { case (f, st) => s = st; f }.toVector
+          state.update(s)
           // Expire once the watermark passes lastTs + ttl; clamped above the current
           // watermark because Spark rejects timeouts at-or-before it (a key whose
           // whole TTL is already behind the watermark times out on the next batch).
           // Batch execution has no watermark — timeouts never fire there anyway.
-          def commit(s: UrlState): Unit = {
-            state.update(s)
-            if (streaming)
-              state.setTimeoutTimestamp(math.max(
-                s.lastTsSeconds * 1000L + stateTtlSeconds * 1000L,
-                state.getCurrentWatermarkMs() + 1L))
-          }
-          if (perKeyOrdered) {
-            // streamed path: state commit rides output-iterator exhaustion (Spark
-            // persists GroupState once the iterator is drained). CONTRACT: the
-            // sink must consume every group fully — Spark's stateful exec does; an
-            // operator that abandons a group's iterator mid-stream (a take() in
-            // foreachBatch) would skip this group's state update and TTL arm.
-            var s = s0
-            val out = foldFeatures(url, events, s0, sessionGapSeconds)
-              .map { case (f, st) => s = st; f }
-            out ++ { commit(s); Iterator.empty }
-          } else {
-            // buffered path: the INPUT is already materialized for the sort, so
-            // materializing the (same-cardinality) output and committing EAGERLY
-            // costs the same order of memory and makes the state update
-            // unconditional — immune to a downstream that stops consuming
-            val ordered = events.toSeq.sortBy(_.warc_ts.getTime).iterator
-            var s = s0
-            val out = foldFeatures(url, ordered, s0, sessionGapSeconds)
-              .map { case (f, st) => s = st; f }.toVector
-            commit(s)
-            out.iterator
-          }
+          if (streaming)
+            state.setTimeoutTimestamp(math.max(
+              s.lastTsSeconds * 1000L + stateTtlSeconds * 1000L,
+              state.getCurrentWatermarkMs() + 1L))
+          out.iterator
         }
     }
   }
 
-  /** The per-url feature fold as a LAZY one-in-one-out iterator: element k of the
-    * output needs exactly the first k input events (pinned by a counting-iterator
-    * test), so the `perKeyOrdered` streaming path never materializes a group.
+  /** The per-url feature fold over event-time-ordered events, threading the state:
+    * one output per input, lazily (element k needs exactly the first k events).
     */
   private[graft] def foldFeatures(url: String, events: Iterator[PageEvent],
       s0: UrlState, sessionGapSeconds: Long): Iterator[(PageFeature, UrlState)] = {
@@ -164,15 +143,11 @@ object StreamingFeatures {
     * for that url backfills NULL — exactly the cold-start contract, and the honest
     * answer at corpus scale (holding every url's last snapshot forever is the
     * unbounded-state bug this TTL exists to kill). The per-batch per-key
-    * buffer/sort note on [[features]] applies here too, including the
-    * `perKeyOrdered = true` streaming path — there the page-before-event tie at
-    * equal timestamps becomes part of the caller's arrival-order contract (the
-    * upstream log must interleave a snapshot ahead of the events it backfills).
+    * buffer/sort note on [[features]] applies here too.
     */
   def backfill(timeline: Dataset[TimelineRow],
       watermarkDelay: String = "30 days",
-      stateTtlSeconds: Long = 365L * 86400,
-      perKeyOrdered: Boolean = false): Dataset[BackfilledEvent] = {
+      stateTtlSeconds: Long = 365L * 86400): Dataset[BackfilledEvent] = {
     require(stateTtlSeconds > 0, s"stateTtlSeconds must be > 0, got $stateTtlSeconds")
     val spark = timeline.sparkSession
     import spark.implicits._
@@ -187,34 +162,22 @@ object StreamingFeatures {
         } else {
           var s = state.getOption
           var lastMs = Long.MinValue
-          // TTL anchored at the key's latest TIMELINE row (page or event): any
-          // activity keeps the snapshot alive for another TTL window
-          def commit(): Unit = {
-            s.foreach(state.update)
-            if (streaming && state.exists)
-              state.setTimeoutTimestamp(math.max(
-                lastMs + stateTtlSeconds * 1000L,
-                state.getCurrentWatermarkMs() + 1L))
-          }
-          def emit(r: TimelineRow): Option[BackfilledEvent] = {
+          // input already materialized for the sort → eager commit,
+          // unconditional on downstream consumption (see [[features]])
+          val out = rows.toSeq.sortBy(r => (r.ts.getTime, if (r.isPage) 0 else 1)).flatMap { r =>
             lastMs = math.max(lastMs, r.ts.getTime)
             if (r.isPage) { s = Some(SnapshotState(r.ts.getTime, r.text, r.lang)); None }
             else Some(BackfilledEvent(url, r.ts, r.value,
               s.map(st => new Timestamp(st.warcTsMillis)), s.map(_.text), s.map(_.lang)))
           }
-          if (perKeyOrdered) {
-            // arrival order IS the timeline: stream, don't buffer. Commit rides
-            // output-iterator exhaustion — same full-consumption contract as
-            // [[features]]' ordered path (documented there)
-            rows.flatMap(emit(_)) ++ { commit(); Iterator.empty }
-          } else {
-            // buffered path: input already materialized for the sort → eager
-            // commit, unconditional on downstream consumption (see [[features]])
-            val out = rows.toSeq.sortBy(r => (r.ts.getTime, if (r.isPage) 0 else 1))
-              .iterator.flatMap(emit(_)).toVector
-            commit()
-            out.iterator
-          }
+          s.foreach(state.update)
+          // TTL anchored at the key's latest TIMELINE row (page or event): any
+          // activity keeps the snapshot alive for another TTL window
+          if (streaming && state.exists)
+            state.setTimeoutTimestamp(math.max(
+              lastMs + stateTtlSeconds * 1000L,
+              state.getCurrentWatermarkMs() + 1L))
+          out.iterator
         }
     }
   }

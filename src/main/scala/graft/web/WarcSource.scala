@@ -293,248 +293,21 @@ object WarcSource {
       }
   }
 
-  /** Precise multi-member gunzip with compressed-offset accounting — the split
-    * reader's core. Starts at a member boundary (`baseOffset` is that boundary's
-    * absolute compressed offset) and decompresses concatenated members, ENDING
-    * (EOF) before the first RECORD-STARTING member — decompressed prefix
-    * `WARC/` — whose compressed offset is >= `stopAt`. Members that do NOT begin
-    * a record (a re-chunked gzip stream's continuation members) never stop the
-    * stream and never start a split, so each record belongs to exactly the split
-    * containing its record-starting member's offset — the Hadoop text-split
-    * convention applied at gzip-member granularity (RFC 1952 headers parsed
-    * manually; `Inflater(nowrap)` + `getRemaining` gives exact member ends,
-    * which JDK `GZIPInputStream`'s internal buffering cannot).
-    *
-    * Torn/corrupt input mid-member is EOF (the decompressed prefix is salvaged),
-    * matching the whole-shard reader's lenient contract.
-    */
-  private[web] final class SplitGzipStream(raw: java.io.InputStream,
-      baseOffset: Long, stopAt: Long) extends java.io.InputStream {
-    private val inBuf = new Array[Byte](64 * 1024)
-    private var inLen = 0
-    private var inPos = 0
-    private var rawConsumed = 0L // bytes pulled from `raw` so far
-    private var rawEof = false
-    private var inflater: java.util.zip.Inflater = null
-    private var pending: Array[Byte] = Array.emptyByteArray // peeked member prefix
-    private var pendingPos = 0
-    private var done = false
-
-    /** Absolute compressed offset of the next unconsumed input byte. */
-    private def pos: Long = baseOffset + rawConsumed - (inLen - inPos)
-
-    private def fillInput(): Boolean = {
-      if (inPos > 0) { // compact
-        System.arraycopy(inBuf, inPos, inBuf, 0, inLen - inPos)
-        inLen -= inPos; inPos = 0
-      }
-      if (rawEof || inLen == inBuf.length) return inLen > inPos
-      val n = try raw.read(inBuf, inLen, inBuf.length - inLen)
-        catch { case _: java.io.IOException => -1 }
-      if (n < 0) { rawEof = true } else { inLen += n; rawConsumed += n }
-      inLen > inPos
-    }
-    private def haveByte: Boolean = inPos < inLen || fillInput()
-    private def nextByte(): Int = { if (!haveByte) return -1; val b = inBuf(inPos) & 0xff; inPos += 1; b }
-
-    /** Parse one RFC 1952 member header from the current position; false when the
-      * input is exhausted or not a gzip member (torn tail → EOF salvage).
-      */
-    private def readMemberHeader(): Boolean = {
-      if (nextByte() != 0x1f || nextByte() != 0x8b || nextByte() != 8) return false
-      val flg = nextByte(); if (flg < 0 || (flg & 0xe0) != 0) return false
-      var i = 0
-      while (i < 6) { if (nextByte() < 0) return false; i += 1 } // MTIME XFL OS
-      if ((flg & 4) != 0) { // FEXTRA
-        val lo = nextByte(); val hi = nextByte(); if (hi < 0) return false
-        var n = lo | (hi << 8)
-        while (n > 0) { if (nextByte() < 0) return false; n -= 1 }
-      }
-      if ((flg & 8) != 0) { var b = nextByte(); while (b > 0) b = nextByte(); if (b < 0) return false } // FNAME
-      if ((flg & 16) != 0) { var b = nextByte(); while (b > 0) b = nextByte(); if (b < 0) return false } // FCOMMENT
-      if ((flg & 2) != 0) { if (nextByte() < 0 || nextByte() < 0) return false } // FHCRC
-      true
-    }
-
-    /** Begin the next member (parsing its header and peeking its decompressed
-      * prefix for the record-start/stop decision); false at stream end.
-      */
-    private def startMember(): Boolean = {
-      if (!haveByte) return false
-      val memberStart = pos
-      if (!readMemberHeader()) return false
-      inflater = new java.util.zip.Inflater(true)
-      // peek up to warcMagic.length decompressed bytes to classify the member
-      val peek = new Array[Byte](warcMagic.length)
-      var got = 0
-      var salvageEof = false
-      while (got < peek.length && !inflater.finished() && !salvageEof) {
-        if (inflater.needsInput()) {
-          if (!haveByte) salvageEof = true
-          else { inflater.setInput(inBuf, inPos, inLen - inPos); inPos = inLen }
-        }
-        if (!salvageEof && !inflater.finished()) {
-          val n = try inflater.inflate(peek, got, peek.length - got)
-            catch { case _: java.util.zip.DataFormatException => salvageEof = true; 0 }
-          got += n
-          if (n == 0 && inflater.needsInput() && !haveByte) salvageEof = true
-        }
-      }
-      val isRecordStart = got == warcMagic.length &&
-        java.util.Arrays.equals(peek, warcMagic)
-      if (isRecordStart && memberStart >= stopAt) {
-        inflater.end(); inflater = null
-        return false // the NEXT split owns this record
-      }
-      pending = java.util.Arrays.copyOf(peek, got); pendingPos = 0
-      true
-    }
-
-    /** Finish the current member: push unconsumed inflater input back and skip the
-      * 8-byte CRC32+ISIZE trailer (not verified — lenient like the whole-shard path).
-      */
-    private def endMember(): Unit = {
-      inPos -= inflater.getRemaining
-      inflater.end(); inflater = null
-      var i = 0
-      while (i < 8 && nextByte() >= 0) i += 1
-    }
-
-    override def read(): Int = {
-      val one = new Array[Byte](1)
-      val n = read(one, 0, 1)
-      if (n < 0) -1 else one(0) & 0xff
-    }
-
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      if (done || len == 0) return if (len == 0) 0 else -1
-      var written = 0
-      while (written == 0) {
-        if (pendingPos < pending.length) {
-          val n = math.min(len, pending.length - pendingPos)
-          System.arraycopy(pending, pendingPos, b, off, n)
-          pendingPos += n
-          written = n
-        } else if (inflater == null) {
-          if (!startMember()) { done = true; return if (written > 0) written else -1 }
-        } else if (inflater.finished()) {
-          endMember()
-        } else {
-          if (inflater.needsInput()) {
-            if (!haveByte) { done = true; return if (written > 0) written else -1 } // torn member: salvage prefix
-            else { inflater.setInput(inBuf, inPos, inLen - inPos); inPos = inLen }
-          }
-          if (!inflater.finished()) {
-            val n = try inflater.inflate(b, off, len)
-              catch { case _: java.util.zip.DataFormatException =>
-                done = true; return if (written > 0) written else -1 }
-            written = n
-          }
-        }
-      }
-      written
-    }
-
-    override def close(): Unit = {
-      if (inflater != null) { inflater.end(); inflater = null }
-      raw.close()
-    }
-  }
-
-  /** First record-starting gzip-member boundary at compressed offset >= `from`
-    * and < `until`: scan for the gzip magic, verify reserved header bits, and
-    * confirm the member's decompressed prefix is `WARC/` by actually inflating it
-    * (a three-byte magic alone false-positives once per ~16 MB of compressed
-    * data; the inflate check makes a false boundary effectively impossible).
-    * Returns -1 when the range contains none.
-    */
-  private[web] def findRecordBoundary(raw: org.apache.hadoop.fs.FSDataInputStream,
-      from: Long, until: Long, fileLen: Long): Long = {
-    val chunk = 1 << 20
-    val overlap = 2 // magic is 3 bytes: keep 2 so a straddling magic is seen
-    val buf = new Array[Byte](chunk)
-    var base = from
-    while (base < until) {
-      val want = math.min(chunk.toLong, fileLen - base).toInt
-      if (want < 3) return -1
-      var read = 0
-      try {
-        while (read < want) {
-          val n = raw.read(base + read, buf, read, want - read)
-          if (n < 0) throw new java.io.EOFException()
-          read += n
-        }
-      } catch { case _: java.io.IOException => return -1 }
-      var i = 0
-      while (i <= read - 3) {
-        if (buf(i) == 0x1f.toByte && buf(i + 1) == 0x8b.toByte && buf(i + 2) == 8.toByte
-            && base + i < until) {
-          val cand = base + i
-          // verify by inflating the member prefix from a fresh positioned stream
-          val probeLen = math.min(64 * 1024L, fileLen - cand).toInt
-          val probe = new Array[Byte](probeLen)
-          try {
-            var r = 0
-            while (r < probeLen) {
-              val n = raw.read(cand + r, probe, r, probeLen - r)
-              if (n < 0) throw new java.io.EOFException()
-              r += n
-            }
-            val s = new SplitGzipStream(new java.io.ByteArrayInputStream(probe), cand, Long.MaxValue)
-            val head = new Array[Byte](warcMagic.length)
-            var got = 0
-            var n = 0
-            while (got < head.length && n >= 0) {
-              n = s.read(head, got, head.length - got)
-              if (n > 0) got += n
-            }
-            s.close()
-            if (got == head.length && java.util.Arrays.equals(head, warcMagic)) return cand
-          } catch { case _: java.io.IOException => () }
-        }
-        i += 1
-      }
-      base += read - overlap
-    }
-    -1
-  }
-
   /** All parseable records under `pathGlob` (plain or gzipped WARC shards),
     * streamed — per-task memory is O(record), so full-size CC shards ingest
     * directly. The driver lists the glob once (dirs expand one level); the
     * Hadoop configuration travels to executors as broadcast entries.
-    *
-    * `splitBytes > 0` additionally splits each GZIPPED shard into byte ranges
-    * parsed in parallel, aligned to record-starting gzip members (Common Crawl's
-    * record-per-member layout) — the few-huge-shards case where shard-level
-    * parallelism is not enough. Each record belongs to exactly the split whose
-    * `[start, end)` range contains its member's compressed offset; a shard
-    * gzipped as one whole-file member degrades gracefully (only the first split
-    * finds a boundary and reads everything — same records, less parallelism).
-    * Plain-text shards ignore `splitBytes` (no boundary to resync on) and stay
-    * one task.
     */
   def records(spark: SparkSession, pathGlob: String,
-      maxRecordBytes: Int = DefaultMaxRecordBytes,
-      splitBytes: Long = 0L): Dataset[WarcRecord] = {
+      maxRecordBytes: Int = DefaultMaxRecordBytes): Dataset[WarcRecord] = {
     import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
     val globPath = new org.apache.hadoop.fs.Path(pathGlob)
     val fs = globPath.getFileSystem(hconf)
     val statuses = Option(fs.globStatus(globPath)).getOrElse(Array.empty)
-    val fileStatuses = statuses.toSeq.flatMap { st =>
+    val shards: Seq[String] = statuses.toSeq.flatMap { st =>
       if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(_.isFile) else Seq(st)
-    }.sortBy(_.getPath.toString)
-    // (path, splitStart, splitEnd, fileLen); (0, len, len) = the whole-file task.
-    // Only gz shards split: a plain-text WARC has no member boundary to resync on.
-    val splits: Seq[(String, Long, Long, Long)] = fileStatuses.flatMap { st =>
-      val p = st.getPath.toString
-      val len = st.getLen
-      if (splitBytes > 0 && p.endsWith(".gz") && len > splitBytes) {
-        val n = ((len + splitBytes - 1) / splitBytes).toInt
-        (0 until n).map(s => (p, s * splitBytes, math.min((s + 1) * splitBytes, len), len))
-      } else Seq((p, 0L, len, len))
-    }
+    }.map(_.getPath.toString).sorted
     // Configuration is not serializable; ship its entries and rebuild per task
     val confEntries: Seq[(String, String)] = {
       val it = hconf.iterator(); val b = Seq.newBuilder[(String, String)]
@@ -543,8 +316,8 @@ object WarcSource {
     }
     val bcConf = spark.sparkContext.broadcast(confEntries)
     val rdd = spark.sparkContext
-      .parallelize(splits, math.max(splits.length, 1))
-      .flatMap { case (p, start, end, fileLen) =>
+      .parallelize(shards, math.max(shards.length, 1))
+      .flatMap { p =>
         val conf = new org.apache.hadoop.conf.Configuration(false)
         bcConf.value.foreach { case (k, v) => conf.set(k, v) }
         val hp = new org.apache.hadoop.fs.Path(p)
@@ -556,19 +329,7 @@ object WarcSource {
         Option(org.apache.spark.TaskContext.get()).foreach(
           _.addTaskCompletionListener[Unit](_ =>
             try raw.close() catch { case _: java.io.IOException => () }))
-        val whole = start == 0 && end == fileLen
-        if (whole) parseStream(p, maybeGunzip(p, raw), maxRecordBytes)
-        else {
-          // member-aligned split: resync to the first record-starting member at
-          // offset >= start (a split with none is empty), stream members until
-          // the first record-starting member at offset >= end
-          val boundary = if (start == 0) 0L else findRecordBoundary(raw, start, end, fileLen)
-          if (boundary < 0) { raw.close(); Iterator.empty }
-          else {
-            raw.seek(boundary)
-            parseStream(p, new SplitGzipStream(raw, boundary, end), maxRecordBytes)
-          }
-        }
+        parseStream(p, maybeGunzip(p, raw), maxRecordBytes)
       }
     spark.createDataset(rdd)
   }

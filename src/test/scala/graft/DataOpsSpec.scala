@@ -596,23 +596,23 @@ class DataOpsSpec extends SparkTestBase {
     val bySubstr = Decontaminate.flagContains(docs, "text", bench, "snippet")
       .where(col("contaminated")).select("doc_id").collect().map(_.getLong(0)).toSet
     assert(bySubstr == Set(1L), s"substring path flagged $bySubstr")
-    val byNgram = Decontaminate.flagNgramOverlap(docs, "text", bench, "snippet", n = 8)
+    val byNgram = Decontaminate.flagNgramOverlap(docs, "doc_id", "text", bench, "snippet", n = 8)
       .where(col("contaminated")).select("doc_id").collect().map(_.getLong(0)).toSet
     // tokenization collapses case and punctuation: the n-gram path also catches doc 4
     assert(byNgram == Set(1L, 4L), s"ngram path flagged $byNgram")
-    assert(Decontaminate.removeContains(docs, "text", bench, "snippet").count() == 4)
-    assert(Decontaminate.removeNgramOverlap(docs, "text", bench, "snippet", n = 8).count() == 3)
-    // empty benchmark flags nothing (and does not error on the 1-row broadcast)
+    // empty benchmark flags nothing (and does not error on an empty automaton)
     val none = Decontaminate.flagContains(docs, "text", bench.where(lit(false)), "snippet")
     assert(none.where(col("contaminated")).count() == 0)
     // n shorter than every document still works; n longer than every document flags nothing
-    assert(Decontaminate.flagNgramOverlap(docs, "text", bench, "snippet", n = 100)
+    assert(Decontaminate.flagNgramOverlap(docs, "doc_id", "text", bench, "snippet", n = 100)
       .where(col("contaminated")).count() == 0)
-    // corpus-side plan: broadcast join, and NO exchange on the document side (the
-    // only exchange feeds the broadcast of the 1-row benchmark aggregate)
+    // a NULL id cannot carry the n-gram flag back: flagged false whatever its text
+    val nullId = Seq((Option.empty[Long], s"intro $benchQ outro")).toDF("doc_id", "text")
+    assert(!Decontaminate.flagNgramOverlap(nullId, "doc_id", "text", bench, "snippet")
+      .head().getAs[Boolean]("contaminated"))
+    // the substring flag is one projection: no exchange on the document side
     val plan = Decontaminate.flagContains(docs, "text", bench, "snippet")
       .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastNestedLoopJoin"), plan.take(1500))
     assert(!plan.contains("hashpartitioning"), plan.take(1500))
   }
 
@@ -641,21 +641,29 @@ class DataOpsSpec extends SparkTestBase {
     assert(new AhoCorasick(Array("号🎉b")).containsAny("a号🎉ba"))
   }
 
-  test("compiled decontamination path agrees with the lazy substring path") {
-    import spark.implicits._
+  /** doc_id → contaminated of a flagged frame. */
+  private def flagsOf(df: DataFrame): Map[Long, Boolean] =
+    df.select("doc_id", "contaminated").collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+
+  test("substring decontamination kernel equals the exists(contains) formula it replaced") {
     // reuse the corpus: snippets cut from real documents, matched against all docs
     val d = docs.select(col("doc_id"), col("text"))
     val bench = d.where(col("doc_id") % 25 === 3)
       .select(substring(col("text"), 11, 30).as("snippet"))
-    val lazyFlags = Decontaminate.flagContains(d, "text", bench, "snippet")
-      .select("doc_id", "contaminated").collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val compiled = Decontaminate.flagContainsCompiled(d, "text", bench, "snippet")
-      .select("doc_id", "contaminated").collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(lazyFlags == compiled)
-    assert(lazyFlags.values.exists(identity), "parity is vacuous if nothing matched")
-    // compiled path on an empty benchmark: flags nothing, no error
-    val none = Decontaminate.flagContainsCompiled(d, "text", bench.where(lit(false)), "snippet")
-    assert(none.where(col("contaminated")).count() == 0)
+    // oracle: the broadcast snippet array, every snippet re-scanning every document
+    def formula(b: DataFrame): Map[Long, Boolean] = {
+      val snips = b.where(col("snippet").isNotNull && length(col("snippet")) > 0)
+        .agg(collect_set(col("snippet")).as("snips"))
+      flagsOf(d.crossJoin(broadcast(snips)).withColumn("contaminated",
+        coalesce(exists(col("snips"), s => contains(col("text"), s)), lit(false))))
+    }
+    val kernel = flagsOf(Decontaminate.flagContains(d, "text", bench, "snippet"))
+    assert(kernel == formula(bench))
+    assert(kernel.values.exists(identity), "parity is vacuous if nothing matched")
+    // empty benchmark: flags nothing, no error, on both sides
+    val empty = bench.where(lit(false))
+    val none = flagsOf(Decontaminate.flagContains(d, "text", empty, "snippet"))
+    assert(none == formula(empty) && !none.values.exists(identity))
   }
 
   test("trigram LM quality matches a sequential reference implementation") {
@@ -700,27 +708,24 @@ class DataOpsSpec extends SparkTestBase {
     assert(got(5L).isEmpty && got(6L).isEmpty)
   }
 
-  test("compiled n-gram decontamination path agrees with the lazy path") {
+  test("n-gram decontamination semi-join equals the arrays_overlap formula it replaced") {
     val d = docs.select(col("doc_id"), col("text"))
     val bench = d.where(col("doc_id") % 25 === 3)
-    val lazyFlags = Decontaminate.flagNgramOverlap(d, "text", bench, "text", n = 8)
-      .select("doc_id", "contaminated").collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val compiled = Decontaminate.flagNgramOverlapCompiled(d, "text", bench, "text", n = 8)
-      .select("doc_id", "contaminated").collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(lazyFlags == compiled)
-    assert(compiled.values.exists(identity), "parity is vacuous if nothing matched")
-    assert(!compiled.values.forall(identity), "parity is vacuous if everything matched")
-    // the distributed semi-join path (no driver collect, no broadcast) must agree too
-    val joined = Decontaminate.flagNgramOverlapJoin(d, "doc_id", "text", bench, "text", n = 8)
-      .select("doc_id", "contaminated").collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    assert(joined == compiled)
-    // empty benchmark: flags nothing, no error
-    val none = Decontaminate.flagNgramOverlapCompiled(
-      d, "text", bench.where(lit(false)), "text", n = 8)
-    assert(none.where(col("contaminated")).count() == 0)
-    val noneJoin = Decontaminate.flagNgramOverlapJoin(
-      d, "doc_id", "text", bench.where(lit(false)), "text", n = 8)
-    assert(noneJoin.where(col("contaminated")).count() == 0)
+    // oracle: the broadcast gram-hash array, scanned per document
+    def formula(b: DataFrame): Map[Long, Boolean] = {
+      val grams = b.select(explode(Decontaminate.tokenNgramHashes(col("text"), 8)).as("g"))
+        .agg(collect_set(col("g")).as("grams"))
+      flagsOf(d.crossJoin(broadcast(grams)).withColumn("contaminated", coalesce(
+        arrays_overlap(Decontaminate.tokenNgramHashes(col("text"), 8), col("grams")), lit(false))))
+    }
+    val joined = flagsOf(Decontaminate.flagNgramOverlap(d, "doc_id", "text", bench, "text", n = 8))
+    assert(joined == formula(bench))
+    assert(joined.values.exists(identity), "parity is vacuous if nothing matched")
+    assert(!joined.values.forall(identity), "parity is vacuous if everything matched")
+    // empty benchmark: flags nothing, no error, on both sides
+    val empty = bench.where(lit(false))
+    val none = flagsOf(Decontaminate.flagNgramOverlap(d, "doc_id", "text", empty, "text", n = 8))
+    assert(none == formula(empty) && !none.values.exists(identity))
   }
 
   test("perplexity buckets split scores into head/middle/tail at exact terciles") {
@@ -923,7 +928,7 @@ class DataOpsSpec extends SparkTestBase {
     assert(frac(1L) == 1.0)
     assert(frac(2L) > 0.0 && frac(2L) < 1.0, frac.toString)
     assert(frac(3L) == 0.0 && frac(4L) == 0.0 && frac(5L) == 0.0)
-    val flags = Decontaminate.flagNgramOverlapJoin(d, "id", "text", bench, "text")
+    val flags = Decontaminate.flagNgramOverlap(d, "id", "text", bench, "text")
       .collect().map(r => r.getLong(0) -> r.getBoolean(r.fieldIndex("contaminated"))).toMap
     assert(frac.forall { case (id, f) => (f > 0.0) == flags(id) })
   }
@@ -1130,5 +1135,63 @@ class DataOpsSpec extends SparkTestBase {
         hashfns.simhashBucketKeys(col("sim"), width, combos).as("k"))
       .where(not(col("o") <=> col("k"))).count()
     assert(sm == 0)
+  }
+
+  test("ArgMaxCosine kernel equals the greatest-of-structs formula (r7 swap, property)") {
+    import graft.functions.vecfns
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val dim = 3
+    // few distinct values: exact cosine ties, ±0.0 and zero vectors (NaN cosine) are common
+    val elem = Gen.oneOf(-1.0, -0.0, 0.0, 0.5, 1.0, 2.0)
+    val elemOrNull: Gen[java.lang.Double] =
+      Gen.frequency((9, elem.map(Double.box)), (1, Gen.const(null: java.lang.Double)))
+    val vecGen: Gen[Seq[java.lang.Double]] = Gen.frequency(
+      (1, Gen.const(null: Seq[java.lang.Double])),
+      (8, Gen.listOfN(dim, elemOrNull)),
+      (1, Gen.oneOf(dim - 1, dim + 1).flatMap(Gen.listOfN(_, elemOrNull)))) // length mismatch
+    // distinct ids in random order, so the smallest id is not always the first centroid
+    val centroidsGen = for {
+      ids <- Gen.listOfN(5, Gen.choose(0L, 20L)).map(_.distinct).suchThat(_.size >= 2)
+      vecs <- Gen.listOfN(ids.size, Gen.listOfN(dim, elem))
+    } yield ids.zip(vecs)
+    val schema = StructType(Seq(StructField("id", IntegerType),
+      StructField("v", ArrayType(DoubleType, containsNull = true))))
+    // the formula the kernel replaced: max (cosine, -id) struct, negated back to an id
+    def formula(cents: Seq[(Long, List[Double])]) =
+      -greatest(cents.map { case (cid, vec) =>
+        struct(vecfns.cosineSim(col("v"), typedLit(vec)).as("s"), lit(-cid).as("negc"))
+      }: _*).getField("negc")
+    def mismatches(cents: Seq[(Long, List[Double])], df: DataFrame): Seq[Row] =
+      df.select(col("id"), col("v"), formula(cents).as("o"),
+          vecfns.argMaxCosine(col("v"), cents.map(_._1), cents.map(_._2)).as("k"))
+        .where(not(col("o") <=> col("k"))).collect().toSeq
+    val prop = Prop.forAllNoShrink(centroidsGen, Gen.listOfN(40, vecGen)) { (cents, vecs) =>
+      val rows = vecs.zipWithIndex.map { case (v, i) => Row(i, v) }
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      // both the generated code and the interpreted eval
+      Prop.all(Seq(("true", "CODEGEN_ONLY"), ("false", "NO_CODEGEN")).map { case (ws, mode) =>
+        spark.conf.set("spark.sql.codegen.wholeStage", ws)
+        spark.conf.set("spark.sql.codegen.factoryMode", mode)
+        try {
+          val bad = mismatches(cents, df)
+          Prop(bad.isEmpty) :| s"$mode centroids=$cents: ${bad.mkString("; ")}"
+        } finally {
+          spark.conf.unset("spark.sql.codegen.wholeStage")
+          spark.conf.unset("spark.sql.codegen.factoryMode")
+        }
+      }: _*)
+    }
+    val result = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(15).withInitialSeed(org.scalacheck.rng.Seed(11L)), prop)
+    assert(result.passed, result.status.toString)
+    // an exact tie goes to the smallest id, wherever it sits in the centroid list
+    val tie = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row(0, Seq[java.lang.Double](1.0, 0.0, 0.0))), 1), schema)
+    val cents = Seq(9L -> List(1.0, 0.0, 0.0), 4L -> List(2.0, 0.0, 0.0), 6L -> List(0.0, 1.0, 0.0))
+    assert(tie.select(vecfns.argMaxCosine(col("v"), cents.map(_._1), cents.map(_._2)))
+      .head().getLong(0) == 4L)
+    assert(mismatches(cents, tie).isEmpty)
   }
 }

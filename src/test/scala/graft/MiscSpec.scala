@@ -105,4 +105,13 @@ class MiscSpec extends SparkTestBase {
       .filterNot(k => s"(?<!\\w)$k(?!\\w)".r.findFirstIn(matrix).isDefined)
     assert(missing.isEmpty, s"gates missing from the README coverage matrix: $missing")
   }
+
+  test("every gate oracle SQL string is pinned") {
+    val pairs = SparkEntry.oracleSql.toSeq.sortBy(_._1)
+      .map { case (k, sql) => s"$k\t$sql\n" }.mkString
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(pairs.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    assert(SparkEntry.oracleSql.size == 74)
+    assert(sha == "487f925a5d4b0c75a5cb2e9e60b68b0b49252fd60e4a167c964354603421ab6c", "an oracleSql string changed")
+  }
 }

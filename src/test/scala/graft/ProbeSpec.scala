@@ -53,4 +53,12 @@ class ProbeSpec extends SparkTestBase {
     val gates = node.get("gates").elements().asScala.toSeq
     assert(gates.map(g => (g.get("gate").asText, g.get("rows").asLong)) == Seq(("q1_agg", 2L)))
   }
+
+  test("probe decontam times the one n-gram path at each benchmark size") {
+    val node = new ObjectMapper().readTree(Probe.run(spark, Seq("decontam", "300"), Some(sfDir)))
+    val points = node.get("points").elements().asScala.toSeq
+    assert(points.map(_.get("modulus").asLong) == Seq(300L, 30L, 3L))
+    points.foreach(p => assert(p.fieldNames().asScala.toSeq ==
+      Seq("modulus", "grams", "secs", "flagged")))
+  }
 }

@@ -57,46 +57,10 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
-  test("perKeyOrdered streaming path matches the batch job without buffering") {
-    import spark.implicits._
-    val pages = Pages.generate(spark, numUrls = 120, seed = 11L, numPartitions = 2)
-      .select(col("url"), col("warc_ts"), col("text"), col("lang"))
-      .as[PageEvent]
-    val batch = WebFeatures.pointInTime(pages.toDF())
-      .select(col("url"), col("warc_ts"),
-        col("inclusive_cum_count_over_url").cast("long").as("snapshot_idx"),
-        col("secs_since_last_snapshot"), col("session_id"), col("text_changed"))
-      .collect().map(r => (r.getString(0), r.getTimestamp(1)) -> r).toMap
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[PageEvent]
-    val query = StreamingFeatures.features(input.toDS(), sessionGapSeconds = 2 * 86400L,
-        stateTtlSeconds = 100L * 365 * 86400, perKeyOrdered = true)
-      .writeStream.format("memory").queryName("stream_features_ordered")
-      .outputMode("append").start()
-    try {
-      // global event-time order implies per-key order — the perKeyOrdered contract
-      val rows = pages.collect().sortBy(e => (e.warc_ts.getTime, e.url))
-      rows.grouped(math.max(rows.length / 4, 1)).foreach { chunk =>
-        input.addData(chunk.toSeq); query.processAllAvailable()
-      }
-    } finally query.stop()
-
-    val streamed = spark.table("stream_features_ordered").collect()
-    assert(streamed.length == batch.size)
-    streamed.foreach { r =>
-      val key = (r.getString(0), r.getTimestamp(1))
-      val b = batch(key)
-      assert(r.getLong(2) == b.getLong(2), s"snapshot_idx mismatch at $key")
-      assert(r.getLong(4) == b.getLong(4), s"session_id mismatch at $key")
-      assert(r.getBoolean(5) == b.getBoolean(5), s"text_changed mismatch at $key")
-    }
-  }
-
   test("the feature fold is lazy: k outputs consume exactly k inputs") {
     import graft.streaming.StreamingFeatures.UrlState
-    // the perKeyOrdered path hands the group iterator straight to this fold — if it
-    // buffered (toSeq/sort), this counter would jump to n on the first element
+    // one output per input, state threaded in order — if the fold buffered
+    // (toSeq/sort), this counter would jump to n on the first element
     var consumed = 0
     val n = 1000
     val events = Iterator.tabulate(n) { i =>
@@ -319,7 +283,7 @@ class StreamingSpec extends SparkTestBase {
   test("curation ops are streaming-safe: signals and decontamination flags on a stream") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    // repetitionSignals, passesRepetitionFilter, and the compiled decontamination
+    // repetitionSignals, passesRepetitionFilter, and the substring decontamination
     // flag are STATELESS projections, so the same code runs per micro-batch with no
     // state store — the streaming counterpart of the batch curation pass is the
     // batch code itself, asserted here against the identical batch run
@@ -331,7 +295,7 @@ class StreamingSpec extends SparkTestBase {
       (3L, "a perfectly ordinary page about gardening tools"))
     val bench = Seq(leak).toDF("snippet")
     def curate(df: org.apache.spark.sql.DataFrame) = {
-      val flagged = graft.data.Decontaminate.flagContainsCompiled(
+      val flagged = graft.data.Decontaminate.flagContains(
         graft.data.TextAnalysis.repetitionSignals(df, "_2"), "_2", bench, "snippet")
       flagged.withColumn("keep",
         graft.data.TextAnalysis.passesRepetitionFilter(col("_2")) && !col("contaminated"))

@@ -380,6 +380,28 @@ class WebSpec extends SparkTestBase {
     val salvaged = WarcSource.records(spark, dir2.toString + "/*").collect()
     assert(salvaged.length >= 1 && salvaged.head.url == "http://a.example/x",
       salvaged.map(_.url).mkString(", "))
+
+    // 40 records of random size in both gzip layouts — one member per record (CC)
+    // and the whole shard as ONE member — each read whole-shard to exactly the
+    // written records; a torn last member loses only that record
+    val rng = new scala.util.Random(11)
+    val pads = (0 until 40).map(_ => rng.nextInt(3000))
+    def body(i: Int) = s"<html><body>page $i ${"x" * pads(i)}</body></html>"
+    val many = (0 until 40).map(i => rec("response", s"http://ex.test/p$i",
+      s"2024-02-0${1 + i % 9}T00:00:00Z", http(200, body(i))))
+    val members = many.map(member)
+    val dir3 = java.nio.file.Files.createTempDirectory("warc_layouts")
+    java.nio.file.Files.write(dir3.resolve("cc.warc.gz"), members.reduce(_ ++ _))
+    java.nio.file.Files.write(dir3.resolve("whole.warc.gz"), member(many.reduce(_ ++ _)))
+    java.nio.file.Files.write(dir3.resolve("torn.warc.gz"),
+      members.init.reduce(_ ++ _) ++ members.last.take(members.last.length / 2))
+    def read(name: String) = WarcSource.records(spark, s"$dir3/$name").collect()
+      .map(r => (r.url, r.warc_ts.toInstant.toString, new String(r.body, "UTF-8"))).toSeq
+    val want = (0 until 40).map(i =>
+      (s"http://ex.test/p$i", s"2024-02-0${1 + i % 9}T00:00:00Z", body(i)))
+    assert(read("cc.warc.gz") == want)
+    assert(read("whole.warc.gz") == want)
+    assert(read("torn.warc.gz") == want.init)
   }
 
   test("WARC pages decode under their declared charset, falling back to UTF-8") {
@@ -537,58 +559,6 @@ class WebSpec extends SparkTestBase {
     assert(l.taskStats.nonEmpty)
     assert(l.summaryJson.contains("\"skewRatio\""))
     assert(l.totalRecordsRead.sum() >= 0)
-  }
-
-  test("WARC split reads return exactly the whole-shard records at every split size") {
-    import graft.web.WarcSource
-    def rec(i: Int, pad: Int): Array[Byte] = {
-      val body = s"<html><body>page $i ${"x" * pad}</body></html>"
-      val http = s"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n$body".getBytes("UTF-8")
-      val header = s"WARC/1.0\r\nWARC-Type: response\r\nWARC-Date: 2024-02-0${1 + i % 9}T00:00:00Z\r\n" +
-        s"WARC-Target-URI: http://ex.test/p$i\r\nContent-Length: ${http.length}\r\n\r\n"
-      header.getBytes("ISO-8859-1") ++ http ++ "\r\n\r\n".getBytes("ISO-8859-1")
-    }
-    def gzMember(b: Array[Byte]): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val gz = new java.util.zip.GZIPOutputStream(bos)
-      gz.write(b); gz.close(); bos.toByteArray
-    }
-    val rng = new scala.util.Random(11)
-    val recs = (0 until 40).map(i => rec(i, rng.nextInt(3000)))
-    val dir = java.nio.file.Files.createTempDirectory("warc_split")
-    // CC layout: one gzip member per record, concatenated
-    java.nio.file.Files.write(dir.resolve("cc.warc.gz"),
-      recs.map(gzMember).reduce(_ ++ _))
-    // degenerate layout: the whole shard as ONE member
-    java.nio.file.Files.write(dir.resolve("whole.warc.gz"),
-      gzMember(recs.reduce(_ ++ _)))
-    val want = WarcSource.records(spark, dir.toString + "/cc.warc.gz")
-      .collect().map(r => (r.url, r.warc_ts, new String(r.body, "UTF-8"))).sorted.toSeq
-    assert(want.size == 40)
-    val fileLen = java.nio.file.Files.size(dir.resolve("cc.warc.gz"))
-    for (splitBytes <- Seq(137L, 1021L, fileLen / 3, fileLen * 2)) {
-      val got = WarcSource.records(spark, dir.toString + "/cc.warc.gz",
-          splitBytes = splitBytes)
-        .collect().map(r => (r.url, r.warc_ts, new String(r.body, "UTF-8"))).sorted.toSeq
-      assert(got == want, s"splitBytes=$splitBytes: ${got.size} records vs ${want.size}")
-    }
-    // splitting actually parallelizes: tiny splits yield > 1 non-empty partition
-    val parts = WarcSource.records(spark, dir.toString + "/cc.warc.gz", splitBytes = 1021L)
-      .rdd.mapPartitions(it => Iterator.single(it.size)).collect()
-    assert(parts.count(_ > 0) > 1, s"expected multiple productive splits, got ${parts.toSeq}")
-    // single-member shard: splits degrade to the first split reading everything
-    val whole = WarcSource.records(spark, dir.toString + "/whole.warc.gz",
-        splitBytes = 1021L)
-      .collect().map(r => (r.url, r.warc_ts, new String(r.body, "UTF-8"))).sorted.toSeq
-    assert(whole == want)
-    // torn tail under splits: cut the last member mid-way; every intact record survives
-    val full = recs.map(gzMember)
-    val torn = full.init.reduce(_ ++ _) ++ full.last.take(full.last.length / 2)
-    java.nio.file.Files.write(dir.resolve("torn.warc.gz"), torn)
-    val salvaged = WarcSource.records(spark, dir.toString + "/torn.warc.gz",
-        splitBytes = 997L)
-      .collect().map(_.url).sorted.toSeq
-    assert(salvaged == (0 until 39).map(i => s"http://ex.test/p$i").sorted.toSeq)
   }
 
   test("extractLinks + hostOf: anchor hrefs out of raw html, composed into pageRank") {
