@@ -3,6 +3,7 @@ package graft
 import graft.core._
 import graft.dataset.GraftDataset
 import graft.pipeline.{ops, Pipeline}
+import graft.selection.SelectionMethod
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,8 +14,16 @@ import org.apache.spark.sql.functions._
   *  - float-valued computed columns rounded on BOTH sides via the same floor-based
   *    formula (both engines' native `round` disagree on currency-style midpoints)
   *  - timestamps cast to epoch seconds when they appear in outputs
+  *
+  * Each gate is one [[Gate]] value, keyed once in [[gates]] (or [[DataQueries.gates]]);
+  * [[all]] and [[oracles]] are projections of the two tables.
   */
 object Queries {
+
+  /** One oracle gate: the engine query over the parquet tables in a directory, and
+    * the DuckDB SQL over the same tables that must return the same rows.
+    */
+  final case class Gate(run: (SparkSession, String) => DataFrame, oracleSql: String)
 
   private val eventOrder = Seq("ts", "event_id")
 
@@ -71,7 +80,7 @@ object Queries {
 
   // ---------------------------------------------------------------- aggregate / scan
 
-  private val q1Agg: (SparkSession, String) => DataFrame = (spark, dir) => {
+  private val q1Agg = Gate((spark, dir) => {
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
     li.groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -79,78 +88,69 @@ object Queries {
         r6(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("revenue"),
         count(lit(1)).as("cnt"))
       .orderBy("l_returnflag", "l_linestatus")
-  }
-
-  private val q1AggSql = {
+  }, oracleSql = {
     val inner = "SELECT l_returnflag, l_linestatus, sum(l_quantity) AS sum_qty, " +
       "sum(l_extendedprice * (1 - l_discount)) AS revenue, count(*) AS cnt " +
       "FROM lineitem GROUP BY 1, 2"
     s"SELECT l_returnflag, l_linestatus, ${r6sql("sum_qty")} AS sum_qty, " +
       s"${r6sql("revenue")} AS revenue, cnt FROM ($inner) ORDER BY 1, 2"
-  }
+  })
 
   // ------------------------------------------------------------------- window family
 
-  private val qCountOver = eventFeatures(Seq("count_over_user_id"),
-    _.withCount(overColumnsCombinations = Seq(Seq("user_id"))))
-  private val qCountOverSql =
+  private val qCountOver = Gate(eventFeatures(Seq("count_over_user_id"),
+    _.withCount(overColumnsCombinations = Seq(Seq("user_id")))), oracleSql =
     "SELECT event_id, count(*) OVER (PARTITION BY user_id) AS count_over_user_id " +
-      "FROM events ORDER BY event_id"
+      "FROM events ORDER BY event_id")
 
-  private val qCumCount = eventFeatures(
+  private val qCumCount = Gate(eventFeatures(
     Seq("inclusive_cum_count_over_user_id", "exclusive_cum_count_over_user_id"),
     p => p.withCount(overColumnsCombinations = Seq(Seq("user_id")), cumulative = Cum.Inclusive)
-      .withCount(overColumnsCombinations = Seq(Seq("user_id")), cumulative = Cum.Exclusive))
-  private val qCumCountSql =
+      .withCount(overColumnsCombinations = Seq(Seq("user_id")), cumulative = Cum.Exclusive)), oracleSql =
     "SELECT event_id, row_number() OVER w AS inclusive_cum_count_over_user_id, " +
       "row_number() OVER w - 1 AS exclusive_cum_count_over_user_id " +
-      "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id) ORDER BY event_id"
+      "FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id) ORDER BY event_id")
 
-  private val qCumSum = eventFeatures(Seq("value_inclusive_cum_sum_over_user_id"),
+  private val qCumSum = Gate(eventFeatures(Seq("value_inclusive_cum_sum_over_user_id"),
     _.withArithmeticAggregation("value", Seq(ops.Agg.Sum),
       overColumnsCombinations = Seq(Seq("user_id")), cumulative = Cum.Inclusive),
-    roundCols = Set("value_inclusive_cum_sum_over_user_id"))
-  private val qCumSumSql = eventOracle(
+    roundCols = Set("value_inclusive_cum_sum_over_user_id")), oracleSql = eventOracle(
     "SELECT event_id, coalesce(sum(value) OVER (PARTITION BY user_id ORDER BY ts, event_id " +
       "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0) AS value_inclusive_cum_sum_over_user_id FROM events",
-    Seq("value_inclusive_cum_sum_over_user_id"), Set("value_inclusive_cum_sum_over_user_id"))
+    Seq("value_inclusive_cum_sum_over_user_id"), Set("value_inclusive_cum_sum_over_user_id")))
 
-  private val qLag = eventFeatures(Seq("value_lagged_1_over_user_id"),
-    _.withLagged("value", Seq(1), overColumnsCombinations = Seq(Seq("user_id"))))
-  private val qLagSql =
+  private val qLag = Gate(eventFeatures(Seq("value_lagged_1_over_user_id"),
+    _.withLagged("value", Seq(1), overColumnsCombinations = Seq(Seq("user_id")))), oracleSql =
     "SELECT event_id, lag(value, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) " +
-      "AS value_lagged_1_over_user_id FROM events ORDER BY event_id"
+      "AS value_lagged_1_over_user_id FROM events ORDER BY event_id")
 
-  private val qFirstValue = eventFeatures(Seq("value_first_value_where_is_view_over_user_id"),
+  private val qFirstValue = Gate(eventFeatures(Seq("value_first_value_where_is_view_over_user_id"),
     _.withFirstValue("value", overColumnsCombinations = Seq(Seq("user_id")),
-      filteringCondition = Some(Cond("is_view", col("event_type") === "view"))))
-  private val qFirstValueSql =
+      filteringCondition = Some(Cond("is_view", col("event_type") === "view")))), oracleSql =
     "SELECT event_id, first_value(CASE WHEN event_type = 'view' THEN value END IGNORE NULLS) " +
       "OVER (PARTITION BY user_id ORDER BY ts, event_id " +
       "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) " +
-      "AS value_first_value_where_is_view_over_user_id FROM events ORDER BY event_id"
+      "AS value_first_value_where_is_view_over_user_id FROM events ORDER BY event_id")
 
   /** Mode with the reference's largest-value tie-break. */
-  private val qMode = eventFeatures(Seq("event_type_mode_over_user_id"),
-    _.withMode("event_type", overColumnsCombinations = Seq(Seq("user_id"))))
-  private val qModeSql =
+  private val qMode = Gate(eventFeatures(Seq("event_type_mode_over_user_id"),
+    _.withMode("event_type", overColumnsCombinations = Seq(Seq("user_id")))), oracleSql =
     "WITH cnt AS (SELECT user_id, event_type, count(*) AS c FROM events GROUP BY 1, 2), " +
       "w AS (SELECT user_id, event_type FROM cnt " +
       "QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY c DESC, event_type DESC) = 1) " +
       "SELECT e.event_id, w.event_type AS event_type_mode_over_user_id " +
-      "FROM events e JOIN w USING (user_id) ORDER BY e.event_id"
+      "FROM events e JOIN w USING (user_id) ORDER BY e.event_id")
 
-  private val qNumUnique = eventFeatures(
+  private val qNumUnique = Gate(eventFeatures(
     Seq("event_type_num_unique_over_user_id", "event_type_inclusive_cum_num_unique_over_user_id"),
     p => p.withNumUnique("event_type", overColumnsCombinations = Seq(Seq("user_id")))
       .withNumUnique("event_type", overColumnsCombinations = Seq(Seq("user_id")),
         cumulative = Cum.Inclusive),
     longCols = Set("event_type_num_unique_over_user_id",
-      "event_type_inclusive_cum_num_unique_over_user_id"))
-  // count(DISTINCT) ignores NULLs while the engine counts NULL as a value (Polars
-  // n_unique), hence the max(IS NULL) term; ::BIGINT because DuckDB's sum(INTEGER)
-  // is HUGEINT and the gate hashes typed values.
-  private val qNumUniqueSql =
+      "event_type_inclusive_cum_num_unique_over_user_id")), oracleSql =
+    // count(DISTINCT) ignores NULLs while the engine counts NULL as a value (Polars
+    // n_unique), hence the max(IS NULL) term; ::BIGINT because DuckDB's sum(INTEGER)
+    // is HUGEINT and the gate hashes typed values.
     "WITH b AS (SELECT event_id, user_id, ts, event_type, " +
       "CASE WHEN row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id) = 1 " +
       "THEN 1 ELSE 0 END AS ifd FROM events) " +
@@ -159,52 +159,48 @@ object Queries {
       "AS event_type_num_unique_over_user_id, " +
       "(sum(ifd) OVER (PARTITION BY user_id ORDER BY ts, event_id " +
       "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))::BIGINT " +
-      "AS event_type_inclusive_cum_num_unique_over_user_id FROM b ORDER BY event_id"
+      "AS event_type_inclusive_cum_num_unique_over_user_id FROM b ORDER BY event_id")
 
-  private val qEntropy = eventFeatures(Seq("event_type_by_user_id_entropy"),
+  private val qEntropy = Gate(eventFeatures(Seq("event_type_by_user_id_entropy"),
     _.withEntityEntropy("user_id", "event_type"),
-    roundCols = Set("event_type_by_user_id_entropy"))
-  private val qEntropySql = eventOracle(
+    roundCols = Set("event_type_by_user_id_entropy")), oracleSql = eventOracle(
     "WITH c AS (SELECT user_id, event_type, count(*)::DOUBLE AS c FROM events GROUP BY 1, 2), " +
       "h AS (SELECT user_id, -sum((c / n) * log2(c / n)) AS h FROM " +
       "(SELECT user_id, c, sum(c) OVER (PARTITION BY user_id) AS n FROM c) GROUP BY 1) " +
       "SELECT e.event_id, h.h AS event_type_by_user_id_entropy FROM events e JOIN h USING (user_id)",
-    Seq("event_type_by_user_id_entropy"), Set("event_type_by_user_id_entropy"))
+    Seq("event_type_by_user_id_entropy"), Set("event_type_by_user_id_entropy")))
 
-  private val qPmi = eventFeatures(Seq("user_id_event_type_pmi"),
+  private val qPmi = Gate(eventFeatures(Seq("user_id_event_type_pmi"),
     _.withPointwiseMutualInformation("user_id", "event_type"),
-    roundCols = Set("user_id_event_type_pmi"))
-  private val qPmiSql = eventOracle(
+    roundCols = Set("user_id_event_type_pmi")), oracleSql = eventOracle(
     "SELECT event_id, log2(((count(*) OVER (PARTITION BY user_id, event_type))::DOUBLE / (count(*) OVER ())::DOUBLE) / " +
       "(((count(*) OVER (PARTITION BY user_id))::DOUBLE / (count(*) OVER ())::DOUBLE) * " +
       "((count(*) OVER (PARTITION BY event_type))::DOUBLE / (count(*) OVER ())::DOUBLE))) " +
       "AS user_id_event_type_pmi FROM events",
-    Seq("user_id_event_type_pmi"), Set("user_id_event_type_pmi"))
+    Seq("user_id_event_type_pmi"), Set("user_id_event_type_pmi")))
 
-  private val qRolling = eventFeatures(
+  private val qRolling = Gate(eventFeatures(
     Seq("count_in_the_last_2d_over_user_id", "value_sum_in_the_last_1h_over_user_id"),
     p => p.withCount(overColumnsCombinations = Seq(Seq("user_id")),
         timeWindows = Seq("2d"), indexColumnName = Some("ts"))
       .withArithmeticAggregation("value", Seq(ops.Agg.Sum),
         overColumnsCombinations = Seq(Seq("user_id")),
         timeWindows = Seq("1h"), indexColumnName = Some("ts")),
-    roundCols = Set("value_sum_in_the_last_1h_over_user_id"))
-  private val qRollingSql = eventOracle(
+    roundCols = Set("value_sum_in_the_last_1h_over_user_id")), oracleSql = eventOracle(
     "SELECT event_id, count(*) OVER (PARTITION BY user_id ORDER BY floor(epoch(ts))::BIGINT " +
       "RANGE BETWEEN 172799 PRECEDING AND CURRENT ROW) AS count_in_the_last_2d_over_user_id, " +
       "coalesce(sum(value) OVER (PARTITION BY user_id ORDER BY floor(epoch(ts))::BIGINT " +
       "RANGE BETWEEN 3599 PRECEDING AND CURRENT ROW), 0) AS value_sum_in_the_last_1h_over_user_id FROM events",
     Seq("count_in_the_last_2d_over_user_id", "value_sum_in_the_last_1h_over_user_id"),
-    Set("value_sum_in_the_last_1h_over_user_id"))
+    Set("value_sum_in_the_last_1h_over_user_id")))
 
-  private val qMinMaxGroup = eventFeatures(
+  private val qMinMaxGroup = Gate(eventFeatures(
     Seq("value_min_over_user_id", "value_max_over_user_id", "value_mean_over_user_id",
       "value_std_over_user_id"),
     _.withArithmeticAggregation("value",
       Seq(ops.Agg.Min, ops.Agg.Max, ops.Agg.Mean, ops.Agg.Std),
       overColumnsCombinations = Seq(Seq("user_id"))),
-    roundCols = Set("value_mean_over_user_id", "value_std_over_user_id"))
-  private val qMinMaxGroupSql = eventOracle(
+    roundCols = Set("value_mean_over_user_id", "value_std_over_user_id")), oracleSql = eventOracle(
     "SELECT event_id, min(value) OVER w AS value_min_over_user_id, " +
       "max(value) OVER w AS value_max_over_user_id, " +
       "coalesce(sum(value) OVER w, 0) / count(*) OVER w AS value_mean_over_user_id, " +
@@ -212,14 +208,13 @@ object Queries {
       "FROM events WINDOW w AS (PARTITION BY user_id)",
     Seq("value_min_over_user_id", "value_max_over_user_id", "value_mean_over_user_id",
       "value_std_over_user_id"),
-    Set("value_mean_over_user_id", "value_std_over_user_id"))
+    Set("value_mean_over_user_id", "value_std_over_user_id")))
 
   /** The reference's running-std quirk in SQL: sqrt(Σ_{j≤i}(x_j − runningMean_j)²). */
-  private val qCumStd = eventFeatures(Seq("value_inclusive_cum_std_over_user_id"),
+  private val qCumStd = Gate(eventFeatures(Seq("value_inclusive_cum_std_over_user_id"),
     _.withArithmeticAggregation("value", Seq(ops.Agg.Std),
       overColumnsCombinations = Seq(Seq("user_id")), cumulative = Cum.Inclusive),
-    roundCols = Set("value_inclusive_cum_std_over_user_id"))
-  private val qCumStdSql = eventOracle(
+    roundCols = Set("value_inclusive_cum_std_over_user_id")), oracleSql = eventOracle(
     "WITH m AS (SELECT event_id, user_id, ts, value, " +
       "coalesce(sum(value) OVER w, 0) / row_number() OVER wo AS rm FROM events " +
       "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), " +
@@ -227,32 +222,30 @@ object Queries {
       "SELECT event_id, sqrt(coalesce(sum((value - rm) * (value - rm)) OVER " +
       "(PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0)) " +
       "AS value_inclusive_cum_std_over_user_id FROM m",
-    Seq("value_inclusive_cum_std_over_user_id"), Set("value_inclusive_cum_std_over_user_id"))
+    Seq("value_inclusive_cum_std_over_user_id"), Set("value_inclusive_cum_std_over_user_id")))
 
-  private val qQuantile = eventFeatures(
+  private val qQuantile = Gate(eventFeatures(
     Seq("value_quantile_25_over_user_id", "value_median_over_user_id"),
     _.withArithmeticAggregation("value", Seq(ops.Agg.Quantile, ops.Agg.Median),
       overColumnsCombinations = Seq(Seq("user_id")), quantiles = Seq(0.25)),
-    roundCols = Set("value_quantile_25_over_user_id", "value_median_over_user_id"))
-  private val qQuantileSql = eventOracle(
+    roundCols = Set("value_quantile_25_over_user_id", "value_median_over_user_id")), oracleSql = eventOracle(
     "SELECT event_id, quantile_cont(value, 0.25) OVER (PARTITION BY user_id) AS value_quantile_25_over_user_id, " +
       "quantile_cont(value, 0.5) OVER (PARTITION BY user_id) AS value_median_over_user_id FROM events",
     Seq("value_quantile_25_over_user_id", "value_median_over_user_id"),
-    Set("value_quantile_25_over_user_id", "value_median_over_user_id"))
+    Set("value_quantile_25_over_user_id", "value_median_over_user_id")))
 
-  private val qSeasonal = eventFeatures(
+  private val qSeasonal = Gate(eventFeatures(
     Seq("ts_hour_of_day", "ts_day_of_week", "ts_month_of_year", "ts_day_of_week_angular_sin"),
     p => p.withSeasonal("ts", Seq(ops.Seasonal.HourOfDay, ops.Seasonal.DayOfWeek, ops.Seasonal.MonthOfYear))
       .withSeasonal("ts", Seq(ops.Seasonal.DayOfWeek), periodic = true),
-    roundCols = Set("ts_day_of_week_angular_sin"))
-  private val qSeasonalSql = eventOracle(
+    roundCols = Set("ts_day_of_week_angular_sin")), oracleSql = eventOracle(
     "SELECT event_id, hour(ts) AS ts_hour_of_day, isodow(ts) AS ts_day_of_week, " +
       "month(ts) AS ts_month_of_year, " +
       "sin((isodow(ts) - 1) * 2 * pi() / 7) AS ts_day_of_week_angular_sin FROM events",
     Seq("ts_hour_of_day", "ts_day_of_week", "ts_month_of_year", "ts_day_of_week_angular_sin"),
-    Set("ts_day_of_week_angular_sin"))
+    Set("ts_day_of_week_angular_sin")))
 
-  private val qScalarMath: (SparkSession, String) => DataFrame = (spark, dir) => {
+  private val qScalarMath = Gate((spark, dir) => {
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
     val schema = FeatureSchema(
       ColumnSpec.numeric("l_orderkey", ColRole.Identifier),
@@ -274,8 +267,7 @@ object Queries {
     out.select(col("l_orderkey") +: col("l_linenumber") +:
       (rc.map(n => r6(col(n)).as(n)) :+ col("l_quantity_greater_than_l_discount")): _*)
       .orderBy("l_orderkey", "l_linenumber")
-  }
-  private val qScalarMathSql = {
+  }, oracleSql = {
     val inner = "SELECT l_orderkey, l_linenumber, pow(l_quantity, 2) AS l_quantity_pow_2, " +
       "ln(l_extendedprice) AS l_extendedprice_ln, log10(l_extendedprice) AS l_extendedprice_log10, " +
       "sin(l_quantity) AS l_quantity_sin, cos(l_quantity) AS l_quantity_cos, " +
@@ -285,17 +277,16 @@ object Queries {
       "l_quantity_sin", "l_quantity_cos", "l_extendedprice_divide_l_quantity")
     s"SELECT l_orderkey, l_linenumber, ${rc.map(n => s"${r6sql(n)} AS $n").mkString(", ")}, " +
       s"l_quantity_greater_than_l_discount FROM ($inner) ORDER BY l_orderkey, l_linenumber"
-  }
+  })
 
-  private val qScaling = eventFeatures(
+  private val qScaling = Gate(eventFeatures(
     Seq("value_standard_scaled", "value_minmax_scaled"),
     _.withScaling("value", Seq(ops.Scaling.Standard, ops.Scaling.MinMax)),
-    roundCols = Set("value_standard_scaled", "value_minmax_scaled"))
-  private val qScalingSql = eventOracle(
+    roundCols = Set("value_standard_scaled", "value_minmax_scaled")), oracleSql = eventOracle(
     "SELECT event_id, (value - avg(value) OVER ()) / stddev_samp(value) OVER () AS value_standard_scaled, " +
       "(value - min(value) OVER ()) / (max(value) OVER () - min(value) OVER ()) AS value_minmax_scaled FROM events",
     Seq("value_standard_scaled", "value_minmax_scaled"),
-    Set("value_standard_scaled", "value_minmax_scaled"))
+    Set("value_standard_scaled", "value_minmax_scaled")))
 
   // ------------------------------------------------------------- web-scale operators
 
@@ -317,25 +308,23 @@ object Queries {
       col("o_orderdate").cast("timestamp").cast("long").as("matched_epoch"),
       col("o_orderkey")).orderBy("event_id")
   }
-  private val qAsof: (SparkSession, String) => DataFrame = (s, d) => asofResult(s, d, None)
-  private val qAsofBucketed: (SparkSession, String) => DataFrame =
-    (s, d) => asofResult(s, d, Some(7 * 86400L))
-  private val qAsofSql =
+  private val asofSql =
     "WITH o AS (SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey FROM orders GROUP BY 1, 2) " +
       "SELECT e.event_id, floor(epoch(o.o_orderdate))::BIGINT AS matched_epoch, o.o_orderkey " +
       "FROM events e ASOF LEFT JOIN o ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate " +
       "ORDER BY e.event_id"
+  private val qAsof = Gate((s, d) => asofResult(s, d, None), asofSql)
+  private val qAsofBucketed = Gate((s, d) => asofResult(s, d, Some(7 * 86400L)), asofSql)
 
-  private val qSessionize: (SparkSession, String) => DataFrame = (spark, dir) => {
+  private val qSessionize = Gate((spark, dir) => {
     val events = spark.read.parquet(s"$dir/events.parquet").select("event_id", "ts", "user_id")
     graft.web.Sessionize.withSessionIds(events, Seq("user_id"), "ts", 3600L,
         orderBy = eventOrder)
       .select(col("event_id"), col("session_id"), col("session_event_idx"), col("session_gap_seconds"))
       .orderBy("event_id")
-  }
-  // (ts, event_id) tie-break in every window so duplicate timestamps stay
-  // deterministic; session_id's sum(INTEGER) is HUGEINT in DuckDB → ::BIGINT
-  private val qSessionizeSql =
+  }, oracleSql =
+    // (ts, event_id) tie-break in every window so duplicate timestamps stay
+    // deterministic; session_id's sum(INTEGER) is HUGEINT in DuckDB → ::BIGINT
     "WITH g AS (SELECT event_id, user_id, ts, " +
       "floor(epoch(ts))::BIGINT - floor(epoch(lag(ts, 1) OVER w))::BIGINT AS session_gap_seconds, " +
       "CASE WHEN floor(epoch(ts))::BIGINT - floor(epoch(lag(ts, 1) OVER w))::BIGINT IS NULL " +
@@ -345,17 +334,16 @@ object Queries {
       "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1)::BIGINT AS session_id FROM g) " +
       "SELECT event_id, session_id, " +
       "(row_number() OVER (PARTITION BY user_id, session_id ORDER BY ts, event_id) - 1)::BIGINT AS session_event_idx, " +
-      "session_gap_seconds FROM s ORDER BY event_id"
+      "session_gap_seconds FROM s ORDER BY event_id")
 
-  private val qSessionStats: (SparkSession, String) => DataFrame = (spark, dir) => {
+  private val qSessionStats = Gate((spark, dir) => {
     val events = spark.read.parquet(s"$dir/events.parquet").select("event_id", "ts", "user_id")
     graft.web.Sessionize.sessionStats(events, Seq("user_id"), "ts", 3600L,
         orderBy = eventOrder)
       .select(col("user_id"), col("session_id"), col("session_num_events"),
         col("session_duration_seconds"))
       .orderBy("user_id", "session_id")
-  }
-  private val qSessionStatsSql =
+  }, oracleSql =
     "WITH g AS (SELECT user_id, ts, CASE WHEN floor(epoch(ts))::BIGINT - floor(epoch(lag(ts, 1) " +
       "OVER (PARTITION BY user_id ORDER BY ts, event_id)))::BIGINT IS NULL OR " +
       "floor(epoch(ts))::BIGINT - floor(epoch(lag(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id)))::BIGINT > 3600 " +
@@ -364,7 +352,7 @@ object Queries {
       "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1)::BIGINT AS session_id FROM g) " +
       "SELECT user_id, session_id, count(*) AS session_num_events, " +
       "max(floor(epoch(ts))::BIGINT) - min(floor(epoch(ts))::BIGINT) AS session_duration_seconds " +
-      "FROM s GROUP BY 1, 2 ORDER BY 1, 2"
+      "FROM s GROUP BY 1, 2 ORDER BY 1, 2")
 
   private def asofVariant(spark: SparkSession, dir: String, strict: Boolean,
       tolerance: Option[Long]): DataFrame = {
@@ -380,23 +368,21 @@ object Queries {
         col("o_orderkey")).orderBy("event_id")
   }
 
-  private val qAsofStrict: (SparkSession, String) => DataFrame =
-    (s, d) => asofVariant(s, d, strict = true, tolerance = None)
-  private val qAsofStrictSql =
+  private val qAsofStrict = Gate(
+    (s, d) => asofVariant(s, d, strict = true, tolerance = None), oracleSql =
     "WITH o AS (SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey FROM orders GROUP BY 1, 2) " +
       "SELECT e.event_id, floor(epoch(o.o_orderdate))::BIGINT AS matched_epoch, o.o_orderkey " +
       "FROM events e ASOF LEFT JOIN o ON e.user_id = o.o_custkey AND e.ts > o.o_orderdate " +
-      "ORDER BY e.event_id"
+      "ORDER BY e.event_id")
 
-  private val qAsofTolerance: (SparkSession, String) => DataFrame =
-    (s, d) => asofVariant(s, d, strict = false, tolerance = Some(30L * 86400L))
-  private val qAsofToleranceSql =
+  private val qAsofTolerance = Gate(
+    (s, d) => asofVariant(s, d, strict = false, tolerance = Some(30L * 86400L)), oracleSql =
     "WITH o AS (SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey FROM orders GROUP BY 1, 2), " +
       "j AS (SELECT e.event_id, o.o_orderdate, o.o_orderkey, " +
       "floor(epoch(e.ts))::BIGINT - floor(epoch(o.o_orderdate))::BIGINT AS age " +
       "FROM events e ASOF LEFT JOIN o ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate) " +
       "SELECT event_id, CASE WHEN age <= 2592000 THEN floor(epoch(o_orderdate))::BIGINT END AS matched_epoch, " +
-      "CASE WHEN age <= 2592000 THEN o_orderkey END AS o_orderkey FROM j ORDER BY event_id"
+      "CASE WHEN age <= 2592000 THEN o_orderkey END AS o_orderkey FROM j ORDER BY event_id")
 
   /** Keyed range join: every OTHER event of the same user within the trailing 24h —
     * the bucketed equality formulation vs DuckDB's native inequality join. A self-join
@@ -405,7 +391,7 @@ object Queries {
     * the events span ~30 days, so ~30 one-day buckets and the ≤2-bucket left explode
     * all carry rows (≈22k matched pairs at sf0.01).
     */
-  private val qRangeJoin: (SparkSession, String) => DataFrame = (spark, dir) => {
+  private val qRangeJoin = Gate((spark, dir) => {
     val events = spark.read.parquet(s"$dir/events.parquet").select("event_id", "ts", "user_id")
     val others = events.select(col("event_id").as("o_event_id"), col("ts"), col("user_id"))
     graft.web.RangeJoin.byKeyAndTime(events, others, Seq("user_id"), "ts",
@@ -414,17 +400,16 @@ object Queries {
       .where(col("o_event_id") =!= col("event_id"))
       .select(col("event_id"), col("o_event_id"))
       .orderBy("event_id", "o_event_id")
-  }
-  private val qRangeJoinSql =
+  }, oracleSql =
     "SELECT e.event_id, o.event_id AS o_event_id FROM events e JOIN events o ON e.user_id = o.user_id " +
       "AND o.event_id != e.event_id AND floor(epoch(o.ts))::BIGINT " +
       "BETWEEN floor(epoch(e.ts))::BIGINT - 86400 AND floor(epoch(e.ts))::BIGINT " +
-      "ORDER BY 1, 2"
+      "ORDER BY 1, 2")
 
   /** URL canonicalization on planted messy urls (uppercase authority, tracking
     * params, fragments, trailing slashes) built identically in both engines.
     */
-  private val qUrlCanon: (SparkSession, String) => DataFrame = (spark, dir) => {
+  private val qUrlCanon = Gate((spark, dir) => {
     val d = spark.read.parquet(s"$dir/events.parquet")
       .select("event_id").where(col("event_id") < 2000)
     val messy1 = concat(lit("HTTPS://Example.COM/Path"), col("event_id"),
@@ -435,8 +420,7 @@ object Queries {
         graft.web.UrlOps.canonicalizeUrl(messy1).as("canon1"),
         graft.web.UrlOps.canonicalizeUrl(messy2).as("canon2"))
       .orderBy("event_id")
-  }
-  private val qUrlCanonSql = {
+  }, oracleSql = {
     // the same four rules in DuckDB, applied to the same planted strings
     def canon(raw: String): String = {
       val noFrag = s"regexp_replace($raw, '#.*$$', '')"
@@ -452,13 +436,12 @@ object Queries {
     val m2 = "'http://WWW.Site.ORG:8080/a/' || event_id || '/?utm_campaign=c'"
     s"SELECT event_id, ${canon(m1)} AS canon1, ${canon(m2)} AS canon2 " +
       "FROM events WHERE event_id < 2000 ORDER BY event_id"
-  }
+  })
 
   /** Inclusive cumulative entity entropy — the incremental identity in both engines. */
-  private val qCumEntropy = eventFeatures(Seq("event_type_by_user_id_inclusive_cum_entropy"),
+  private val qCumEntropy = Gate(eventFeatures(Seq("event_type_by_user_id_inclusive_cum_entropy"),
     _.withEntityEntropy("user_id", "event_type", cumulative = Cum.Inclusive),
-    roundCols = Set("event_type_by_user_id_inclusive_cum_entropy"))
-  private val qCumEntropySql = eventOracle(
+    roundCols = Set("event_type_by_user_id_inclusive_cum_entropy")), oracleSql = eventOracle(
     "WITH b AS (SELECT event_id, user_id, ts, " +
       "row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id)::DOUBLE AS c, " +
       "row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)::DOUBLE AS n FROM events), " +
@@ -467,37 +450,35 @@ object Queries {
       "SELECT event_id, log2(n) - sum(delta) OVER (PARTITION BY user_id ORDER BY ts, event_id " +
       "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / n AS event_type_by_user_id_inclusive_cum_entropy FROM t",
     Seq("event_type_by_user_id_inclusive_cum_entropy"),
-    Set("event_type_by_user_id_inclusive_cum_entropy"))
+    Set("event_type_by_user_id_inclusive_cum_entropy")))
 
   /** Rolling PMI over a 7-day window — counts lower to range frames in both engines. */
-  private val qRollingPmi = eventFeatures(Seq("user_id_event_type_pmi_in_the_last_7d"),
+  private val qRollingPmi = Gate(eventFeatures(Seq("user_id_event_type_pmi_in_the_last_7d"),
     _.withPointwiseMutualInformation("user_id", "event_type",
       timeWindows = Seq("7d"), indexColumnName = Some("ts")),
-    roundCols = Set("user_id_event_type_pmi_in_the_last_7d"))
-  private val qRollingPmiSql = eventOracle(
+    roundCols = Set("user_id_event_type_pmi_in_the_last_7d")), oracleSql = eventOracle(
     "WITH b AS (SELECT event_id, " +
       "count(*) OVER (PARTITION BY user_id ORDER BY floor(epoch(ts))::BIGINT RANGE BETWEEN 604799 PRECEDING AND CURRENT ROW)::DOUBLE AS ca, " +
       "count(*) OVER (PARTITION BY event_type ORDER BY floor(epoch(ts))::BIGINT RANGE BETWEEN 604799 PRECEDING AND CURRENT ROW)::DOUBLE AS cb, " +
       "count(*) OVER (PARTITION BY user_id, event_type ORDER BY floor(epoch(ts))::BIGINT RANGE BETWEEN 604799 PRECEDING AND CURRENT ROW)::DOUBLE AS cab, " +
       "count(*) OVER (ORDER BY floor(epoch(ts))::BIGINT RANGE BETWEEN 604799 PRECEDING AND CURRENT ROW)::DOUBLE AS n FROM events) " +
       "SELECT event_id, log2((cab / n) / ((ca / n) * (cb / n))) AS user_id_event_type_pmi_in_the_last_7d FROM b",
-    Seq("user_id_event_type_pmi_in_the_last_7d"), Set("user_id_event_type_pmi_in_the_last_7d"))
+    Seq("user_id_event_type_pmi_in_the_last_7d"), Set("user_id_event_type_pmi_in_the_last_7d")))
 
   /** Grouped argmin/argmax: value of the arg column at the group's extreme, first row
     * (in event-time order) winning ties.
     */
-  private val qArgExtreme = eventFeatures(
+  private val qArgExtreme = Gate(eventFeatures(
     Seq("argmin_of_value_by_event_type_over_user_id", "argmax_of_value_by_event_type_over_user_id"),
     p => p.withArgmin("value", "event_type", overColumnsCombinations = Seq(Seq("user_id")))
-      .withArgmax("value", "event_type", overColumnsCombinations = Seq(Seq("user_id"))))
-  private val qArgExtremeSql = eventOracle(
+      .withArgmax("value", "event_type", overColumnsCombinations = Seq(Seq("user_id")))), oracleSql = eventOracle(
     "SELECT event_id, " +
       "first_value(event_type) OVER (PARTITION BY user_id ORDER BY value ASC NULLS LAST, ts, event_id " +
       "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS argmin_of_value_by_event_type_over_user_id, " +
       "first_value(event_type) OVER (PARTITION BY user_id ORDER BY value DESC NULLS LAST, ts, event_id " +
       "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS argmax_of_value_by_event_type_over_user_id " +
       "FROM events",
-    Seq("argmin_of_value_by_event_type_over_user_id", "argmax_of_value_by_event_type_over_user_id"))
+    Seq("argmin_of_value_by_event_type_over_user_id", "argmax_of_value_by_event_type_over_user_id")))
 
   // ------------------------------------------------------------- feature selection
 
@@ -532,7 +513,7 @@ object Queries {
       "event_type AS f_etype, ((event_id % 2) = 0) AS f_parity, " +
       "(user_id % 3) AS f_ubucket FROM events"
 
-  private def qSelect(method: graft.selection.SelectionMethod,
+  private def qSelect(method: SelectionMethod,
       feats: Seq[String]): (SparkSession, String) => DataFrame = (spark, dir) => {
     import graft.selection.FeatureSelector
     val report = FeatureSelector.getReport(selectorDs(spark, dir),
@@ -566,14 +547,13 @@ object Queries {
       s"SELECT feature, ${r6sql("stat")} AS stat, rank FROM r ORDER BY feature"
 
   private val corrFeats = Seq("f_hour", "f_loge", "f_parity", "f_umod")
-  private val qSelectCorr = qSelect(graft.selection.SelectionMethod.Correlation, corrFeats)
-  private val qSelectCorrSql = selectorRankSql(corrFeats.map { f =>
-    val fd = if (f == "f_parity") s"$f::INT::DOUBLE" else f
-    s"SELECT '$f' AS feature, abs(corr($fd, l::INT::DOUBLE)) AS stat FROM b"
-  }.mkString(" UNION ALL "))
+  private val qSelectCorr = Gate(qSelect(SelectionMethod.Correlation, corrFeats),
+    oracleSql = selectorRankSql(corrFeats.map { f =>
+      val fd = if (f == "f_parity") s"$f::INT::DOUBLE" else f
+      s"SELECT '$f' AS feature, abs(corr($fd, l::INT::DOUBLE)) AS stat FROM b"
+    }.mkString(" UNION ALL ")))
 
-  private val qSelectTtest = qSelect(graft.selection.SelectionMethod.TTest, corrFeats)
-  private val qSelectTtestSql = {
+  private val qSelectTtest = Gate(qSelect(SelectionMethod.TTest, corrFeats), oracleSql = {
     val perClass = corrFeats.flatMap { f =>
       val fd = if (f == "f_parity") s"$f::INT::DOUBLE" else f
       Seq(s"avg($fd) FILTER (WHERE l) AS mt_$f", s"var_samp($fd) FILTER (WHERE l) AS vt_$f",
@@ -584,11 +564,10 @@ object Queries {
       .mkString(" UNION ALL ")
     // Welch statistic from one per-class aggregation pass, like the engine
     selectorRankSql(statRows, preCtes = s"s AS (SELECT ${perClass.mkString(", ")} FROM b), ")
-  }
+  })
 
   private val chi2Feats = Seq("f_etype", "f_parity", "f_ubucket")
-  private val qSelectChi2 = qSelect(graft.selection.SelectionMethod.ChiSquared, chi2Feats)
-  private val qSelectChi2Sql = {
+  private val qSelectChi2 = Gate(qSelect(SelectionMethod.ChiSquared, chi2Feats), oracleSql = {
     // melt → one contingency pass → χ² = Σ (o−e)²/e over the FULL row×col cross
     // (zero-observed cells contribute e), mirroring the engine's single-groupBy fold
     val melted = chi2Feats.map(f =>
@@ -604,31 +583,30 @@ object Queries {
     selectorRankSql(
       "SELECT feature, sum((o - e) * (o - e) / e) AS stat FROM cells WHERE e > 0 GROUP BY 1",
       preCtes = contingency)
-  }
+  })
 
   // -------------------------------------------------- r3 gates for golden-only items
 
   /** Grouped z-score (raw value, group stats — the reference's filtered-stats rule).
     * IEEE division is emulated in the oracle (DuckDB's / yields NULL on zero).
     */
-  private val qZscore = eventFeatures(Seq("value_z_score_over_user_id"),
+  private val qZscore = Gate(eventFeatures(Seq("value_z_score_over_user_id"),
     _.withArithmeticAggregation("value", Seq(ops.Agg.Zscore),
       overColumnsCombinations = Seq(Seq("user_id"))),
-    roundCols = Set("value_z_score_over_user_id"))
-  private val qZscoreSql = eventOracle(
+    roundCols = Set("value_z_score_over_user_id")), oracleSql = eventOracle(
     "WITH b AS (SELECT event_id, value, " +
       "value - sum(value) OVER w / count(*) OVER w AS num, stddev_samp(value) OVER w AS std " +
       "FROM events WINDOW w AS (PARTITION BY user_id)) " +
       "SELECT event_id, CASE WHEN std IS NULL OR isnan(num) THEN 'NaN'::DOUBLE " +
       "WHEN std = 0 THEN (CASE WHEN num = 0 THEN 'NaN'::DOUBLE WHEN num > 0 THEN 'Infinity'::DOUBLE " +
       "ELSE '-Infinity'::DOUBLE END) ELSE num / std END AS value_z_score_over_user_id FROM b",
-    Seq("value_z_score_over_user_id"), Set("value_z_score_over_user_id"))
+    Seq("value_z_score_over_user_id"), Set("value_z_score_over_user_id")))
 
   /** Time diff in truncating s/h/d units over a derived second timestamp (ts +
     * event_id % 90000 s, built identically in both engines). Hour/day truncation is
     * toward zero (Spark double→long cast) = DuckDB trunc on these positive diffs.
     */
-  private val qTimeDiff: (SparkSession, String) => DataFrame = (spark, dir) => {
+  private val qTimeDiff = Gate((spark, dir) => {
     val df = spark.read.parquet(s"$dir/events.parquet")
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
         (col("ts").cast("timestamp").cast("long") + col("event_id") % 90000)
@@ -642,19 +620,18 @@ object Queries {
       case (p, u) => p.withTimeDiff("ts2", "ts", unit = u)
     }.toDF()
     out.select((col("event_id") +: names.map(col)): _*).orderBy("event_id")
-  }
-  private val qTimeDiffSql =
+  }, oracleSql =
     "WITH b AS (SELECT event_id, event_id % 90000 AS secs FROM events) " +
       "SELECT event_id, secs AS ts2_total_seconds_diff_ts, " +
       "trunc(secs::DOUBLE / 3600)::BIGINT AS ts2_total_hours_diff_ts, " +
       "trunc(secs::DOUBLE / 86400)::BIGINT AS ts2_total_days_diff_ts " +
-      "FROM b ORDER BY event_id"
+      "FROM b ORDER BY event_id")
 
   /** Text-extraction family: length, email domain (null on no-match — planted on
     * every third doc only), and count-matches on a char-class (codegen'd fast path),
     * a punctuation class, and a real regex (consecutive digits).
     */
-  private val qTextFeatures: (SparkSession, String) => DataFrame = (spark, dir) => {
+  private val qTextFeatures = Gate((spark, dir) => {
     val base = spark.read.parquet(s"$dir/documents.parquet")
       .where(col("doc_id") < 500)
     val t = when(col("doc_id") % 3 === 0,
@@ -676,8 +653,7 @@ object Queries {
         col("t_count_punctuation").cast("long").as("t_count_punctuation"),
         col("t_count_consecutive_digits").cast("long").as("t_count_consecutive_digits"))
       .orderBy("doc_id")
-  }
-  private val qTextFeaturesSql =
+  }, oracleSql =
     "WITH d AS (SELECT doc_id, CASE WHEN doc_id % 3 = 0 " +
       "THEN substr(text, 1, 20) || ' user' || doc_id || '@ex-' || doc_id || '.org' " +
       "ELSE substr(text, 1, 20) END AS t FROM documents WHERE doc_id < 500), " +
@@ -692,14 +668,14 @@ object Queries {
       """length(regexp_extract_all(t, '\d')) AS t_count_digits, """ +
       "length(regexp_extract_all(t, '[.,;:!?]')) AS t_count_punctuation, " +
       """length(regexp_extract_all(t, '\d{3,}')) AS t_count_consecutive_digits """ +
-      "FROM d LEFT JOIN ent ON ent.doc_id = d.doc_id ORDER BY d.doc_id"
+      "FROM d LEFT JOIN ent ON ent.doc_id = d.doc_id ORDER BY d.doc_id")
 
   /** GLOBAL running aggregates via the scalable prefix operator (range partition +
     * partition-local fold + broadcast offsets — graft.web.PrefixAgg) against
     * DuckDB's sequential global window. Forces several range partitions so the
     * cross-partition offset arithmetic is actually exercised at gate scale.
     */
-  private val qGlobalCum: (SparkSession, String) => DataFrame = (spark, dir) => {
+  private val qGlobalCum = Gate((spark, dir) => {
     import graft.web.PrefixAgg
     import graft.web.PrefixAgg.{Op, RunningSpec}
     val df = spark.read.parquet(s"$dir/events.parquet")
@@ -712,17 +688,16 @@ object Queries {
       .select(col("event_id"), col("cum_count"), r6(col("cum_value_sum")).as("cum_value_sum"),
         col("cum_value_min"), col("cum_value_max"))
       .orderBy("event_id")
-  }
-  private val qGlobalCumSql =
+  }, oracleSql =
     "SELECT event_id, count(*) OVER w AS cum_count, " +
       s"${r6sql("sum(value) OVER w")} AS cum_value_sum, " +
       "min(value) OVER w AS cum_value_min, max(value) OVER w AS cum_value_max " +
       "FROM events WINDOW w AS (ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) " +
-      "ORDER BY event_id"
+      "ORDER BY event_id")
 
   // ----------------------------------------------------------------------- registry
 
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val gates: Map[String, Gate] = Map(
     "q_global_cum" -> qGlobalCum,
     "q1_agg" -> q1Agg,
     "q_count_over" -> qCountOver,
@@ -742,7 +717,7 @@ object Queries {
     "q_scalar_math" -> qScalarMath,
     "q_scaling" -> qScaling,
     "q_asof" -> qAsof,
-    "q_asof_bucketed" -> qAsofBucketed,
+    "q_asof_bucketed" -> qAsofBucketed, // bucketing must not change a single match
     "q_sessionize" -> qSessionize,
     "q_session_stats" -> qSessionStats,
     "q_asof_strict" -> qAsofStrict,
@@ -757,42 +732,9 @@ object Queries {
     "q_select_chi2" -> qSelectChi2,
     "q_zscore" -> qZscore,
     "q_time_diff" -> qTimeDiff,
-    "q_text_features" -> qTextFeatures) ++ DataQueries.all
+    "q_text_features" -> qTextFeatures)
 
-  val oracles: Map[String, String] = Map(
-    "q_global_cum" -> qGlobalCumSql,
-    "q1_agg" -> q1AggSql,
-    "q_count_over" -> qCountOverSql,
-    "q_cum_count" -> qCumCountSql,
-    "q_cum_sum" -> qCumSumSql,
-    "q_lag" -> qLagSql,
-    "q_first_value" -> qFirstValueSql,
-    "q_mode" -> qModeSql,
-    "q_num_unique" -> qNumUniqueSql,
-    "q_entropy" -> qEntropySql,
-    "q_pmi" -> qPmiSql,
-    "q_rolling" -> qRollingSql,
-    "q_minmax_group" -> qMinMaxGroupSql,
-    "q_cum_std" -> qCumStdSql,
-    "q_quantile" -> qQuantileSql,
-    "q_seasonal" -> qSeasonalSql,
-    "q_scalar_math" -> qScalarMathSql,
-    "q_scaling" -> qScalingSql,
-    "q_asof" -> qAsofSql,
-    "q_asof_bucketed" -> qAsofSql,
-    "q_sessionize" -> qSessionizeSql,
-    "q_session_stats" -> qSessionStatsSql,
-    "q_asof_strict" -> qAsofStrictSql,
-    "q_asof_tolerance" -> qAsofToleranceSql,
-    "q_range_join" -> qRangeJoinSql,
-    "q_url_canon" -> qUrlCanonSql,
-    "q_cum_entropy" -> qCumEntropySql,
-    "q_rolling_pmi" -> qRollingPmiSql,
-    "q_arg_extreme" -> qArgExtremeSql,
-    "q_select_corr" -> qSelectCorrSql,
-    "q_select_ttest" -> qSelectTtestSql,
-    "q_select_chi2" -> qSelectChi2Sql,
-    "q_zscore" -> qZscoreSql,
-    "q_time_diff" -> qTimeDiffSql,
-    "q_text_features" -> qTextFeaturesSql) ++ DataQueries.oracles
+  private val allGates = gates ++ DataQueries.gates
+  val all: Map[String, (SparkSession, String) => DataFrame] = allGates.map { case (n, g) => n -> g.run }
+  val oracles: Map[String, String] = allGates.map { case (n, g) => n -> g.oracleSql }
 }

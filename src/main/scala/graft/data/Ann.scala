@@ -39,67 +39,50 @@ object Ann {
   }
 
   /** Deterministic centroid choice: the `nCentroids` corpus rows with the smallest
-    * xxhash64(id) — a seeded uniform sample without an RNG.
-    */
-  def centroids(corpus: DataFrame, idCol: String, vecCol: String, nCentroids: Int): DataFrame =
-    corpus.select(col(idCol).as("centroid_id"), col(vecCol).as("__centroid"),
-        xxhash64(col(idCol)).as("__h"))
-      .orderBy(col("__h")).limit(nCentroids).drop("__h")
-
-  /** One assignment pass: nearest centroid per corpus row.
+    * xxhash64(id) — a seeded uniform sample without an RNG — among the rows with a
+    * usable vector. A null vector or a null element nulls every cosine (`cosine(v, v)`
+    * is null exactly then), so such a row is never a centroid.
     *
-    * EAGER at plan time: runs exactly ONE `collect()` on `cents` (capped at
-    * `maxLiteralCentroids + 1` rows) to decide the path and harvest the literal
-    * vectors — pass a materialized/local centroid frame (as [[ivfTopK]] does) so the
+    * EAGER: collects the (tiny by contract) sample once into a local relation — no
+    * cache to leak in a long-lived session, no corpus re-scan when both [[assign]]
+    * and a probe join consume it.
+    */
+  def centroids(corpus: DataFrame, idCol: String, vecCol: String, nCentroids: Int): DataFrame = {
+    val sample = corpus
+      .select(col(idCol).as("centroid_id"), col(vecCol).as("__centroid"),
+        xxhash64(col(idCol)).as("__h"))
+      .where(cosine(col("__centroid"), col("__centroid")).isNotNull)
+      .orderBy(col("__h")).limit(nCentroids).drop("__h")
+    corpus.sparkSession.createDataFrame(java.util.Arrays.asList(sample.collect(): _*), sample.schema)
+  }
+
+  /** One assignment pass: nearest centroid per corpus row (max cosine, NaN largest,
+    * null cosines lose, ties → smallest id).
+    *
+    * EAGER at plan time: runs exactly ONE `collect()` on `cents` to harvest the
+    * literal vectors — pass a local centroid frame (as [[centroids]] returns) so the
     * centroid lineage is not recomputed.
     *
-    * Up to `maxLiteralCentroids` centroids, assignment is a MAP-ONLY argmax over
-    * literal vectors: no crossJoin row explosion, no shuffle-by-id window — at 10^12
-    * corpus rows the difference between a scan and a shuffle. Beyond that, one
-    * literal cosine per centroid would blow Janino's method-size limits, so large
-    * centroid sets fall back to broadcast-crossJoin + per-id window. Both paths
-    * accept any numeric array element type (float/double/int) for the centroid
-    * vector, like [[cosine]] itself.
+    * Assignment is a MAP-ONLY argmax over the literal vectors at any centroid count:
+    * one [[graft.functions.ArgMaxCosine]] kernel call per row against a shared
+    * centroid bank, whose generated code is O(1) in the centroid count. No crossJoin
+    * row explosion, no shuffle-by-id window — at 10^12 corpus rows the difference
+    * between a scan and a shuffle. The centroid id may be any integral type (the
+    * assigned `centroid_id` is a long), the centroid vector any numeric element type
+    * (float/double/int), like [[cosine]] itself; float→double is exact.
     */
-  def assign(corpus: DataFrame, cents: DataFrame, idCol: String, vecCol: String,
-      maxLiteralCentroids: Int = 128): DataFrame = {
-    val centNamed = cents.select(col("centroid_id"), col("__centroid"))
-    val cRowsCapped = centNamed.limit(maxLiteralCentroids + 1).collect()
-    require(cRowsCapped.nonEmpty, "no centroids")
-    if (cRowsCapped.length > maxLiteralCentroids) {
-      val scored = corpus.crossJoin(broadcast(centNamed))
-        .withColumn("__sim", cosine(col(vecCol), col("__centroid")))
-      val w = Window.partitionBy(col(idCol)).orderBy(col("__sim").desc, col("centroid_id").asc)
-      scored.withColumn("__rk", row_number().over(w)).where(col("__rk") === 1)
-        .drop("__rk", "__sim", "__centroid")
-    } else {
-      // read the vector generically: float→double is exact, so the literal path is
-      // bit-identical to the crossJoin path (cosine casts to double either way)
-      val cRows = cRowsCapped.map(r =>
-        (r.getLong(0), r.getSeq[Any](1).map(x => x.asInstanceOf[Number].doubleValue())))
-      if (cRows.length == 1) corpus.withColumn("centroid_id", lit(cRows.head._1))
-      else
-        // r7: one kernel call per row against a shared centroid bank instead of
-        // `greatest` over nCentroids inlined struct(cosine) expressions — the
-        // generated code is O(1) in nCentroids (the old tree grew linearly and
-        // dominated compile time at 128 centroids); winner selection reproduces
-        // the greatest-of-structs semantics bit-for-bit (max cosine, NaN
-        // largest, null cosines lose, ties → smallest id).
-        corpus.withColumn("centroid_id",
-          graft.functions.vecfns.argMaxCosine(col(vecCol),
-            cRows.map(_._1).toSeq, cRows.map(_._2).toSeq))
-    }
+  def assign(corpus: DataFrame, cents: DataFrame, vecCol: String): DataFrame = {
+    val cRows = cents.select(col("centroid_id"), col("__centroid")).collect().map(r =>
+      (r.getAs[Number](0).longValue(), r.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue())))
+    require(cRows.nonEmpty, "no centroids")
+    corpus.withColumn("centroid_id",
+      graft.functions.vecfns.argMaxCosine(col(vecCol), cRows.map(_._1).toSeq, cRows.map(_._2).toSeq))
   }
 
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       queryIdCol: String, k: Int, nCentroids: Int, nProbe: Int): DataFrame = {
-    // materialize the (tiny by contract) centroid table ONCE into a local relation:
-    // no cache to leak in a long-lived session, no corpus re-scan when both assign()
-    // and the probe join consume it
-    val centsDf = centroids(corpus, idCol, vecCol, nCentroids)
-    val cents = corpus.sparkSession.createDataFrame(
-      java.util.Arrays.asList(centsDf.collect(): _*), centsDf.schema)
-    val assigned = assign(corpus, cents, idCol, vecCol)
+    val cents = centroids(corpus, idCol, vecCol, nCentroids)
+    val assigned = assign(corpus, cents, vecCol)
 
     // per query: nProbe closest centroids
     val q = queries.select(col(queryIdCol).as("query_id"), col(vecCol).as("__qv"))

@@ -492,7 +492,7 @@ object Dedup {
     * in the same cell (same argmax, same tie-break).
     *
     * Scale shape: centroid choice is a tiny hash-ordered sample materialized once;
-    * assignment is a map-only literal argmax for ≤128 centroids (no shuffle); the
+    * assignment is a map-only literal argmax at any centroid count (no shuffle); the
     * cell self-join shuffles each side once on centroid_id, vectors carried exactly
     * once per side (the immediate cosine+filter consumes them — no re-join pass);
     * a skewed cell is split by AQE. Downstream composes like every pair source:
@@ -502,12 +502,7 @@ object Dedup {
       nCentroids: Int = 256, threshold: Double = 0.95): DataFrame = {
     require(nCentroids >= 1, s"nCentroids must be >= 1, got $nCentroids")
     val docs = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    // materialize the centroid sample into a local relation once (ivfTopK contract:
-    // assign() collects its centroid frame — don't hand it a corpus-scan lineage)
-    val centsDf = Ann.centroids(docs, "id", "v", nCentroids)
-    val cents = df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(centsDf.collect(): _*), centsDf.schema)
-    val assigned = Ann.assign(docs, cents, "id", "v")
+    val assigned = Ann.assign(docs, Ann.centroids(docs, "id", "v", nCentroids), "v")
     assigned.select(col("centroid_id"), col("id").as("idA"), col("v").as("__va"))
       .join(assigned.select(col("centroid_id"), col("id").as("idB"), col("v").as("__vb")),
         Seq("centroid_id"))
@@ -516,10 +511,6 @@ object Dedup {
       .where(col("cosine") >= threshold)
       .select(col("idA"), col("idB"), col("cosine"))
   }
-
-  /** Signed-random-projection sketch: bit i = sign(Σ_d v_d · rademacher(i, d)). */
-  def srpSketch(vec: Column, bits: Int): Column =
-    element_at(srpSketchBands(vec, bits, 1), 1)
 
   /** `bands` independent SRP keys of `bits` hyperplanes each, as an array (band b
     * uses hyperplanes [b·bits, (b+1)·bits)). One codegen'd pass over the vector —

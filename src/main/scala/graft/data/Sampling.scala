@@ -13,27 +13,10 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** What a NULL sampling key means. A raw `hashFraction(key) < rate` predicate is
-    * null for null keys, so the filter would silently drop them at EVERY rate
-    * including 1.0 — both policies below are explicit totalizations of that gap.
-    * `Keep` treats a null key as fraction 0.0 (always in at rate > 0): right when the
-    * key identifies the ROW (ids — dropping rows for having a null id is data loss).
-    * `Drop` excludes them at every rate: right when a null key means the row can't be
-    * deterministically re-selected (e.g. sampling keyed on a join column). NOTE for
-    * cross-engine reproduction (the DuckDB oracle recipe): `Keep` is
-    * `coalesce(frac, 0.0) < rate` — the other engine must apply the same coalesce.
-    */
-  sealed trait NullKeys
-  object NullKeys {
-    case object Keep extends NullKeys
-    case object Drop extends NullKeys
-  }
-
   /** Uniform [0, 1) decided by md5 of the key: the first 13 hex digits (52 bits,
     * exact in a double) over 2^52. Same formula is expressible in any engine with md5
     * (DuckDB: `('0x' || substr(md5(k::VARCHAR), 1, 13))::UBIGINT::DOUBLE / 2^52`).
-    * NULL keys hash to NULL — samplers below totalize that per their `nullKeys`
-    * policy (see [[NullKeys]]).
+    * NULL keys hash to NULL — the samplers below totalize that (see `keyFraction`).
     */
   def hashFraction(key: Column): Column =
     // one codegen'd digest per row — bit-identical to the portable formula
@@ -41,38 +24,37 @@ object Sampling {
     // kernel swap; see graft.functions.Md5Fraction for the equivalence argument)
     graft.functions.hashfns.md5Fraction(key.cast("string"))
 
-  /** Sampling decision made total per the null policy: `Keep` maps a null key to
-    * fraction 0.0 (kept at any rate > 0, dropped only at rate 0); `Drop` maps it to
-    * 1.0 (never kept — 1.0 is outside every `< rate` acceptance region since
-    * rate ≤ 1).
+  /** Sampling decision made total. A raw `hashFraction(key) < rate` predicate is
+    * null for null keys, so the filter would silently drop them at EVERY rate
+    * including 1.0. A null key counts as fraction 0.0 instead (kept at any rate > 0,
+    * dropped only at rate 0): the key identifies the ROW, and dropping rows for having
+    * a null id is data loss. NOTE for cross-engine reproduction (the DuckDB oracle
+    * recipe): this is `coalesce(frac, 0.0) < rate` — the other engine must apply the
+    * same coalesce.
     */
-  def totalHashFraction(key: Column, nullKeys: NullKeys = NullKeys.Keep): Column =
-    coalesce(hashFraction(key), lit(if (nullKeys == NullKeys.Keep) 0.0 else 1.0))
+  private def keyFraction(key: Column): Column = coalesce(hashFraction(key), lit(0.0))
 
   /** Keep ~`rate` of rows, decided by the key's hash. Deterministic: the same key is
     * always in or always out, so joins between independently-sampled tables keyed the
-    * same way stay consistent. NULL-key rows follow `nullKeys` (default Keep — see
-    * [[NullKeys]] for when to pick which).
+    * same way stay consistent. NULL-key rows are kept at any rate > 0 (`keyFraction`).
     */
-  def byHash(df: DataFrame, key: Column, rate: Double,
-      nullKeys: NullKeys = NullKeys.Keep): DataFrame = {
+  def byHash(df: DataFrame, key: Column, rate: Double): DataFrame = {
     require(rate >= 0.0 && rate <= 1.0, s"rate must be in [0,1], got $rate")
-    df.where(totalHashFraction(key, nullKeys) < rate)
+    df.where(keyFraction(key) < rate)
   }
 
   /** Per-stratum rates (e.g. downsample "en" to 5%, keep the rest): rows whose
-    * stratum is missing from `rates` use `defaultRate`. NULL-key rows follow
-    * `nullKeys`: under Keep they are kept whenever their stratum's rate is > 0.
+    * stratum is missing from `rates` use `defaultRate`. NULL-key rows are kept
+    * whenever their stratum's rate is > 0.
     */
   def stratified(df: DataFrame, key: Column, stratum: Column,
-      rates: Map[String, Double], defaultRate: Double,
-      nullKeys: NullKeys = NullKeys.Keep): DataFrame = {
+      rates: Map[String, Double], defaultRate: Double): DataFrame = {
     (rates.values ++ Seq(defaultRate)).foreach(r =>
       require(r >= 0.0 && r <= 1.0, s"rates must be in [0,1], got $r"))
     val rateCol = rates.foldLeft(lit(defaultRate)) { case (acc, (s, r)) =>
       when(stratum === s, r).otherwise(acc)
     }
-    df.where(totalHashFraction(key, nullKeys) < rateCol)
+    df.where(keyFraction(key) < rateCol)
   }
 
   /** Per-group cap: keep the top `k` rows of each group by `order` (desc), ties
@@ -102,8 +84,8 @@ object Sampling {
     *
     * Rows whose stratum is ABSENT from `targets` (or has weight ≤ 0, or a null
     * stratum) have target share zero and are dropped — resampling to a mixture
-    * that excludes a stratum excludes its rows. NULL sampling keys follow
-    * `nullKeys` within kept strata.
+    * that excludes a stratum excludes its rows. NULL sampling keys are kept within
+    * kept strata.
     *
     * Scale shape: one map-side-combinable groupBy on the stratum for counts
     * (output cardinality = #strata), an inner join of that small frame with
@@ -118,8 +100,7 @@ object Sampling {
     *        nondeterministic — enforced with a distinct-count require).
     */
   def resampleToMixture(df: DataFrame, key: Column, stratum: Column,
-      targets: DataFrame, stratumCol: String, weightCol: String,
-      nullKeys: NullKeys = NullKeys.Keep): DataFrame = {
+      targets: DataFrame, stratumCol: String, weightCol: String): DataFrame = {
     val t = targets.select(col(stratumCol).as("__s"),
         col(weightCol).cast("double").as("__w"))
       .where(col("__s").isNotNull && col("__w") > 0.0)
@@ -140,7 +121,7 @@ object Sampling {
       // shape — literal-times-column divided by column — as the DuckDB oracle)
       val rates = joined.select(col("__s"), (lit(c) * col("__w") / col("__n")).as("__rate"))
       df.join(rates, stratum === col("__s"), "left")
-        .where(totalHashFraction(key, nullKeys) < coalesce(col("__rate"), lit(0.0)))
+        .where(keyFraction(key) < coalesce(col("__rate"), lit(0.0)))
         .drop("__s", "__rate")
     } finally joined.unpersist()
   }

@@ -1,6 +1,6 @@
 package graft.web
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
@@ -16,7 +16,6 @@ final class GraftMetricsListener extends SparkListener {
       memorySpilled: Long, diskSpilled: Long)
 
   private val tasks = new ConcurrentHashMap[(Int, Long), TaskStat]()
-  private val stageNames = new ConcurrentHashMap[Int, String]()
   val totalRecordsRead = new LongAdder
   val totalRunTimeMs = new LongAdder
   // executor-side GC attributed to tasks: jvmGCTime travels in TaskMetrics, so this
@@ -39,9 +38,6 @@ final class GraftMetricsListener extends SparkListener {
       maxTaskMs.updateAndGet(x => math.max(x, stat.runTimeMs))
     }
   }
-
-  override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-    stageNames.put(e.stageInfo.stageId, e.stageInfo.name)
 
   def taskStats: Seq[TaskStat] = tasks.values().asScala.toSeq
 

@@ -110,14 +110,48 @@ class DataOpsSpec extends SparkTestBase {
     val recall = (exact & approx).size.toDouble / exact.size
     assert(recall >= 0.2, s"IVF recall too low: $recall")
     assert(approx.forall { case (q, _) => q < 20 })
-    // the literal (map-only) and window-fallback assignment paths must agree
-    val cents = Ann.centroids(embeddings, "vec_id", "embedding", 16)
+    // the assignment kernel must equal the crossJoin + window formula it replaced,
+    // below and above the old 128-centroid cut between the two paths
     def asMap(df: DataFrame) = df.select(col("vec_id"), col("centroid_id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaLiteral = asMap(Ann.assign(embeddings, cents, "vec_id", "embedding"))
-    val viaWindow = asMap(Ann.assign(embeddings, cents, "vec_id", "embedding",
-      maxLiteralCentroids = 2))
-    assert(viaLiteral == viaWindow)
+    Seq(16, 200).foreach { n =>
+      val cents = Ann.centroids(embeddings, "vec_id", "embedding", n)
+      val viaWindow = embeddings.crossJoin(broadcast(cents))
+        .withColumn("__sim", Ann.cosine(col("embedding"), col("__centroid")))
+        .withColumn("__rk", row_number().over(org.apache.spark.sql.expressions.Window
+          .partitionBy(col("vec_id")).orderBy(col("__sim").desc, col("centroid_id").asc)))
+        .where(col("__rk") === 1)
+      assert(asMap(Ann.assign(embeddings, cents, "embedding")) == asMap(viaWindow),
+        s"$n centroids")
+      // int ids, which the window formula took at any count, assign too
+      val intIds = embeddings.withColumn("vec_id", col("vec_id").cast("int"))
+      assert(Ann.assign(intIds, Ann.centroids(intIds, "vec_id", "embedding", n), "embedding")
+        .where(col("centroid_id").isNull).count() == 0)
+    }
+  }
+
+  test("centroid choice skips null embeddings and null elements") {
+    // the two smallest-hash rows (the sample's first picks) lose their vector: one
+    // wholly, one by a single null element — neither may become a centroid
+    val first = embeddings.select(col("vec_id")).orderBy(xxhash64(col("vec_id"))).limit(2)
+      .collect().map(_.getLong(0))
+    val holed = embeddings.withColumn("embedding",
+      when(col("vec_id") === first(0), lit(null))
+        .when(col("vec_id") === first(1),
+          transform(col("embedding"), (x, i) => when(i === 0, lit(null)).otherwise(x)))
+        .otherwise(col("embedding")))
+    val cents = Ann.centroids(holed, "vec_id", "embedding", 8)
+    val ids = cents.select("centroid_id").collect().map(_.getLong(0)).toSet
+    assert(ids.size == 8 && !ids.contains(first(0)) && !ids.contains(first(1)), s"got $ids")
+    // every row, the holed ones included, is still assigned a cell, and a full probe
+    // still equals brute force
+    assert(Ann.assign(holed, cents, "embedding").count() == holed.count())
+    val queries = holed.where(col("vec_id") < 20 || col("vec_id").isin(first: _*))
+    def pairs(df: DataFrame) = df.select("query_id", "rank", "neighbor_id").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    assert(pairs(Ann.ivfTopK(holed, queries, "vec_id", "embedding", "vec_id",
+        k = 5, nCentroids = 8, nProbe = 8)) ==
+      pairs(Ann.bruteForceTopK(holed, queries, "vec_id", "embedding", "vec_id", k = 5)))
   }
 
   test("embedding cosine near-dup pairs are exact-verified (no false positives)") {

@@ -112,6 +112,7 @@ class MiscSpec extends SparkTestBase {
     val sha = java.security.MessageDigest.getInstance("SHA-256")
       .digest(pairs.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
     assert(SparkEntry.oracleSql.size == 74)
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
     assert(sha == "487f925a5d4b0c75a5cb2e9e60b68b0b49252fd60e4a167c964354603421ab6c", "an oracleSql string changed")
   }
 }
