@@ -2,6 +2,7 @@ package graft
 
 import graft.data.{Ann, Decontaminate, Dedup, LmQuality, TextAnalysis}
 import graft.functions.hashfns
+import graft.functions.rounding.r6
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
   * outputs are non-trivial.
   */
 object DataQueries {
-  import Queries.{r6, r6sql, Gate}
+  import Queries.{r6sql, Gate}
 
   /** documents ∪ exact copies (ids +100000) ∪ perturbed copies (ids +200000). */
   private def docsWithDups(spark: SparkSession, dir: String): DataFrame = {

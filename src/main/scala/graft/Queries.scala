@@ -2,6 +2,7 @@ package graft
 
 import graft.core._
 import graft.dataset.GraftDataset
+import graft.functions.rounding.r6
 import graft.pipeline.{ops, Pipeline}
 import graft.selection.SelectionMethod
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -39,16 +40,9 @@ object Queries {
     GraftDataset(df, schema, eventOrder)
   }
 
-  /** Floor-based 6-dp rounding that Spark and DuckDB compute bit-identically. NaN/Inf
-    * pass through. The DuckDB twin is [[r6sql]].
+  /** `r6sql("x")` — DuckDB expression identical to [[graft.functions.rounding.r6]]
+    * for column/simple exprs.
     */
-  private[graft] def r6(cRaw: org.apache.spark.sql.Column) = {
-    val c = cRaw.cast("double")
-    when(isnan(c) || c === Double.PositiveInfinity || c === Double.NegativeInfinity, c)
-      .otherwise(floor(c * 1e6 + 0.5).cast("double") / 1e6)
-  }
-
-  /** `r6sql("x")` — DuckDB expression identical to [[r6]] for column/simple exprs. */
   private[graft] def r6sql(e: String): String =
     s"CASE WHEN isnan(($e)::DOUBLE) OR NOT isfinite(($e)::DOUBLE) THEN ($e)::DOUBLE " +
       s"ELSE floor(($e)::DOUBLE * 1000000 + 0.5) / 1000000 END"

@@ -41,7 +41,9 @@ object Ann {
   /** Deterministic centroid choice: the `nCentroids` corpus rows with the smallest
     * xxhash64(id) — a seeded uniform sample without an RNG — among the rows with a
     * usable vector. A null vector or a null element nulls every cosine (`cosine(v, v)`
-    * is null exactly then), so such a row is never a centroid.
+    * is null exactly then), so such a row is never a centroid. Nor is a zero vector:
+    * its cosine with every row is NaN (`cosine(v, v)` is NaN exactly then), which the
+    * assignment ranks above every real cosine, so its cell would capture every row.
     *
     * EAGER: collects the (tiny by contract) sample once into a local relation — no
     * cache to leak in a long-lived session, no corpus re-scan when both [[assign]]
@@ -51,8 +53,9 @@ object Ann {
     val sample = corpus
       .select(col(idCol).as("centroid_id"), col(vecCol).as("__centroid"),
         xxhash64(col(idCol)).as("__h"))
-      .where(cosine(col("__centroid"), col("__centroid")).isNotNull)
-      .orderBy(col("__h")).limit(nCentroids).drop("__h")
+      .withColumn("__self", cosine(col("__centroid"), col("__centroid")))
+      .where(col("__self").isNotNull && !isnan(col("__self")))
+      .orderBy(col("__h")).limit(nCentroids).drop("__h", "__self")
     corpus.sparkSession.createDataFrame(java.util.Arrays.asList(sample.collect(): _*), sample.schema)
   }
 

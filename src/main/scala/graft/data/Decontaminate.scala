@@ -32,7 +32,7 @@ object Decontaminate {
     // r7: one codegen'd kernel pass (split + rolling UTF-8 gram hash) instead of
     // the transform/slice/concat_ws/xxhash64 array-HOF chain — bit-identical
     // hashes (same Java-regex split, same XXH64 seed 42 over the same bytes; see
-    // graft.functions.TokenNgramHashes), no per-gram array slices. Spark's
+    // graft.functions.HashKernels.tokenNgramHashesU8), no per-gram array slices. Spark's
     // `lower` stays outside the kernel so its collation semantics are untouched.
     graft.functions.hashfns.tokenNgramHashes(lower(text), n)
   }

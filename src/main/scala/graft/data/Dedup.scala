@@ -172,7 +172,7 @@ object Dedup {
   def shingles(text: Column, k: Int): Column = textfns.distinctShingles(text, k)
 
   /** MinHash signature: for each of `numHashes` seeds, the min over shingle hashes.
-    * Single-pass native expression (see [[graft.functions.MinHashSignature]]).
+    * Single-pass native expression (see [[graft.functions.hashfns.minhashSignature]]).
     */
   def minhashSignature(text: Column, k: Int, numHashes: Int): Column =
     hashfns.minhashSignature(text, k, numHashes)
@@ -241,7 +241,7 @@ object Dedup {
       minhashSignature(col("text"), shingleSize, numHashes).as("__sig"))
     // r7: one kernel call per row for all band keys — bit-identical to the
     // per-band xxhash64(concat_ws(",", element_at..)) columns it replaces (the
-    // tree was bands × rows element_at/cast/concat nodes; see MinhashBandKeys)
+    // tree was bands × rows element_at/cast/concat nodes; see hashfns.minhashBandKeys)
     val banded = sig.select(col("id"),
       posexplode(hashfns.minhashBandKeys(col("__sig"), rows, bands))
         .as(Seq("band", "bucket")))
@@ -283,7 +283,7 @@ object Dedup {
     // ((blocks-maxHamming)·width = 64 − maxHamming·width bits — always fits).
     // r7: one kernel call per row for all combination keys — bit-identical to the
     // per-combo shiftleft/bitwiseOR folds it replaces (C(8,5)=56 combos × 5-node
-    // folds in the blocks=8 configuration; see SimhashBucketKeys)
+    // folds in the blocks=8 configuration; see hashfns.simhashBucketKeys)
     val keyed = sh.select(col("id"), col("sim"),
       posexplode(hashfns.simhashBucketKeys(col("sim"), width, combos))
         .as(Seq("combo", "bucket")))

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *
   *  - [[scoreTrigramLm]] — pure projection: the model ships once per executor as
   *    a codegen reference object (sorted packed-long keys + parallel log-prob
-  *    array, the `MultiContains` mechanism) and each document is scored in a
+  *    array, a `KernelCall` object literal) and each document is scored in a
   *    single code-point pass, O(log K) per trigram. No shuffle, no explode, no
   *    join: curation's scan-speed path. Documents with < 3 code points (or null
   *    text) score null.

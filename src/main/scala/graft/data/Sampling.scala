@@ -21,7 +21,7 @@ object Sampling {
   def hashFraction(key: Column): Column =
     // one codegen'd digest per row — bit-identical to the portable formula
     // conv(substring(md5(key::string), 1, 13), 16, 10)::DOUBLE / 2^52 (the r7
-    // kernel swap; see graft.functions.Md5Fraction for the equivalence argument)
+    // kernel swap; see graft.functions.HashKernels.md5Frac52U8 for the equivalence argument)
     graft.functions.hashfns.md5Fraction(key.cast("string"))
 
   /** Sampling decision made total. A raw `hashFraction(key) < rate` predicate is

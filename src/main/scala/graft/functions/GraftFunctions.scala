@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** SQL surface for the custom kernels: every graft expression is callable from
+/** SQL surface for the custom kernels: every graft kernel is callable from
   * `spark.sql(...)` as `graft_*`.
   *
   * Two registration paths, same function table:
@@ -15,16 +15,18 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 object graftsql {
 
-  private def one(name: String, build: Expression => Expression) =
+  private def c(e: Expression): Column = ColumnBridge.column(e)
+
+  private def one(name: String, build: Column => Column) =
     (name, (args: Seq[Expression]) => {
       require(args.length == 1, s"$name expects 1 argument, got ${args.length}")
-      build(args.head)
+      ColumnBridge.expression(build(c(args.head)))
     })
 
-  private def two(name: String, build: (Expression, Expression) => Expression) =
+  private def two(name: String, build: (Column, Column) => Column) =
     (name, (args: Seq[Expression]) => {
       require(args.length == 2, s"$name expects 2 arguments, got ${args.length}")
-      build(args(0), args(1))
+      ColumnBridge.expression(build(c(args(0)), c(args(1))))
     })
 
   private def intLit(name: String, e: Expression, what: String): Int = e match {
@@ -34,26 +36,28 @@ object graftsql {
       s"$name: $what must be an INT literal, got $other")
   }
 
-  /** Name → builder for every injectable expression. */
+  /** Name → builder for every injectable expression; each builds through the same
+    * Column function the Scala API exposes.
+    */
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    one("graft_simhash64", SimHash64),
-    one("graft_fingerprint", RollingFingerprint),
-    one("graft_char_entropy", CharacterEntropy),
-    one("graft_nfc", NfcNormalize),
-    two("graft_damerau_levenshtein_sim", DamerauLevenshteinSimilarity),
-    two("graft_jaro_sim", JaroSimilarity),
-    two("graft_jaro_winkler_sim", JaroWinklerSimilarity(_, _, 0.1)),
-    two("graft_jaccard2_sim", NgramJaccardSimilarity(_, _, 2)),
-    two("graft_cosine_sim", CosineSimilarity),
+    one("graft_simhash64", hashfns.simhash64),
+    one("graft_fingerprint", hashfns.rollingFingerprint),
+    one("graft_char_entropy", textfns.charEntropy),
+    one("graft_nfc", textfns.nfcNormalize),
+    two("graft_damerau_levenshtein_sim", textfns.damerauLevenshteinSim),
+    two("graft_jaro_sim", textfns.jaroSim),
+    two("graft_jaro_winkler_sim", textfns.jaroWinklerSim(_, _, 0.1)),
+    two("graft_jaccard2_sim", textfns.ngramJaccardSim(_, _, 2)),
+    two("graft_cosine_sim", vecfns.cosineSim),
     ("graft_minhash", (args: Seq[Expression]) => {
       require(args.length == 3, s"graft_minhash(text, k, numHashes) expects 3 arguments, got ${args.length}")
-      MinHashSignature(args(0), intLit("graft_minhash", args(1), "k"),
-        intLit("graft_minhash", args(2), "numHashes"))
+      ColumnBridge.expression(hashfns.minhashSignature(c(args(0)),
+        intLit("graft_minhash", args(1), "k"), intLit("graft_minhash", args(2), "numHashes")))
     }),
     ("graft_srp_bands", (args: Seq[Expression]) => {
       require(args.length == 3, s"graft_srp_bands(vec, bits, bands) expects 3 arguments, got ${args.length}")
-      SrpSketchBands(args(0), intLit("graft_srp_bands", args(1), "bits"),
-        intLit("graft_srp_bands", args(2), "bands"))
+      ColumnBridge.expression(hashfns.srpSketchBands(c(args(0)),
+        intLit("graft_srp_bands", args(1), "bits"), intLit("graft_srp_bands", args(2), "bands")))
     }))
 
   def registerAll(spark: SparkSession): Unit =

@@ -2,9 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Deterministic hashing kernels for the dedup family. All derive from splitmix64 —
@@ -60,7 +59,7 @@ object HashKernels {
     splitmix64(h)
   }
 
-  // UTF8String entry points for generated code (static forwarders on the object class)
+  // UTF8String entry points, called through [[KernelCall]]
   def simhash64U8(s: UTF8String): Long = simhash64(s.toString)
   def rollingFingerprintU8(s: UTF8String): Long = rollingFingerprint(s.toString)
 
@@ -71,10 +70,6 @@ object HashKernels {
 
   private val wordSplit = java.util.regex.Pattern.compile("[^\\p{L}\\p{N}]+")
 
-  private val emptyLongs =
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(new Array[Long](0))
-  def emptyLongArray(): org.apache.spark.sql.catalyst.util.ArrayData = emptyLongs
-
   /** All token `n`-gram xxhash64 values of an ALREADY-LOWERCASED text, in token
     * order — bit-identical to the Catalyst chain
     * `transform(sequence(0, size(w)-n), i -> xxhash64(concat_ws(" ", slice(w, i+1, n))))`
@@ -83,7 +78,7 @@ object HashKernels {
     * the hash is Spark's XXH64(seed=42) over the UTF-8 bytes of the space-joined
     * gram (UTF-8 concatenation == concatenation of UTF-8, so the gram string is
     * never materialized). One pass, no per-gram array slices or UTF8String
-    * allocations. Fewer than `n` tokens (or null text at the caller) → empty.
+    * allocations. Fewer than `n` tokens (the caller maps null text to "") → empty.
     */
   def tokenNgramHashesU8(s: UTF8String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
     val raw = wordSplit.split(s.toString, -1)
@@ -159,8 +154,10 @@ object HashKernels {
     * `c.map(blockVal).reduce((a, b) => shiftleft(a, width) | b)` fold of the
     * Catalyst formulation it replaces.
     */
-  def simhashBucketKeysU8(sim: Long, width: Int, combosFlat: Array[Int],
+  def simhashBucketKeysU8(sim: Long, width: Int,
+      combos: scala.collection.immutable.ArraySeq.ofInt,
       comboLen: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+    val combosFlat = combos.unsafeArray
     val mask = if (width == 64) -1L else (1L << width) - 1L
     val nCombos = combosFlat.length / comboLen
     val out = new Array[Long](nCombos)
@@ -265,28 +262,6 @@ object HashKernels {
   }
 }
 
-/** MinHash signature in one pass: distinct code-point k-shingles, then for each of
-  * `numHashes` seeds the min of splitmix64(shingleHash ^ seed). A tight JVM loop —
-  * O(shingles · numHashes) with zero per-gram allocation — replacing 64 separate
-  * higher-order-function passes (measured 30× faster on the documents table).
-  * Whole-stage-codegen'd via the static kernel, like every expression in this file.
-  */
-case class MinHashSignature(child: Expression, k: Int, numHashes: Int)
-    extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.minhashSignatureU8(v.asInstanceOf[UTF8String], k, numHashes)
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.minhashSignatureU8($c, $k, $numHashes)")
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 /** Banded SRP sketch (see [[HashKernels.srpBands]]): array&lt;float|double&gt; →
   * array&lt;long&gt; of `bands` independent LSH keys, `bits` hyperplanes each.
   */
@@ -299,8 +274,7 @@ case class SrpSketchBands(child: Expression, bits: Int, bands: Int) extends Unar
 
   private lazy val tag: Int = NumArrays.tagOf(child.dataType, "srpSketchBands")
 
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   // null input OR any null array element → null sketch
   override def nullable: Boolean = true
@@ -324,147 +298,60 @@ case class SrpSketchBands(child: Expression, bits: Int, bands: Int) extends Unar
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Token n-gram hash array (see [[HashKernels.tokenNgramHashesU8]]). Input is the
-  * LOWERCASED text (Spark's `lower` stays outside so its collation semantics are
-  * untouched). NEVER null: a null text has no grams and yields the empty array,
-  * exactly like the `when(size(w) >= n, ...).otherwise(array())` chain it replaces.
-  */
-case class TokenNgramHashes(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"n must be >= 1, got $n")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) HashKernels.emptyLongArray()
-    else HashKernels.tokenNgramHashesU8(v.asInstanceOf[UTF8String], n)
-  }
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
-    val childGen = child.genCode(ctx)
-    val resultCode =
-      code"""
-        ${childGen.code}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = ${childGen.isNull} ?
-          graft.functions.HashKernels.emptyLongArray() :
-          graft.functions.HashKernels.tokenNgramHashesU8(${childGen.value}, $n);
-      """
-    ev.copy(code = resultCode, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** MinHash LSH band keys (see [[HashKernels.minhashBandKeysU8]]): array&lt;long&gt;
-  * signature → array&lt;long&gt; of `bands` keys. Null signature (null text) → null,
-  * which posexplode skips — the replaced per-band xxhash64(concat_ws(..)) columns
-  * gave every null-signature row the hash of "", i.e. shared buckets whose
-  * candidate pairs the exact-verify then dropped (null jaccard); no verified pair
-  * changes, the null docs just stop generating doomed candidates.
-  */
-case class MinhashBandKeys(child: Expression, rows: Int, bands: Int)
-    extends UnaryExpression {
-  require(rows >= 1 && bands >= 1)
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.minhashBandKeysU8(
-      v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], rows, bands)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.minhashBandKeysU8($c, $rows, $bands)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** SimHash pigeonhole bucket keys (see [[HashKernels.simhashBucketKeysU8]]):
-  * long simhash → array&lt;long&gt;, one key per block combination in the canonical
-  * combinations order. Null simhash (null text) → null; the replaced expression
-  * array emitted all-null keys instead, which the equi-join on the bucket could
-  * never match — no pair output changes.
-  */
-case class SimhashBucketKeys(child: Expression, width: Int, combos: Seq[Seq[Int]])
-    extends UnaryExpression {
-  require(combos.nonEmpty && combos.map(_.size).distinct.size == 1)
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(LongType, containsNull = false)
-  @transient private lazy val flat: Array[Int] = combos.flatten.toArray
-  private val comboLen: Int = combos.head.size
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.simhashBucketKeysU8(v.asInstanceOf[Long], width, flat, comboLen)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("graftSimhashCombos", flat, "int[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HashKernels.simhashBucketKeysU8($c, $width, $ref, $comboLen)")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Deterministic hash fraction (see [[HashKernels.md5Frac52U8]]): string → the
-  * md5-top-52-bit uniform in [0,1) every sampler keys on. Same value as the
-  * md5/conv/substring Catalyst chain it replaces, at one digest per row.
-  */
-case class Md5Fraction(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def nullSafeEval(v: Any): Any =
-    HashKernels.md5Frac52U8(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.HashKernels.md5Frac52U8($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-abstract class StringLongExpression extends UnaryExpression {
-  override def dataType: DataType = LongType
-  protected def compute(s: String): Long
-  protected def genCall(c: String): String
-  override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => genCall(c))
-}
-
-case class SimHash64(child: Expression) extends StringLongExpression {
-  protected def compute(s: String): Long = HashKernels.simhash64(s)
-  protected def genCall(c: String): String = s"graft.functions.HashKernels.simhash64U8($c)"
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-case class RollingFingerprint(child: Expression) extends StringLongExpression {
-  protected def compute(s: String): Long = HashKernels.rollingFingerprint(s)
-  protected def genCall(c: String): String = s"graft.functions.HashKernels.rollingFingerprintU8($c)"
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
 object hashfns {
-  def simhash64(c: Column): Column = ColumnBridge.column(SimHash64(ColumnBridge.expression(c)))
-  def minhashSignature(c: Column, k: Int, numHashes: Int): Column =
-    ColumnBridge.column(MinHashSignature(ColumnBridge.expression(c), k, numHashes))
-  def rollingFingerprint(c: Column): Column =
-    ColumnBridge.column(RollingFingerprint(ColumnBridge.expression(c)))
-  /** md5-top-52-bit uniform fraction of a STRING column (null → null). */
-  def md5Fraction(c: Column): Column =
-    ColumnBridge.column(Md5Fraction(ColumnBridge.expression(c)))
-  /** Token n-gram xxhash64 array of an already-lowercased text column (null →
-    * empty array, never null).
+  private val longs = ArrayType(LongType, containsNull = false)
+
+  /** 64-bit word-token SimHash (see [[HashKernels.simhash64]]). */
+  def simhash64(c: Column): Column = KernelCall(HashKernels, "simhash64U8", LongType, c)
+  /** MinHash signature in one pass: distinct code-point k-shingles, then for each of
+    * `numHashes` seeds the min of splitmix64(shingleHash ^ seed). A tight JVM loop —
+    * O(shingles · numHashes) with zero per-gram allocation — replacing 64 separate
+    * higher-order-function passes (measured 30× faster on the documents table).
     */
-  def tokenNgramHashes(lowered: Column, n: Int): Column =
-    ColumnBridge.column(TokenNgramHashes(ColumnBridge.expression(lowered), n))
-  /** `bands` LSH band keys over a MinHash signature array (null sig → null). */
-  def minhashBandKeys(sig: Column, rows: Int, bands: Int): Column =
-    ColumnBridge.column(MinhashBandKeys(ColumnBridge.expression(sig), rows, bands))
-  /** Pigeonhole bucket keys over a 64-bit simhash (null → null). */
-  def simhashBucketKeys(sim: Column, width: Int, combos: Seq[Seq[Int]]): Column =
-    ColumnBridge.column(SimhashBucketKeys(ColumnBridge.expression(sim), width, combos))
+  def minhashSignature(c: Column, k: Int, numHashes: Int): Column =
+    KernelCall(HashKernels, "minhashSignatureU8", longs, c, k, numHashes)
+  def rollingFingerprint(c: Column): Column =
+    KernelCall(HashKernels, "rollingFingerprintU8", LongType, c)
+  /** md5-top-52-bit uniform fraction of a STRING column (null → null; see
+    * [[HashKernels.md5Frac52U8]]): the value every sampler keys on, the same as the
+    * md5/conv/substring Catalyst chain it replaces, at one digest per row.
+    */
+  def md5Fraction(c: Column): Column = KernelCall(HashKernels, "md5Frac52U8", DoubleType, c)
+  /** Token n-gram xxhash64 array of an already-lowercased text column (see
+    * [[HashKernels.tokenNgramHashesU8]]; Spark's `lower` stays outside so its
+    * collation semantics are untouched). NEVER null: a null text has no grams and
+    * yields the empty array, exactly like the `when(size(w) >= n, ...).otherwise(array())`
+    * chain it replaces.
+    */
+  def tokenNgramHashes(lowered: Column, n: Int): Column = {
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    require(n >= 1, s"n must be >= 1, got $n")
+    KernelCall(HashKernels, "tokenNgramHashesU8", longs, coalesce(lowered, lit("")), n)
+  }
+  /** `bands` LSH band keys over a MinHash signature array (see
+    * [[HashKernels.minhashBandKeysU8]]). Null signature (null text) → null, which
+    * posexplode skips — the replaced per-band xxhash64(concat_ws(..)) columns gave
+    * every null-signature row the hash of "", i.e. shared buckets whose candidate
+    * pairs the exact-verify then dropped (null jaccard); no verified pair changes,
+    * the null docs just stop generating doomed candidates.
+    */
+  def minhashBandKeys(sig: Column, rows: Int, bands: Int): Column = {
+    require(rows >= 1 && bands >= 1)
+    KernelCall(HashKernels, "minhashBandKeysU8", longs, sig, rows, bands)
+  }
+  /** Pigeonhole bucket keys over a 64-bit simhash (see
+    * [[HashKernels.simhashBucketKeysU8]]), one key per block combination in the
+    * canonical combinations order. Null simhash (null text) → null; the replaced
+    * expression array emitted all-null keys instead, which the equi-join on the
+    * bucket could never match — no pair output changes. The flattened combination
+    * table is the literal; it compares by value and prints its entries.
+    */
+  def simhashBucketKeys(sim: Column, width: Int, combos: Seq[Seq[Int]]): Column = {
+    require(combos.nonEmpty && combos.map(_.size).distinct.size == 1)
+    KernelCall(HashKernels, "simhashBucketKeysU8", longs, sim, width,
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(combos.flatten.toArray),
+      combos.head.size)
+  }
   def srpSketchBands(c: Column, bits: Int, bands: Int): Column =
     ColumnBridge.column(SrpSketchBands(ColumnBridge.expression(c), bits, bands))
 }

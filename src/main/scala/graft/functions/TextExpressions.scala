@@ -1,16 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** String-similarity kernels the reference gets from the `polars-ds` Rust plugin
-  * (reference: transformers/text_transformers.py:40-104) re-implemented as native
-  * Catalyst expressions. `CodegenFallback` keeps them usable inside codegen'd stages;
-  * the kernels themselves are allocation-light and operate on code-point arrays.
+  * (reference: transformers/text_transformers.py:40-104) re-implemented as static
+  * methods on kernel objects. Polars calls every plugin function through one
+  * mechanism; here every fixed-type kernel is called through one helper,
+  * [[KernelCall]] (Spark's `StaticInvoke`), so each call is a direct static call
+  * inside the whole-stage-codegen'd stage and the interpreted path calls the same
+  * method. The kernels are allocation-light and operate on code-point arrays.
   *
   * Golden parity (test_text_transformers.py:20-30, test_pipeline.py:431-437):
   *   - Damerau-Levenshtein similarity = 1 − OSA_distance / max(len)
@@ -21,8 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
 object TextKernels {
   def codePoints(s: String): Array[Int] = s.codePoints().toArray
 
-  // UTF8String entry points — called from generated code (top-level Scala objects
-  // emit static forwarders, same pattern as CharClassKernels.count)
+  // UTF8String entry points, called through [[KernelCall]] (a top-level Scala
+  // object emits a static forwarder for each method)
   def dlSimilarityU8(a: UTF8String, b: UTF8String): Double = dlSimilarity(a.toString, b.toString)
   def jaroSimilarityU8(a: UTF8String, b: UTF8String): Double = jaroSimilarity(a.toString, b.toString)
   def jaroWinklerU8(a: UTF8String, b: UTF8String, w: Double): Double =
@@ -33,6 +33,8 @@ object TextKernels {
   /** Unicode NFC (canonical composition) via the JDK normalizer. */
   def nfcU8(s: UTF8String): UTF8String =
     UTF8String.fromString(java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.NFC))
+  def multiContainsU8(ac: AhoCorasick, t: UTF8String): Boolean = ac.containsAny(t.toString)
+  def trigramLogProbU8(m: TrigramLmModel, t: UTF8String): java.lang.Double = m.scoreOrNull(t)
 
   /** Optimal String Alignment distance (Damerau-Levenshtein with adjacent
     * transpositions, no substring re-edits).
@@ -183,55 +185,6 @@ object TextKernels {
   }
 }
 
-/** Binary string→double kernels, whole-stage-codegen'd: doGenCode emits a call to the
-  * static UTF8String kernel entry point, so these never break a WSCG span.
-  */
-abstract class BinaryStringDoubleExpression extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  protected def compute(a: String, b: String): Double
-  /** Java source for the static kernel call; `l`/`r` are UTF8String variables. */
-  protected def genCall(l: String, r: String): String
-  override def nullSafeEval(l: Any, r: Any): Any =
-    compute(l.asInstanceOf[UTF8String].toString, r.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, (l, r) => genCall(l, r))
-}
-
-case class DamerauLevenshteinSimilarity(left: Expression, right: Expression)
-    extends BinaryStringDoubleExpression {
-  protected def compute(a: String, b: String): Double = TextKernels.dlSimilarity(a, b)
-  protected def genCall(l: String, r: String): String =
-    s"graft.functions.TextKernels.dlSimilarityU8($l, $r)"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class JaroSimilarity(left: Expression, right: Expression) extends BinaryStringDoubleExpression {
-  protected def compute(a: String, b: String): Double = TextKernels.jaroSimilarity(a, b)
-  protected def genCall(l: String, r: String): String =
-    s"graft.functions.TextKernels.jaroSimilarityU8($l, $r)"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
-case class JaroWinklerSimilarity(left: Expression, right: Expression, weight: Double)
-    extends BinaryStringDoubleExpression {
-  protected def compute(a: String, b: String): Double = TextKernels.jaroWinkler(a, b, weight)
-  protected def genCall(l: String, r: String): String =
-    s"graft.functions.TextKernels.jaroWinklerU8($l, $r, ${weight}D)"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-case class NgramJaccardSimilarity(left: Expression, right: Expression, n: Int)
-    extends BinaryStringDoubleExpression {
-  protected def compute(a: String, b: String): Double = TextKernels.ngramJaccard(a, b, n)
-  protected def genCall(l: String, r: String): String =
-    s"graft.functions.TextKernels.ngramJaccardU8($l, $r, $n)"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 /** UTF8String byte-level kernels for the common character classes. All ASCII classes
   * test lead bytes directly (UTF-8 continuation bytes 0x80-0xBF never collide with
   * ASCII ranges); the complement classes count code points via numChars().
@@ -242,10 +195,15 @@ object CharClassKernels {
   val Digits = 0; val Whitespace = 1; val Uppercase = 2; val Lowercase = 3
   val Letter = 4; val NonAlphanumeric = 5; val NonAscii = 6
 
-  val idByName: Map[String, Int] = Map(
-    "digits_ascii" -> Digits, "whitespace_ascii" -> Whitespace, "uppercase" -> Uppercase,
-    "lowercase" -> Lowercase, "letter" -> Letter, "non_alphanumeric" -> NonAlphanumeric,
-    "non_ascii" -> NonAscii)
+  /** The single-class regexes [[count]] reproduces exactly → class id. */
+  val byRegex: Map[String, Int] = Map(
+    """\d""" -> Digits,
+    """\s""" -> Whitespace,
+    """[A-Z]""" -> Uppercase,
+    """[a-z]""" -> Lowercase,
+    """[A-Za-z]""" -> Letter,
+    """[^A-Za-z0-9]""" -> NonAlphanumeric,
+    """[^\x00-\x7F]""" -> NonAscii)
 
   def count(s: UTF8String, cls: Int): Int = {
     val n = s.numBytes()
@@ -289,96 +247,26 @@ object CharClassKernels {
   }
 }
 
-/** Single-pass counter for the common character classes — no regex engine, no String
-  * materialization, and fully whole-stage-codegen'd (doGenCode calls the static
-  * kernel). Used automatically by TextCountMatchesTransformer when the requested regex
-  * is one of these classes; arbitrary regexes still go through `regexp_count`.
-  */
-case class CharClassCount(child: Expression, className: String) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-  private val classId: Int = CharClassKernels.idByName(className)
-
-  override def nullSafeEval(v: Any): Any =
-    CharClassKernels.count(v.asInstanceOf[UTF8String], classId)
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.CharClassKernels.count($c, $classId)")
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-object CharClassCount {
-  /** Java-regex Character.isDigit/isWhitespace match `\d`/`\s` on these inputs only for
-    * ASCII `\d` (Java `\d` is ASCII-only by default, isDigit is Unicode) — so `\d` maps
-    * to an explicit ASCII check below via the `digits_ascii` alias.
-    */
-  val byRegex: Map[String, String] = Map(
-    """\d""" -> "digits_ascii",
-    """\s""" -> "whitespace_ascii",
-    """[A-Z]""" -> "uppercase",
-    """[a-z]""" -> "lowercase",
-    """[A-Za-z]""" -> "letter",
-    """[^A-Za-z0-9]""" -> "non_alphanumeric",
-    """[^\x00-\x7F]""" -> "non_ascii")
-}
-
-/** Unicode NFC normalization — the canonical first step of web-text cleaning (the
-  * same text crawled twice often differs only in composed vs decomposed accents,
-  * which breaks exact dedup). Codegen'd; DuckDB's nfc_normalize is the gate oracle.
-  */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-  override def nullSafeEval(v: Any): Any = TextKernels.nfcU8(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.nfcU8($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-/** Distinct code-point k-shingles of a text (see [[TextKernels.distinctShinglesU8]]).
-  * Null text → null; short text → empty array (the HOF chain's `[null]` singleton
-  * was filtered by every consumer — same exploded rows either way).
-  */
-case class DistinctShingles(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1, s"k must be >= 1, got $k")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType,
-      containsNull = false)
-  override def nullSafeEval(v: Any): Any =
-    TextKernels.distinctShinglesU8(v.asInstanceOf[UTF8String], k)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.distinctShinglesU8($c, $k)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-case class CharacterEntropy(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(v: Any): Any =
-    TextKernels.charEntropy(v.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.charEntropyU8($c)")
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-/** Column-level entry points. */
 /** Aho–Corasick multi-pattern substring automaton: does the text contain ANY of the
   * patterns? One O(|text|) scan regardless of pattern count — vs the
   * `exists(snips, contains)` formulation, which re-scans the document once per
-  * snippet. Built once on the driver, shipped to executors as a codegen reference
-  * object (same mechanism as the PrefixAgg quantile bounds).
+  * snippet. Built once on the driver, shipped to executors as a [[KernelCall]]
+  * object literal. Equality is over the patterns (two plans that scan for the same
+  * snippets are equal); `toString` stays short, so plan text is deterministic.
   *
   * Standard construction: goto trie + BFS failure links, with terminal marks
   * propagated through the links so a match ending mid-trie (a pattern that is a
   * proper suffix of another's prefix path) is still seen.
   */
 final class AhoCorasick(patterns: Array[String]) extends Serializable {
+  private val key: Seq[String] = patterns.toSeq
+  override def equals(o: Any): Boolean = o match {
+    case a: AhoCorasick => a.key == key
+    case _ => false
+  }
+  override def hashCode: Int = key.hashCode
+  override def toString: String = s"AhoCorasick(${key.size} patterns)"
+
   private val gotoMaps =
     scala.collection.mutable.ArrayBuffer(new java.util.HashMap[Character, Integer]())
   private val terminal = scala.collection.mutable.ArrayBuffer(false)
@@ -433,34 +321,13 @@ final class AhoCorasick(patterns: Array[String]) extends Serializable {
     }
     false
   }
-  def containsAnyU8(t: UTF8String): Boolean = containsAny(t.toString)
-}
-
-/** Boolean: text contains any of `patterns` (compiled Aho–Corasick; null text →
-  * null). `patterns` is plan-time data — the literal snippet list — so equality /
-  * explain / canonicalization see it like any other expression parameter.
-  */
-case class MultiContains(child: Expression, patterns: Seq[String]) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-  @transient private lazy val ac = new AhoCorasick(patterns.toArray)
-
-  override def nullSafeEval(v: Any): Any = ac.containsAnyU8(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("graftAc", ac, classOf[AhoCorasick].getName)
-    defineCodeGen(ctx, ev, c => s"$ref.containsAnyU8($c)")
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** A trained character-trigram language model: packed code-point-trigram keys
   * (3 × 21 bits in one long, sorted) with their smoothed log-probabilities, plus
-  * the shared unseen-trigram log-probability. Ships ONCE per executor as a codegen
-  * reference object (the `MultiContains` mechanism); lookup is a
-  * binary search, scoring one document is a single code-point pass.
+  * the shared unseen-trigram log-probability. Ships ONCE per executor as a
+  * [[KernelCall]] object literal (compared by reference, printed by size); lookup
+  * is a binary search, scoring one document is a single code-point pass.
   */
 final class TrigramLmModel(
     val keys: Array[Long], // sorted packed trigrams
@@ -497,8 +364,8 @@ final class TrigramLmModel(
     if (count == 0) null else java.lang.Double.valueOf(sum / count)
   }
 
-  /** Pack a 3-code-point string the same way scoring does (training-side helper). */
   def packedSize: Int = keys.length
+  override def toString: String = s"TrigramLmModel($packedSize trigrams)"
 }
 
 object TrigramLmModel {
@@ -527,23 +394,6 @@ object TrigramLmModel {
   * equals packed-long order for 3-code-point grams, so the deterministic
   * (count desc, gram asc) vocabulary cut is unchanged.
   */
-case class PackedTrigrams(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType,
-      containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    PackedTrigrams.pack(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PackedTrigrams.pack($c);")
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
 object PackedTrigrams {
   /** One code-point pass; the same rolling pack as [[TrigramLmModel.scoreOrNull]]. */
   def pack(t: UTF8String): org.apache.spark.sql.catalyst.util.GenericArrayData = {
@@ -564,34 +414,6 @@ object PackedTrigrams {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
-}
-
-/** Double: mean log-probability of the text's code-point trigrams under `model`;
-  * null for null text or texts with < 3 code points (no trigram to score).
-  */
-case class TrigramLogProb(child: Expression, model: TrigramLmModel)
-    extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(v: Any): Any = model.scoreOrNull(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("graftTriLm", model, classOf[TrigramLmModel].getName)
-    // freshName: two TrigramLogProb instances can land in ONE codegen function
-    // (e.g. scoring two text columns in a single projection) — a fixed local name
-    // would redeclare and fail janino compilation
-    val score = ctx.freshName("graftLmScore")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Double $score = $ref.scoreOrNull($c);
-      if ($score == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = $score.doubleValue(); }
-    """)
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Per-row charset resolution for web-crawl payload decode. Charset names arrive
@@ -634,28 +456,10 @@ object CharsetKernels {
     UTF8String.fromString(new String(bytes, resolve(if (cs == null) null else cs.toString)))
 }
 
-/** `decode(binary, charset_column)` — Spark's builtin `decode` takes a LITERAL charset
-  * only; crawl pages declare theirs per row in the HTTP Content-Type. Whole-stage
-  * codegen'd via a static kernel call. Standard binary null semantics (either child
-  * null → null); [[textfns.decodeCharset]] coalesces the charset to "" (→ UTF-8, the
-  * WARC default) so a missing header never nulls the page out.
-  */
-case class CharsetDecode(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StringType
-  override def nullSafeEval(bin: Any, cs: Any): Any =
-    CharsetKernels.decode(bin.asInstanceOf[Array[Byte]], cs.asInstanceOf[UTF8String])
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-    defineCodeGen(ctx, ev, (b, c) => s"graft.functions.CharsetKernels.decode($b, $c)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
-}
-
+/** Column-level entry points. */
 object textfns {
-  private def e(c: Column): Expression = ColumnBridge.expression(c)
-  private def col(ex: Expression): Column = ColumnBridge.column(ex)
-
-  def damerauLevenshteinSim(l: Column, r: Column): Column = col(DamerauLevenshteinSimilarity(e(l), e(r)))
+  def damerauLevenshteinSim(l: Column, r: Column): Column =
+    KernelCall(TextKernels, "dlSimilarityU8", DoubleType, l, r)
   /** Plain Levenshtein similarity 1 − dist/max(len) ("" vs "" → 1). Composes Spark's
     * codegen'd builtin — unlike OSA/Jaro, plain edit distance is implementation-
     * unambiguous, so this is the cross-engine-checkable member of the family.
@@ -665,28 +469,48 @@ object textfns {
     val mx = greatest(length(l), length(r))
     when(mx === 0, 1.0).otherwise(lit(1.0) - levenshtein(l, r).cast("double") / mx)
   }
-  def jaroSim(l: Column, r: Column): Column = col(JaroSimilarity(e(l), e(r)))
+  def jaroSim(l: Column, r: Column): Column =
+    KernelCall(TextKernels, "jaroSimilarityU8", DoubleType, l, r)
   def jaroWinklerSim(l: Column, r: Column, weight: Double = 0.1): Column =
-    col(JaroWinklerSimilarity(e(l), e(r), weight))
-  def ngramJaccardSim(l: Column, r: Column, n: Int = 2): Column = col(NgramJaccardSimilarity(e(l), e(r), n))
-  def charEntropy(c: Column): Column = col(CharacterEntropy(e(c)))
-  def nfcNormalize(c: Column): Column = col(NfcNormalize(e(c)))
-  /** Distinct code-point k-shingles, first-occurrence order (null → null). */
-  def distinctShingles(c: Column, k: Int): Column = col(DistinctShingles(e(c), k))
-  /** True iff the text contains any of `patterns` (one compiled-automaton pass). */
+    KernelCall(TextKernels, "jaroWinklerU8", DoubleType, l, r, weight)
+  def ngramJaccardSim(l: Column, r: Column, n: Int = 2): Column =
+    KernelCall(TextKernels, "ngramJaccardU8", DoubleType, l, r, n)
+  def charEntropy(c: Column): Column = KernelCall(TextKernels, "charEntropyU8", DoubleType, c)
+  /** Unicode NFC normalization — the canonical first step of web-text cleaning (the
+    * same text crawled twice often differs only in composed vs decomposed accents,
+    * which breaks exact dedup). DuckDB's nfc_normalize is the gate oracle.
+    */
+  def nfcNormalize(c: Column): Column = KernelCall(TextKernels, "nfcU8", StringType, c)
+  /** Distinct code-point k-shingles, first-occurrence order (see
+    * [[TextKernels.distinctShinglesU8]]). Null text → null; short text → empty array
+    * (the HOF chain's `[null]` singleton was filtered by every consumer — same
+    * exploded rows either way).
+    */
+  def distinctShingles(c: Column, k: Int): Column = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    KernelCall(TextKernels, "distinctShinglesU8", ArrayType(StringType, containsNull = false), c, k)
+  }
+  /** True iff the text contains any of `patterns` (one compiled [[AhoCorasick]]
+    * pass; null text → null).
+    */
   def multiContains(text: Column, patterns: Seq[String]): Column =
-    col(MultiContains(e(text), patterns))
-  /** Mean trigram log-probability under a trained [[TrigramLmModel]]. */
+    KernelCall(TextKernels, "multiContainsU8", BooleanType, new AhoCorasick(patterns.toArray), text)
+  /** Mean trigram log-probability under a trained [[TrigramLmModel]]; null for null
+    * text or texts with < 3 code points (no trigram to score).
+    */
   def trigramLogProb(text: Column, model: TrigramLmModel): Column =
-    col(TrigramLogProb(e(text), model))
-  /** Packed-long code-point trigrams (LM training's count key). */
-  def packedTrigrams(text: Column): Column = col(PackedTrigrams(e(text)))
+    KernelCall.orNull(TextKernels, "trigramLogProbU8", DoubleType, model, text)
+  /** Packed-long code-point trigrams (LM training's count key; see [[PackedTrigrams]]). */
+  def packedTrigrams(text: Column): Column =
+    KernelCall(PackedTrigrams, "pack", ArrayType(LongType, containsNull = false), text)
   /** Decode a binary column under a PER-ROW charset name (null/empty/unknown name →
     * UTF-8). Spark's `decode` builtin takes only a literal charset; crawl pages
-    * declare theirs in the HTTP Content-Type header, one per row.
+    * declare theirs in the HTTP Content-Type header, one per row. A null binary
+    * gives null; the charset is coalesced to "" so a missing header never nulls
+    * the page out.
     */
   def decodeCharset(bin: Column, charsetName: Column): Column = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    col(CharsetDecode(e(bin), e(coalesce(charsetName, lit("")))))
+    KernelCall(CharsetKernels, "decode", StringType, bin, coalesce(charsetName, lit("")))
   }
 }

@@ -124,7 +124,7 @@ case class CosineSimilarity(left: Expression, right: Expression) extends BinaryE
 }
 
 /** The literal centroid table for [[ArgMaxCosine]], shipped once per executor as a
-  * codegen reference object (the MultiContains mechanism).
+  * codegen reference object.
   */
 final class CentroidBank(val ids: Array[Long], val vecs: Array[Array[Double]])
     extends Serializable {

@@ -106,10 +106,9 @@ final case class TextCountMatchesTransformer(c: ColumnSpec, regex: String, human
   def outputName: String = s"${c.name}_count_$humanName"
   def plan(ctx: AggContext, tmp: TempNamer): FeaturePlan =
     // single-character-class patterns take a regex-free single-pass counter
-    graft.functions.CharClassCount.byRegex.get(regex) match {
-      case Some(cls) => simple(org.apache.spark.sql.graftbridge.ColumnBridge.column(
-        graft.functions.CharClassCount(
-          org.apache.spark.sql.graftbridge.ColumnBridge.expression(col(c.name)), cls)))
+    graft.functions.CharClassKernels.byRegex.get(regex) match {
+      case Some(cls) => simple(graft.functions.KernelCall(graft.functions.CharClassKernels,
+        "count", org.apache.spark.sql.types.IntegerType, col(c.name), cls))
       case None => simple(regexp_count(col(c.name), lit(regex)))
     }
 }

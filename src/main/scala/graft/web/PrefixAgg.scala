@@ -1,10 +1,10 @@
 package graft.web
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, JoinedRow, UnaryExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ColumnBridge, InternalBridge}
+import org.apache.spark.sql.graftbridge.InternalBridge
 import org.apache.spark.sql.types._
 
 /** Globally-ordered running (prefix) aggregates WITHOUT a whole-table
@@ -70,20 +70,6 @@ object PrefixAgg {
     if (i >= 0) i else -i - 1
   }
 
-  /** Codegen'd binary-search range-bucket assignment over literal bounds. */
-  private[web] case class RangeBucket(child: Expression, bounds: Array[Double])
-      extends UnaryExpression {
-    override def dataType: DataType = IntegerType
-    override def nullSafeEval(v: Any): Any = bucketOf(v.asInstanceOf[Double], bounds)
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-      val ref = ctx.addReferenceObj("graftPrefixBounds", bounds, "double[]")
-      defineCodeGen(ctx, ev, c => s"graft.web.PrefixAgg.bucketOf($c, $ref)")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
   def running(df: DataFrame, orderBy: Seq[String], specs: Seq[RunningSpec],
       numRanges: Int = 0): DataFrame = {
     require(orderBy.nonEmpty, "orderBy must be a (total) order — include a unique tie-breaker")
@@ -118,7 +104,7 @@ object PrefixAgg {
     val rid = "__graft_prefix_rid"
     val ridCol =
       if (bounds.isEmpty) lit(0)
-      else ColumnBridge.column(RangeBucket(ColumnBridge.expression(keyD), bounds))
+      else graft.functions.KernelCall(PrefixAgg, "bucketOf", IntegerType, keyD, bounds)
 
     // numeric inputs pre-cast to double (Count needs no input column at all)
     val inName: Map[String, String] = specs.collect {

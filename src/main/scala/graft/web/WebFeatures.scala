@@ -119,16 +119,7 @@ object WebFeatures {
   }
 
   /** Backfill: attach the latest page snapshot at-or-before each event's timestamp. */
-  def backfillEvents(events: DataFrame, pages: DataFrame,
-      bucketSeconds: Option[Long] = None): DataFrame = {
-    val valueCols = Seq("warc_ts", "text", "lang")
-    val paged = pages.select(col("url"), col("warc_ts"),
-      col("text"), col("lang"))
-    bucketSeconds match {
-      case Some(b) => AsOfJoin.backwardBucketed(events, paged, Seq("url"), "ts",
-        Seq("url"), "warc_ts", valueCols, b)
-      case None => AsOfJoin.backward(events, paged, Seq("url"), "ts",
-        Seq("url"), "warc_ts", valueCols)
-    }
-  }
+  def backfillEvents(events: DataFrame, pages: DataFrame): DataFrame =
+    AsOfJoin.backward(events, pages.select(col("url"), col("warc_ts"), col("text"), col("lang")),
+      Seq("url"), "ts", Seq("url"), "warc_ts", Seq("warc_ts", "text", "lang"))
 }

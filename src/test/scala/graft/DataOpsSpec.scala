@@ -131,21 +131,25 @@ class DataOpsSpec extends SparkTestBase {
   }
 
   test("centroid choice skips null embeddings and null elements") {
-    // the two smallest-hash rows (the sample's first picks) lose their vector: one
-    // wholly, one by a single null element — neither may become a centroid
-    val first = embeddings.select(col("vec_id")).orderBy(xxhash64(col("vec_id"))).limit(2)
+    // the three smallest-hash rows (the sample's first picks) lose their vector: one
+    // becomes the zero vector (NaN cosine with every row), one is nulled wholly, one
+    // by a single null element — none may become a centroid
+    val first = embeddings.select(col("vec_id")).orderBy(xxhash64(col("vec_id"))).limit(3)
       .collect().map(_.getLong(0))
     val holed = embeddings.withColumn("embedding",
-      when(col("vec_id") === first(0), lit(null))
-        .when(col("vec_id") === first(1),
+      when(col("vec_id") === first(0), transform(col("embedding"), x => x - x))
+        .when(col("vec_id") === first(1), lit(null))
+        .when(col("vec_id") === first(2),
           transform(col("embedding"), (x, i) => when(i === 0, lit(null)).otherwise(x)))
         .otherwise(col("embedding")))
     val cents = Ann.centroids(holed, "vec_id", "embedding", 8)
     val ids = cents.select("centroid_id").collect().map(_.getLong(0)).toSet
-    assert(ids.size == 8 && !ids.contains(first(0)) && !ids.contains(first(1)), s"got $ids")
-    // every row, the holed ones included, is still assigned a cell, and a full probe
-    // still equals brute force
-    assert(Ann.assign(holed, cents, "embedding").count() == holed.count())
+    assert(ids.size == 8 && first.forall(f => !ids.contains(f)), s"got $ids")
+    // every row, the holed ones included, is still assigned a cell, no cell captures
+    // every row, and a full probe still equals brute force
+    val assigned = Ann.assign(holed, cents, "embedding")
+    assert(assigned.count() == holed.count())
+    assert(assigned.select("centroid_id").distinct().count() > 1)
     val queries = holed.where(col("vec_id") < 20 || col("vec_id").isin(first: _*))
     def pairs(df: DataFrame) = df.select("query_id", "rank", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet

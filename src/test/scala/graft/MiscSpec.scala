@@ -91,6 +91,16 @@ class MiscSpec extends SparkTestBase {
     }
   }
 
+  test("r6 rounds half up to 6 decimals and passes NaN and ±Inf through unchanged") {
+    import spark.implicits._
+    val got = Seq(1.2345675, -1.2345675, 2.0000004, Double.NaN,
+        Double.PositiveInfinity, Double.NegativeInfinity).toDF("x")
+      .select(graft.functions.rounding.r6(col("x"))).as[Double].collect()
+    assert(got.take(3).toSeq == Seq(1.234568, -1.234567, 2.0))
+    assert(got(3).isNaN)
+    assert(got(4) == Double.PositiveInfinity && got(5) == Double.NegativeInfinity)
+  }
+
   test("the test session carries every GraftSession conf value") {
     GraftSession.conf.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
   }

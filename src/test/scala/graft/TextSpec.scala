@@ -121,7 +121,10 @@ class TextSpec extends SparkTestBase {
     try {
       val s1 = concat(lit("martha "), col("id").cast("string"))
       val s2 = concat(lit("marhta "), col("id").cast("string"))
-      val df = spark.range(64).select(
+      // the char-class counters through the transformer that picks them
+      def countOf(regex: String) =
+        TextCountMatchesTransformer(ColumnSpec.text("t"), regex).plan(ctx, new TempNamer).output
+      val df = spark.range(64).withColumn("t", s1).select(
         textfns.damerauLevenshteinSim(s1, s2).as("dl"),
         textfns.jaroSim(s1, s2).as("jaro"),
         textfns.jaroWinklerSim(s1, s2).as("jw"),
@@ -143,7 +146,16 @@ class TextSpec extends SparkTestBase {
         textfns.packedTrigrams(s1).as("packed"),
         textfns.decodeCharset(org.apache.spark.sql.functions.encode(s1, "UTF-8"),
           org.apache.spark.sql.functions.when(col("id") % 2 === 0, lit("ISO-8859-1"))
-            .otherwise(lit("bogus-charset"))).as("cs"))
+            .otherwise(lit("bogus-charset"))).as("cs"),
+        countOf("""\d""").as("digits"),
+        countOf("[A-Za-z]").as("letters"),
+        textfns.nfcNormalize(concat(s1, lit("e\u0301"))).as("nfc"),
+        textfns.distinctShingles(s1, 3).as("shingles"),
+        hashfns.tokenNgramHashes(s1, 2).as("tok2"),
+        hashfns.minhashBandKeys(hashfns.minhashSignature(s1, 3, 16), 4, 4).as("bands"),
+        hashfns.simhashBucketKeys(hashfns.simhash64(s1), 16,
+          (0 until 4).combinations(2).toSeq).as("simkeys"),
+        hashfns.md5Fraction(s1).as("md5f"))
       assert(df.count() == 64)
       // "*(1)" marks the WholeStageCodegen stage in the simple plan string
       assert(df.queryExecution.executedPlan.toString.contains("*(1) Project"))
@@ -157,7 +169,79 @@ class TextSpec extends SparkTestBase {
       assert(r.getSeq[Long](12).size == 6 &&
         r.getSeq[Long](12).head == graft.functions.TrigramLmModel.packGram("mar"))
       assert(r.getString(13) == "martha 0") // ascii round-trips under any charset
+      assert(r.getInt(14) == 1 && r.getInt(15) == 6)
+      assert(r.getString(16) == "martha 0\u00e9") // e + combining acute composes
+      assert(r.getSeq[String](17) == Seq("mar", "art", "rth", "tha", "ha ", "a 0"))
+      assert(r.getSeq[Long](18).size == 1) // "martha 0": one token bigram
+      assert(r.getSeq[Long](19).size == 4 && r.getSeq[Long](20).size == 6)
+      assert(r.getDouble(21) >= 0.0 && r.getDouble(21) < 1.0)
     } finally spark.conf.set("spark.sql.codegen.fallback", "true")
+  }
+
+  test("every kernel call gives the same values interpreted and under codegen (property)") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{array, col, length, lit, lower}
+    import graft.functions.{hashfns, textfns, CharClassKernels, KernelCall, TrigramLmModel}
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // ASCII, Latin-1, combining marks, CJK, surrogate pairs (emoji, math letters),
+    // control whitespace: every width UTF-8 and UTF-16 give a code point
+    val piece = Gen.oneOf("a", "b", "Z", "7", " ", "\t", "\n", "-", "é", "e\u0301",
+      "\u0308", "ß", "猫", "号", "\ud83c\udf89", "\ud835\udd38", "\u00a0", "ab", "b7")
+    val text: Gen[String] = Gen.frequency(
+      (1, Gen.const(null: String)), (1, Gen.const("")),
+      (8, Gen.choose(1, 12).flatMap(Gen.listOfN(_, piece)).map(_.mkString)))
+    val bytes: Gen[Array[Byte]] = Gen.frequency((1, Gen.const(null: Array[Byte])),
+      (6, Gen.choose(0, 8).flatMap(Gen.listOfN(_, Gen.choose(Byte.MinValue, Byte.MaxValue)))
+        .map(_.toArray)))
+    val charset = Gen.oneOf("UTF-8", "ISO-8859-1", "UTF-16", "bogus", "", null)
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("a", StringType),
+      StructField("b", StringType), StructField("bin", BinaryType), StructField("cs", StringType)))
+    val model = {
+      val grams = Seq("ab ", "猫号a", "\ud83c\udf89ab", "e\u0301b").map(TrigramLmModel.packGram)
+        .zip(Seq(-1.0, -2.0, -0.5, -3.0)).sortBy(_._1)
+      new TrigramLmModel(grams.map(_._1).toArray, grams.map(_._2).toArray, -6.0)
+    }
+    val a = col("a"); val b = col("b")
+    val sig = hashfns.minhashSignature(a, 2, 8)
+    val kernels: Seq[Column] = Seq(
+      textfns.damerauLevenshteinSim(a, b), textfns.jaroSim(a, b),
+      textfns.jaroWinklerSim(a, b), textfns.ngramJaccardSim(a, b, 2),
+      textfns.charEntropy(a), textfns.nfcNormalize(a), textfns.distinctShingles(a, 2),
+      textfns.multiContains(a, Seq("é", "\ud83c\udf89b", "ab", "7-")),
+      textfns.packedTrigrams(a), textfns.trigramLogProb(a, model),
+      textfns.decodeCharset(col("bin"), col("cs")),
+      sig, hashfns.tokenNgramHashes(lower(a), 2), hashfns.minhashBandKeys(sig, 2, 4),
+      hashfns.simhashBucketKeys(hashfns.simhash64(a), 16, (0 until 4).combinations(3).toSeq),
+      hashfns.md5Fraction(a), hashfns.simhash64(a), hashfns.rollingFingerprint(a),
+      KernelCall(graft.web.PrefixAgg, "bucketOf", IntegerType,
+        length(a).cast("double"), Array(1.0, 3.0, 7.0))) ++
+      CharClassKernels.byRegex.keys.toSeq.sorted.map(rx =>
+        TextCountMatchesTransformer(ColumnSpec.text("a"), rx).plan(ctx, new TempNamer).output)
+    val rowGen = for {
+      x <- text; y <- text; bin <- bytes; cs <- charset
+    } yield (x, y, bin, cs)
+    val prop = Prop.forAllNoShrink(Gen.listOfN(30, rowGen)) { rows =>
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows.zipWithIndex.map {
+        case ((x, y, bin, cs), i) => Row(i, x, y, bin, cs) }, 2), schema)
+        .select(col("id") +: kernels.zipWithIndex.map { case (k, i) => k.as(s"k$i") }: _*)
+      def collectUnder(ws: String, mode: String): Seq[Row] = {
+        spark.conf.set("spark.sql.codegen.wholeStage", ws)
+        spark.conf.set("spark.sql.codegen.factoryMode", mode)
+        try df.orderBy("id").collect().toSeq
+        finally {
+          spark.conf.unset("spark.sql.codegen.wholeStage")
+          spark.conf.unset("spark.sql.codegen.factoryMode")
+        }
+      }
+      val interpreted = collectUnder("false", "NO_CODEGEN")
+      val generated = collectUnder("true", "CODEGEN_ONLY")
+      val bad = interpreted.zip(generated).filter { case (i, g) => i != g }
+      Prop(bad.isEmpty && interpreted.size == rows.size) :|
+        s"${bad.size} rows differ, first: ${bad.headOption}; rows=${rows.take(3)}"
+    }
+    val result = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(12).withInitialSeed(org.scalacheck.rng.Seed(8L)), prop)
+    assert(result.passed, result.status.toString)
   }
 
   test("charset cache: a junk-name flood keeps real entries and stays bounded") {

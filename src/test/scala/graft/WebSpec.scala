@@ -43,7 +43,8 @@ class WebSpec extends SparkTestBase {
   }
 
   test("as-of join bucketed/salted variant matches brute force") {
-    checkAsOf(WebFeatures.backfillEvents(events, pages, bucketSeconds = Some(7 * 86400L)),
+    checkAsOf(AsOfJoin.backwardBucketed(events, pages.select("url", "warc_ts", "text", "lang"),
+      Seq("url"), "ts", Seq("url"), "warc_ts", Seq("warc_ts", "text", "lang"), 7 * 86400L),
       strict = false, tolerance = None)
   }
 
