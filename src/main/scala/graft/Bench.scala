@@ -1,5 +1,6 @@
 package graft
 
+import graft.Json.{Obj, RawJson}
 import graft.web.{Pages, WebFeatures}
 import org.apache.spark.sql.SparkSession
 
@@ -8,26 +9,20 @@ import org.apache.spark.sql.SparkSession
   * the synthetic page table.
   */
 object Bench {
-  /** Materialize the deterministic page/event tables once per (urls) size — the timed
+  /** The headline job, built untimed: its output row count, and the timed region — the
+    * point-in-time features and the as-of event backfill written to noop sinks. The
+    * deterministic page/event tables are materialized once per `numUrls`, so the timed
     * workload is scan → features, like production, not synthetic generation.
     */
-  def ensureTables(spark: SparkSession, numUrls: Long): (String, String) = {
+  def headlineJob(spark: SparkSession, numUrls: Long): (Long, () => Unit) = {
     val base = Probe.materialize(s"graft_bench_$numUrls") { base =>
       Pages.generate(spark, numUrls, numPartitions = 128)
         .write.mode("overwrite").parquet(s"$base/pages")
       Pages.events(spark, spark.read.parquet(s"$base/pages"))
         .write.mode("overwrite").parquet(s"$base/events")
     }
-    (s"$base/pages", s"$base/events")
-  }
-
-  /** The headline job, built untimed: its output row count, and the timed region — the
-    * point-in-time features and the as-of event backfill written to noop sinks.
-    */
-  def headlineJob(spark: SparkSession, numUrls: Long): (Long, () => Unit) = {
-    val (pagesDir, eventsDir) = ensureTables(spark, numUrls)
-    val pages = spark.read.parquet(pagesDir)
-    val events = spark.read.parquet(eventsDir)
+    val pages = spark.read.parquet(s"$base/pages")
+    val events = spark.read.parquet(s"$base/events")
     val rows = pages.count() + events.count() // output cardinalities, computed untimed
     val jobs = Seq(WebFeatures.pointInTime(pages), WebFeatures.backfillEvents(events, pages))
     // The two jobs run CONCURRENTLY: Spark's scheduler interleaves their stages, so
@@ -37,13 +32,6 @@ object Bench {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     (rows, () => jobs.map(df => Future(Probe.noop(df))).foreach(Await.result(_, Duration.Inf)))
-  }
-
-  /** One headline run: (output rows, rows/sec). */
-  def headline(spark: SparkSession, numUrls: Long): (Long, Double) = {
-    val (rows, job) = headlineJob(spark, numUrls)
-    val (_, secs) = Probe.timed(job())
-    (rows, rows / secs)
   }
 
   /** Fixed-work host-envelope probe: sort + hash-fold 16M seeded longs (128 MB —
@@ -114,22 +102,20 @@ object Bench {
     val hRate = hRows / hSecs
     val probeSecs = cpuProbe() // after the measured work: probe under the same host state
     val gcMs = gcMillis()
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).filter(_ >= 0).sum else 0.0
-    val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val total = results.map(_._2).filter(_ >= 0).sum
     // the policy travels with the number: readers of the JSON/BASELINE must know the
     // headline is a best-of-N steady-state figure, not a single cold run
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"sf":"$sfDir",""" +
-      s""""headline_rows":$hRows,"headline_rows_per_sec":${hRate.toLong},""" +
-      s""""headline_policy":"best-of-$headlineRuns after untimed warmup",""" +
-      s""""headline_urls":$headlineUrls,"cpus":${GraftSession.cpus},""" +
-      s""""partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
+    println(Json(Obj("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> Obj(results: _*), "errors" -> errors.toSeq, "sf" -> sfDir,
+      "headline_rows" -> hRows, "headline_rows_per_sec" -> hRate.toLong,
+      "headline_policy" -> s"best-of-$headlineRuns after untimed warmup",
+      "headline_urls" -> headlineUrls, "cpus" -> GraftSession.cpus,
+      "partitions" -> spark.conf.get("spark.sql.shuffle.partitions").toInt,
       // host-envelope self-calibration: probe_secs = fixed-work single-thread
       // sort+hash (min-of-3; bigger = a slower/noisier host granted this JVM),
       // gc_ms = total JVM GC time across the whole bench. Interpretation rules in
       // BENCH/BASELINE.md.
-      f""""probe_secs":$probeSecs%.3f,"gc_ms":$gcMs}""")
+      "probe_secs" -> RawJson(f"$probeSecs%.3f"), "gc_ms" -> gcMs)))
     spark.stop()
   }
 }

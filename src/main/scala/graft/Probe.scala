@@ -1,5 +1,6 @@
 package graft
 
+import graft.Json.{Obj, RawJson}
 import graft.data.{Decontaminate, Dedup, LmQuality, Sampling}
 import graft.functions.TrigramLmModel
 import graft.web.{GraftMetricsListener, HostGraph, PrefixAgg}
@@ -30,16 +31,14 @@ object Probe {
   /** One untimed warm-up call (JIT, codegen, parquet footers), then the fastest of
     * `runs` timed calls. Host noise is one-sided — a run can be slowed down, never sped
     * up — so the minimum is the honest estimate of what the engine does. Every call's
-    * time goes to stderr. Returns (result of the last call, best seconds).
+    * time goes to stderr. Returns (result of the fastest call, its seconds).
     */
-  def bestOf[T](label: String, runs: Int = Runs)(body: => T): (T, Double) = {
-    val samples = (0 to runs).map { r =>
+  def bestOf[T](label: String, runs: Int = Runs)(body: => T): (T, Double) =
+    (0 to runs).map { r =>
       val sample = timed(body)
       System.err.println(f"[probe] $label ${if (r == 0) "warm-up" else s"run $r"}: ${sample._2}%.3fs")
       sample
-    }.tail
-    (samples.last._1, samples.map(_._2).min)
-  }
+    }.tail.minBy(_._2)
 
   /** Runs `write(dir)` once for `dir` = tmpdir/`name`: the `_READY` marker written after
     * it succeeds makes later calls, in any JVM, reuse the tables. The timed work is then
@@ -69,20 +68,6 @@ object Probe {
     * Catalyst prune the feature expressions away.
     */
   def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
-
-  /** A JSON object whose fields keep their order. */
-  private final case class Obj(fields: (String, Any)*)
-  private final case class RawJson(text: String)
-
-  private def json(v: Any): String = v match {
-    case Obj(fs @ _*) => fs.map { case (k, x) => json(k) + ":" + json(x) }.mkString("{", ",", "}")
-    case RawJson(text) => text
-    case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case o: Option[_] => o.fold("null")(json)
-    case xs: Seq[_] => xs.map(json).mkString("[", ",", "]")
-    case x => x.toString
-  }
 
   /** A workload: its default size and the run, from the untimed setup through its
     * timed bodies to the fields of its JSON line.
@@ -242,14 +227,8 @@ object Probe {
     val name = args.headOption.getOrElse(sys.error(usage))
     val workload = workloads.getOrElse(name, sys.error(usage))
     val size = args.lift(1).getOrElse(workload.size)
-    val listener = GraftMetricsListener.attach(spark)
-    val fields =
-      try workload.run(spark, size, sfDir)
-      finally {
-        Thread.sleep(300) // listener bus drain
-        spark.sparkContext.removeSparkListener(listener)
-      }
-    json(Obj(Seq("workload" -> name, "size" -> size,
+    val (fields, listener) = GraftMetricsListener.during(spark)(workload.run(spark, size, sfDir))
+    Json(Obj(Seq("workload" -> name, "size" -> size,
       "cpus" -> spark.sparkContext.defaultParallelism,
       "partitions" -> spark.conf.get("spark.sql.shuffle.partitions").toInt,
       "policy" -> s"best-of-$Runs after untimed warmup") ++ fields ++

@@ -1,8 +1,7 @@
 package graft.dataset
 
 import graft.core._
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Data + logical schema + explicit row order (reference: dataset/dataset.py).
@@ -47,15 +46,4 @@ object GraftDataset {
       }
     GraftDataset(base, schema, orderBy)
   }
-
-  def fromParquet(spark: SparkSession, path: String, schema: FeatureSchema,
-      orderBy: Seq[String] = Nil, dropColumnsOutsideSchema: Boolean = false): GraftDataset =
-    apply(spark.read.parquet(path), schema, orderBy, dropColumnsOutsideSchema)
-
-  /** Materialize an ingestion row index usable as the explicit order key when the data
-    * has no natural event-time order. Computed before any shuffle, so it reflects file
-    * order deterministically for a deterministic input layout.
-    */
-  def withRowIndex(df: DataFrame, schema: FeatureSchema, idxName: String = "__row_idx"): GraftDataset =
-    GraftDataset(df.withColumn(idxName, monotonically_increasing_id()), schema, Seq(idxName))
 }

@@ -1,5 +1,8 @@
 package graft.web
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.Json
+import graft.Json.Obj
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -31,23 +34,23 @@ object Checkpoint {
     try s.iterator().asScala.toVector finally s.close()
   }
 
+  /** (snapshot id, file) of every committed snapshot; none before the first commit. */
+  private def snapshots(dir: String): Seq[(Long, java.nio.file.Path)] = {
+    val md = manifestDir(dir)
+    if (!Files.exists(md)) Nil
+    else listDir(md).map(p => p.getFileName.toString -> p).collect {
+      case (n, p) if n.startsWith("snapshot-") =>
+        n.stripPrefix("snapshot-").stripSuffix(".json").toLong -> p
+    }
+  }
+
   /** Committed partition values = union of all snapshot files (optionally only up to
     * `asOfSnapshot`, giving Iceberg-style time travel over the commit history).
     */
-  def committed(dir: String, asOfSnapshot: Long = Long.MaxValue): Map[String, PartitionCommit] = {
-    val md = manifestDir(dir)
-    if (!Files.exists(md)) return Map.empty
-    listDir(md).iterator
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("snapshot-") &&
-          n.stripPrefix("snapshot-").stripSuffix(".json").toLong <= asOfSnapshot
-      }
-      .flatMap { p =>
-        Files.readAllLines(p).asScala.filter(_.nonEmpty).map(parseLine)
-      }
+  def committed(dir: String, asOfSnapshot: Long = Long.MaxValue): Map[String, PartitionCommit] =
+    snapshots(dir).collect { case (id, p) if id <= asOfSnapshot => p }
+      .flatMap(p => Files.readAllLines(p).asScala.filter(_.nonEmpty).map(readLine))
       .map(c => c.value -> c).toMap
-  }
 
   /** Time-travel read: the table as of a given snapshot id — only partitions committed
     * by snapshots ≤ `snapshotId` are visible, regardless of what later runs added.
@@ -60,14 +63,7 @@ object Checkpoint {
     else df.where(col(partitionCol).cast("string").isin(visible: _*))
   }
 
-  def latestSnapshotId(dir: String): Long = {
-    val md = manifestDir(dir)
-    if (!Files.exists(md)) return -1L
-    listDir(md).iterator
-      .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("snapshot-") => s.stripPrefix("snapshot-").stripSuffix(".json").toLong }
-      .foldLeft(-1L)(math.max)
-  }
+  def latestSnapshotId(dir: String): Long = snapshots(dir).map(_._1).foldLeft(-1L)(math.max)
 
   /** Write `df` partitioned by `partitionCol`, skipping committed partitions, then
     * commit a new snapshot atomically. Each partition directory is written via
@@ -115,13 +111,15 @@ object Checkpoint {
   }
 
   private def renderLine(c: PartitionCommit): String =
-    s"""{"value":"${c.value}","rows":${c.rows},"wallMillis":${c.wallMillis}}"""
+    Json(Obj("value" -> c.value, "rows" -> c.rows, "wallMillis" -> c.wallMillis))
 
-  private def parseLine(s: String): PartitionCommit = {
-    def field(name: String): String = {
-      val m = ("\"" + name + "\":\"?([^\",}]*)\"?").r.findFirstMatchIn(s)
-      m.map(_.group(1)).getOrElse(throw new IllegalArgumentException(s"bad manifest line: $s"))
-    }
-    PartitionCommit(field("value"), field("rows").toLong, field("wallMillis").toLong)
+  private val mapper = new ObjectMapper()
+
+  private def readLine(line: String): PartitionCommit = {
+    val node = mapper.readTree(line)
+    def field(name: String, ok: JsonNode => Boolean): JsonNode = Option(node.get(name))
+      .filter(ok).getOrElse(throw new IllegalArgumentException(s"bad manifest line: $line"))
+    PartitionCommit(field("value", _.isTextual).asText,
+      field("rows", _.isIntegralNumber).asLong, field("wallMillis", _.isIntegralNumber).asLong)
   }
 }

@@ -1,9 +1,12 @@
 package graft.web
 
+import graft.Json
+import graft.Json.{Obj, RawJson}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.InternalBridge
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.{AtomicLong, LongAdder}
+import java.util.concurrent.atomic.LongAdder
 import scala.jdk.CollectionConverters._
 
 /** Per-stage / per-partition lineage metrics via SparkListener (north rule: row-count
@@ -21,7 +24,6 @@ final class GraftMetricsListener extends SparkListener {
   // executor-side GC attributed to tasks: jvmGCTime travels in TaskMetrics, so this
   // works across real executor JVMs (local-cluster), where a driver MXBean cannot see
   val totalJvmGcTimeMs = new LongAdder
-  val maxTaskMs = new AtomicLong(0)
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
     val m = e.taskMetrics
@@ -35,7 +37,6 @@ final class GraftMetricsListener extends SparkListener {
       totalRecordsRead.add(stat.recordsRead)
       totalRunTimeMs.add(stat.runTimeMs)
       totalJvmGcTimeMs.add(m.jvmGCTime)
-      maxTaskMs.updateAndGet(x => math.max(x, stat.runTimeMs))
     }
   }
 
@@ -49,20 +50,29 @@ final class GraftMetricsListener extends SparkListener {
 
   def summaryJson: String = {
     val ts = taskStats
-    s"""{"tasks":${ts.size},"recordsRead":${totalRecordsRead.sum()},""" +
-      s""""recordsWritten":${ts.map(_.recordsWritten).sum},""" +
-      s""""totalTaskMs":${totalRunTimeMs.sum()},"maxTaskMs":${maxTaskMs.get()},""" +
-      s""""jvmGcMs":${totalJvmGcTimeMs.sum()},""" +
-      s""""memorySpilledBytes":${ts.map(_.memorySpilled).sum},""" +
-      s""""diskSpilledBytes":${ts.map(_.diskSpilled).sum},""" +
-      s""""skewRatio":${f"${skewRatio}%.3f"}}"""
+    Json(Obj("tasks" -> ts.size, "recordsRead" -> totalRecordsRead.sum(),
+      "recordsWritten" -> ts.map(_.recordsWritten).sum, "totalTaskMs" -> totalRunTimeMs.sum(),
+      "maxTaskMs" -> ts.map(_.runTimeMs).maxOption.getOrElse(0L),
+      "jvmGcMs" -> totalJvmGcTimeMs.sum(),
+      "memorySpilledBytes" -> ts.map(_.memorySpilled).sum,
+      "diskSpilledBytes" -> ts.map(_.diskSpilled).sum,
+      "skewRatio" -> RawJson(f"$skewRatio%.3f")))
   }
 }
 
 object GraftMetricsListener {
-  def attach(spark: SparkSession): GraftMetricsListener = {
+  /** Runs `body` with a fresh listener attached, waits until the listener bus has
+    * delivered every event `body` caused, then detaches it. Returns the body's result
+    * and the listener, whose totals then cover exactly the body's tasks.
+    */
+  def during[T](spark: SparkSession)(body: => T): (T, GraftMetricsListener) = {
     val l = new GraftMetricsListener
-    spark.sparkContext.addSparkListener(l)
-    l
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      InternalBridge.drainListeners(sc)
+      (r, l)
+    } finally sc.removeSparkListener(l)
   }
 }

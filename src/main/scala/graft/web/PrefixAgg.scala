@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.InternalBridge
 import org.apache.spark.sql.types._
+import scala.collection.immutable.ArraySeq
 
 /** Globally-ordered running (prefix) aggregates WITHOUT a whole-table
   * single-partition window.
@@ -65,9 +66,25 @@ object PrefixAgg {
     * strictly below `v`, i.e. range r = (bounds(r-1), bounds(r)]. Monotone in `v`,
     * so concatenating buckets in id order is the global key order.
     */
-  def bucketOf(v: Double, bounds: Array[Double]): Int = {
-    val i = java.util.Arrays.binarySearch(bounds, v)
+  def bucketOf(v: Double, bounds: ArraySeq.ofDouble): Int = {
+    val i = java.util.Arrays.binarySearch(bounds.unsafeArray, v)
     if (i >= 0) i else -i - 1
+  }
+
+  /** [[bucketOf]] over `ranges`-quantile bounds of `key` (one eager `approxQuantile`
+    * job). An `ArraySeq` of bounds makes equal builds plan-equal and prints its values.
+    */
+  private[graft] def rangeId(df: DataFrame, key: Column, ranges: Int): Column = {
+    val keyName = "__graft_prefix_key"
+    val probs = (1 until ranges).map(_.toDouble / ranges).toArray
+    val bounds =
+      if (probs.isEmpty) Array.empty[Double]
+      else df.select(key.as(keyName)).stat
+        .approxQuantile(keyName, probs, 1.0 / math.max(100, 10 * ranges))
+        .distinct.sorted
+    if (bounds.isEmpty) lit(0)
+    else graft.functions.KernelCall(PrefixAgg, "bucketOf", IntegerType, key,
+      new ArraySeq.ofDouble(bounds))
   }
 
   def running(df: DataFrame, orderBy: Seq[String], specs: Seq[RunningSpec],
@@ -94,17 +111,7 @@ object PrefixAgg {
       case t => throw new IllegalArgumentException(
         s"leading order column must be numeric or timestamp for range bucketing, got $t")
     }
-    val keyName = "__graft_prefix_key"
-    val probs = (1 until ranges).map(_.toDouble / ranges).toArray
-    val bounds: Array[Double] =
-      if (probs.isEmpty) Array.empty
-      else df.select(keyD.as(keyName)).stat
-        .approxQuantile(keyName, probs, 1.0 / math.max(100, 10 * ranges))
-        .distinct.sorted
     val rid = "__graft_prefix_rid"
-    val ridCol =
-      if (bounds.isEmpty) lit(0)
-      else graft.functions.KernelCall(PrefixAgg, "bucketOf", IntegerType, keyD, bounds)
 
     // numeric inputs pre-cast to double (Count needs no input column at all)
     val inName: Map[String, String] = specs.collect {
@@ -114,7 +121,7 @@ object PrefixAgg {
       .withColumns(specs.collect { case s if s.op != Op.Count =>
         inName(s.out) -> col(s.input).cast("double")
       }.toMap)
-      .withColumn(rid, ridCol)
+      .withColumn(rid, rangeId(df, keyD, ranges))
       .repartition(ranges, col(rid))
       // several ranges may hash into one task: sort by (rid, order) and let the
       // fold reset its accumulators on every rid change

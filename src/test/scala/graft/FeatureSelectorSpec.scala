@@ -73,7 +73,7 @@ class FeatureSelectorSpec extends SparkTestBase {
       spark.sparkContext.addSparkListener(l)
       try {
         FeatureSelector.getReport(ds, features, method)
-        Thread.sleep(300) // listener bus drain
+        org.apache.spark.sql.graftbridge.InternalBridge.drainListeners(spark.sparkContext)
         jobs.get()
       } finally spark.sparkContext.removeSparkListener(l)
     }

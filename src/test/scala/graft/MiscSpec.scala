@@ -125,4 +125,20 @@ class MiscSpec extends SparkTestBase {
     assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
     assert(sha == "487f925a5d4b0c75a5cb2e9e60b68b0b49252fd60e4a167c964354603421ab6c", "an oracleSql string changed")
   }
+
+  test("Json strings read back unchanged through a JSON parser (property)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val char = Gen.frequency(4 -> Gen.choose('\u0000', '\u001f'), 3 -> Gen.oneOf('"', '\\'),
+      3 -> Gen.choose(' ', '~'), 2 -> Gen.choose('\u00a0', '\ud7ff'))
+    val piece = Gen.frequency(8 -> char.map(_.toString),
+      2 -> Gen.choose(0x10000, 0x10ffff).map(cp => new String(Character.toChars(cp))))
+    val text = Gen.frequency(1 -> Gen.const(""), 9 -> Gen.listOf(piece).map(_.mkString))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val prop = Prop.forAllNoShrink(text) { s =>
+      mapper.readTree(Json(Json.Obj("k" -> s))).get("k").asText == s
+    }
+    val result = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(500).withInitialSeed(org.scalacheck.rng.Seed(9L)), prop)
+    assert(result.passed, result)
+  }
 }

@@ -253,8 +253,8 @@ class PlanSpec extends SparkTestBase {
       spark.listenerManager.register(l)
       try {
         graft.selection.FeatureSelector.getReport(ds, names, method)
-        val deadline = System.nanoTime() + 10000000000L // the listener bus delivers asynchronously
-        while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+        // query-execution listeners are delivered through the same listener bus
+        org.apache.spark.sql.graftbridge.InternalBridge.drainListeners(spark.sparkContext)
       } finally spark.listenerManager.unregister(l)
       assert(plans.size == 1, s"${method.label}: expected one query, got ${plans.size}")
       val p = plans.peek()

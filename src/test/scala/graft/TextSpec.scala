@@ -6,6 +6,7 @@ import graft.transformers._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
+import scala.collection.immutable.ArraySeq
 
 /** Goldens from test_text_transformers.py (defaults: bigram jaccard, jw weight 0.1). */
 class TextSpec extends SparkTestBase {
@@ -214,7 +215,7 @@ class TextSpec extends SparkTestBase {
       hashfns.simhashBucketKeys(hashfns.simhash64(a), 16, (0 until 4).combinations(3).toSeq),
       hashfns.md5Fraction(a), hashfns.simhash64(a), hashfns.rollingFingerprint(a),
       KernelCall(graft.web.PrefixAgg, "bucketOf", IntegerType,
-        length(a).cast("double"), Array(1.0, 3.0, 7.0))) ++
+        length(a).cast("double"), new ArraySeq.ofDouble(Array(1.0, 3.0, 7.0)))) ++
       CharClassKernels.byRegex.keys.toSeq.sorted.map(rx =>
         TextCountMatchesTransformer(ColumnSpec.text("a"), rx).plan(ctx, new TempNamer).output)
     val rowGen = for {

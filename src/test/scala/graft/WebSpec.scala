@@ -172,15 +172,27 @@ class WebSpec extends SparkTestBase {
       .select("url", "warc_ts", "text", "bucket")
     Checkpoint.resumeWrite(spark, df.where(col("bucket") === 0), "bucket", dir) // ~90% of rows
     val n = df.count()
-    val l = GraftMetricsListener.attach(spark)
-    val r2 = Checkpoint.resumeWrite(spark, df, "bucket", dir)
-    Thread.sleep(500) // listener bus drain
-    spark.sparkContext.removeSparkListener(l)
+    val (r2, l) = GraftMetricsListener.during(spark)(Checkpoint.resumeWrite(spark, df, "bucket", dir))
     assert(r2.written.map(_.value) == Seq("1"))
     // reads = input scan (≤ n) + recount of ONLY bucket 1 (~0.1 n); a full-table
     // recount on commit would add the committed ~0.9 n again
     assert(l.totalRecordsRead.sum() < (1.35 * n).toLong,
       s"commit appears to re-scan committed data: read=${l.totalRecordsRead.sum()} of n=$n")
+  }
+
+  test("checkpoint resume keeps partition values that contain , \" and }") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt3").toString
+    val values = Seq("a", "a,b", "say \"hi\"", "x}y")
+    val df = values.flatMap(v => (0 until 3).map(i => (v, i))).toDF("v", "i")
+    Checkpoint.resumeWrite(spark, df.where(col("v") === "a,b"), "v", dir)
+    val r2 = Checkpoint.resumeWrite(spark, df, "v", dir)
+    assert(r2.skipped == Seq("a,b"), r2)
+    assert(Checkpoint.committed(dir).keySet == values.toSet)
+    assert(Checkpoint.committed(dir).values.forall(_.rows == 3))
+    val back = spark.read.parquet(s"$dir/data").groupBy("v").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(back == values.map(_ -> 3L).toMap)
   }
 
   test("end-to-end kill/resume of the feature job reproduces the direct run exactly") {
@@ -267,6 +279,14 @@ class WebSpec extends SparkTestBase {
     assert(plan.contains("hashpartitioning(__graft_prefix_rid"), plan.take(2000))
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
       plan.take(2000))
+  }
+
+  test("prefix range ids built twice give equal plans that print their bounds") {
+    val df = spark.range(1000).select(col("id"), (col("id") * 7 % 101).cast("double").as("k"))
+    val Seq(a, b) = Seq.fill(2)(df.withColumn("rid", PrefixAgg.rangeId(df, col("k"), 8)))
+    assert(a.sameSemantics(b))
+    val plan = a.queryExecution.explainString(org.apache.spark.sql.execution.ExtendedMode)
+    assert(!plan.contains("[D@") && plan.contains("ArraySeq("), plan)
   }
 
   test("prefix running aggregates survive degenerate range geometries") {
@@ -554,9 +574,7 @@ class WebSpec extends SparkTestBase {
   }
 
   test("metrics listener captures per-task lineage and skew ratio") {
-    val l = GraftMetricsListener.attach(spark)
-    pages.groupBy("domain_id").count().count()
-    Thread.sleep(500) // let the listener bus drain
+    val (_, l) = GraftMetricsListener.during(spark)(pages.groupBy("domain_id").count().count())
     assert(l.taskStats.nonEmpty)
     assert(l.summaryJson.contains("\"skewRatio\""))
     assert(l.totalRecordsRead.sum() >= 0)
