@@ -93,7 +93,7 @@ object Probe {
         Obj("gate" -> name, "secs" -> secs, "rows" -> rows)
       })
     }),
-    // global running aggregates, the one deliberately sequential operator; size = rows.
+    // global running aggregates without a whole-table window (PrefixAgg); size = rows.
     // The input mimics the events table: an epoch-seconds order key in random disk
     // order, a unique tie-breaker, a nullable double and two string payload columns
     // wide enough that row-codec overhead shows.

@@ -664,8 +664,8 @@ object Queries {
       """length(regexp_extract_all(t, '\d{3,}')) AS t_count_consecutive_digits """ +
       "FROM d LEFT JOIN ent ON ent.doc_id = d.doc_id ORDER BY d.doc_id")
 
-  /** GLOBAL running aggregates via the scalable prefix operator (range partition +
-    * partition-local fold + broadcast offsets — graft.web.PrefixAgg) against
+  /** GLOBAL running aggregates via the scalable prefix operator (range ids + a
+    * running window per range + broadcast offsets — graft.web.PrefixAgg) against
     * DuckDB's sequential global window. Forces several range partitions so the
     * cross-partition offset arithmetic is actually exercised at gate scale.
     */

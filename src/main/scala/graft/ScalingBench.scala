@@ -2,6 +2,7 @@ package graft
 
 import graft.Json.{Obj, RawJson}
 import graft.web.GraftMetricsListener
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 
 /** Two-cluster-size scaling evidence for the north rule (BASELINE.json: throughput
@@ -14,7 +15,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Env: SPARK_GRAFT_SCALE_N (N, default 2), SPARK_GRAFT_EXEC_MEM_MB (executor heap,
   * default 8192), SPARK_GRAFT_HEADLINE_URLS (default 1000000), and SPARK_HOME, where
-  * the local-cluster workers find Spark's launch scripts.
+  * the local-cluster workers find Spark's launch scripts and keep each executor's logs
+  * (`work/<application id>`, removed after each level).
   *
   * Prints one JSON line:
   * {"mode":"local-cluster","n":…,"rateN":…,"rate4N":…,"efficiency":…,"occupancyN":…,
@@ -23,6 +25,7 @@ import org.apache.spark.sql.SparkSession
 object ScalingBench {
   private val execCores = 4
   private val execMemMb = sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM_MB", "8192").toInt
+  private val sparkHome = sys.env.getOrElse("SPARK_HOME", "/opt/spark")
 
   private def session(units: Int): SparkSession =
     GraftSession.builder(s"local-cluster[$units,$execCores,$execMemMb]", partitions = 128)
@@ -33,7 +36,7 @@ object ScalingBench {
       // defaults to 1g (-Xmx1024M observed in the launch command) — request the
       // full worker allotment or every sort/aggregate spills
       .config("spark.executor.memory", s"${execMemMb}m")
-      .config("spark.test.home", sys.env.getOrElse("SPARK_HOME", "/opt/spark"))
+      .config("spark.test.home", sparkHome)
       // executors are fresh JVMs: they need this build's classes (SparkContext itself
       // prepends the JDK17 module opens to their java options)
       .config("spark.executor.extraClassPath",
@@ -78,6 +81,7 @@ object ScalingBench {
     */
   private def run(units: Int, urls: Long): (Double, Double) = {
     val spark = session(units)
+    val appId = spark.sparkContext.applicationId
     spark.sparkContext.setLogLevel("WARN")
     try {
       val (rows, job) = Bench.headlineJob(spark, urls)
@@ -93,7 +97,10 @@ object ScalingBench {
           s"throttledNsDelta=${thr1 - thr0} stealTicksDelta=${steal1 - steal0}")
         (rate, occupancy)
       }._1
-    } finally spark.stop()
+    } finally {
+      spark.stop()
+      FileUtils.deleteDirectory(new java.io.File(s"$sparkHome/work/$appId"))
+    }
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,10 +1,8 @@
 package graft.web
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.InternalBridge
 import org.apache.spark.sql.types._
 import scala.collection.immutable.ArraySeq
 
@@ -16,10 +14,10 @@ import scala.collection.immutable.ArraySeq
   * But a global running aggregate is a classic two-level prefix computation:
   *
   *  1. split the key space into contiguous RANGES and group rows by range id;
-  *  2. one imperative prefix scan per range (`mapPartitions` — the single
-  *     genuinely sequential-per-range computation in this engine, and the right
-  *     physical shape for it);
-  *  3. aggregate one total row per range (map-side partials + a tiny exchange),
+  *  2. a running window per range (`ROWS UNBOUNDED PRECEDING`, partitioned by
+  *     range id): Spark's `WindowExec` updates it once per row over the range's
+  *     sorted rows, so the operator stays in the plan and in its SQLMetrics;
+  *  3. aggregate one total row per range (after the range shuffle, in row order),
   *     prefix those P rows with an ordinary window (P = range count, so the
   *     "single partition" there is a few KB), broadcast-join the per-range
   *     offsets back, and combine.
@@ -28,7 +26,7 @@ import scala.collection.immutable.ArraySeq
   * search over quantile bounds computed once up front — NOT `spark_partition_id()`
   * over `repartitionByRange`. That distinction is load-bearing: Spark's
   * `RangePartitioner` samples its bounds with an RDD-id-derived seed, so the two
-  * plan branches that consume the sorted frame (the running scan and the totals
+  * plan branches that consume the sorted frame (the running window and the totals
   * aggregate) can recompute the exchange with DIFFERENT bounds, silently
   * misaligning rows and offsets (observed: ~94% of rows wrong at sf0.01). A
   * column-derived range id is identical on every recomputation by construction.
@@ -39,12 +37,16 @@ import scala.collection.immutable.ArraySeq
   *
   * Semantics match `ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW` over the
   * total order `orderBy`: Count counts rows; Sum/Min/Max skip nulls and are null
-  * until the first non-null value. `orderBy` must be a total order (include a
-  * unique tie-breaker) — the engine-wide contract for running features. The
-  * leading order column must be numeric or a timestamp (it defines the range
+  * until the first non-null value. Min/Max follow Spark's ordering: NaN is the
+  * greatest value, and -0.0 equals 0.0, so of two tied zeros the one first in
+  * `orderBy` wins. (The range totals see that order only while a Sum output is
+  * read: without one, Spark's optimizer drops their sort, and a range whose extreme
+  * is a tied zero may pass on either sign.) `orderBy` must be a total order
+  * (include a unique tie-breaker) — the engine-wide contract for running features.
+  * The leading order column must be numeric or a timestamp (it defines the range
   * key; timestamps bucket at one-second granularity, which preserves contiguity
   * because truncation is monotone). Sum over doubles reassociates once per range
-  * boundary (offset + local), so the last ulp can differ from a sequential fold —
+  * boundary (offset + local), so the last ulp can differ from a sequential window —
   * the oracle gate compares at 6 dp like every float gate.
   */
 object PrefixAgg {
@@ -123,96 +125,33 @@ object PrefixAgg {
       }.toMap)
       .withColumn(rid, rangeId(df, keyD, ranges))
       .repartition(ranges, col(rid))
-      // several ranges may hash into one task: sort by (rid, order) and let the
-      // fold reset its accumulators on every rid change
+      // several ranges may hash into one task; the (rid, order) sort feeds both the
+      // range-local window and the in-order totals below
       .sortWithinPartitions(col(rid) +: orderBy.map(col): _*)
 
-    // ---- 2) range-local running values, one pass, no further shuffle. The fold
-    //      runs at the InternalRow level — rows stay in Tungsten format end-to-end.
-    //      The previous formulation (`Dataset.mapPartitions` + `Encoders.row`)
-    //      deserialized every row into a boxed external Row and re-encoded it, a
-    //      pure codec tax on the one deliberately-sequential pass: 18.0s → 10.0s
-    //      (1.11M → 2.00M rows/s) at 20M rows, local[32] (graft.PrefixBench,
-    //      BENCH/BASELINE.md round 4). Pass-through columns ride along inside the
-    //      UnsafeProjection; the fold reads only rid and the pre-cast input doubles.
-    val localNames = specs.map(s => s"__graft_prefix_local_${s.out}")
-    val outSchema = StructType(grouped.schema.fields ++ specs.zip(localNames).map {
-      case (s, n) =>
-        StructField(n, if (s.op == Op.Count) LongType else DoubleType, nullable = true)
-    })
-    val fieldIdx = grouped.schema.fieldNames.zipWithIndex.toMap
-    val ridIdx = fieldIdx(rid)
-    val ops: Array[Op] = specs.map(_.op).toArray
-    val inputIdx: Array[Int] = specs.map { s =>
-      if (s.op == Op.Count) -1 else fieldIdx(inName(s.out))
-    }.toArray
-    val localRdd = grouped.queryExecution.toRdd.mapPartitions { it =>
-      val n = ops.length
-      var curRid = 0
-      var curRidNull = false
-      var first = true
-      var cnt = 0L
-      val acc = new Array[Double](n)
-      val seen = new Array[Boolean](n)
-      val extra = new GenericInternalRow(n)
-      val joined = new JoinedRow
-      val proj = UnsafeProjection.create(outSchema)
-      it.map { row =>
-        // a null leading key yields a null rid (its own range, globally first)
-        val rNull = row.isNullAt(ridIdx)
-        val r = if (rNull) 0 else row.getInt(ridIdx)
-        if (first || rNull != curRidNull || r != curRid) {
-          curRid = r; curRidNull = rNull; first = false
-          cnt = 0L
-          java.util.Arrays.fill(seen, false)
-        }
-        cnt += 1L
-        var j = 0
-        while (j < n) {
-          ops(j) match {
-            case Op.Count => extra.update(j, cnt)
-            case op =>
-              if (!row.isNullAt(inputIdx(j))) {
-                val v = row.getDouble(inputIdx(j))
-                if (!seen(j)) { acc(j) = v; seen(j) = true }
-                else op match {
-                  case Op.Sum => acc(j) += v
-                  // Double.compare, not < / >: Spark's min/max (and the totals
-                  // branch + least/greatest combine) order NaN as GREATEST and
-                  // -0.0 < 0.0; raw comparisons would make a NaN's effect depend
-                  // on which range it landed in
-                  case Op.Min => if (java.lang.Double.compare(v, acc(j)) < 0) acc(j) = v
-                  case Op.Max => if (java.lang.Double.compare(v, acc(j)) > 0) acc(j) = v
-                  case Op.Count => ()
-                }
-              }
-              extra.update(j, if (seen(j)) java.lang.Double.valueOf(acc(j)) else null)
-          }
-          j += 1
-        }
-        // the projection's output buffer is reused per row — the standard operator
-        // output contract; downstream operators copy when they buffer
-        proj(joined(row, extra)): org.apache.spark.sql.catalyst.InternalRow
-      }
+    // ---- 2) range-local running values: Spark's running window per range, one
+    //      incremental update per row. It reads the (rid, order) sort above, so
+    //      the window adds no exchange and no second sort.
+    val wLocal = Window.partitionBy(col(rid)).orderBy(orderBy.map(col): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    def agg(s: RunningSpec): Column = s.op match {
+      case Op.Count => count(lit(1))
+      case Op.Sum   => sum(col(inName(s.out)))
+      case Op.Min   => min(col(inName(s.out)))
+      case Op.Max   => max(col(inName(s.out)))
     }
-    val local = InternalBridge.internalCreateDataFrame(spark, localRdd, outSchema)
+    val localNames = specs.map(s => s"__graft_prefix_local_${s.out}")
+    val local = grouped.withColumns(localNames.zip(specs.map(agg(_).over(wLocal))).toMap)
 
     // ---- 3) per-range totals → exclusive prefix offsets → broadcast back.
-    //      Aggregated over `local`, i.e. the SAME shuffled-and-folded RDD lineage the
-    //      probe side scans: Spark core runs the one data shuffle's map stage once
-    //      and both consumers read its files (the fold itself re-runs on the
-    //      aggregate's pass — a cheap streaming scan). Correctness doesn't depend on
-    //      the reuse because rid is a pure row function — an independent
-    //      recomputation buckets every row identically.
-    val totalAggs = specs.map { s =>
-      val a = s.op match {
-        case Op.Count => count(lit(1)).cast("long")
-        case Op.Sum   => sum(col(inName(s.out)))
-        case Op.Min   => min(col(inName(s.out)))
-        case Op.Max   => max(col(inName(s.out)))
-      }
-      a.as(s"__t_${s.out}")
-    }
+    //      Aggregated over `local`: column pruning drops the window from this
+    //      branch, which shuffles only rid, the order keys and the inputs. Each
+    //      range is then aggregated inside one task in (rid, order) order, so a
+    //      total Sum equals the range's last running sum bit for bit. Not
+    //      aggregating before the shuffle is deliberate: merging per-split partials
+    //      in shuffle order reassociates the sums. The two branches agree on
+    //      ranges because rid is a pure row function.
+    val totalAggs = specs.map(s => agg(s).as(s"__t_${s.out}"))
     val totals = local.groupBy(col(rid)).agg(totalAggs.head, totalAggs.tail: _*)
     // UNPARTITIONED window — deliberately: this frame has exactly numRanges rows
     // (64–1024), not corpus rows, so the single-partition WindowExec Spark WARNs
