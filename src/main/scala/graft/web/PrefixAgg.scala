@@ -39,10 +39,8 @@ import scala.collection.immutable.ArraySeq
   * total order `orderBy`: Count counts rows; Sum/Min/Max skip nulls and are null
   * until the first non-null value. Min/Max follow Spark's ordering: NaN is the
   * greatest value, and -0.0 equals 0.0, so of two tied zeros the one first in
-  * `orderBy` wins. (The range totals see that order only while a Sum output is
-  * read: without one, Spark's optimizer drops their sort, and a range whose extreme
-  * is a tied zero may pass on either sign.) `orderBy` must be a total order
-  * (include a unique tie-breaker) — the engine-wide contract for running features.
+  * `orderBy` wins. `orderBy` must be a total order (include a unique tie-breaker)
+  * — the engine-wide contract for running features.
   * The leading order column must be numeric or a timestamp (it defines the range
   * key; timestamps bucket at one-second granularity, which preserves contiguity
   * because truncation is monotone). Sum over doubles reassociates once per range
@@ -151,7 +149,21 @@ object PrefixAgg {
     //      aggregating before the shuffle is deliberate: merging per-split partials
     //      in shuffle order reassociates the sums. The two branches agree on
     //      ranges because rid is a pure row function.
-    val totalAggs = specs.map(s => agg(s).as(s"__t_${s.out}"))
+    //      Min/Max totals spell the window's tie rule out (the extreme value, and of
+    //      equal values such as -0.0 and 0.0 the first in `orderBy`) rather than
+    //      read it off the row order: without a Sum, Spark's optimizer drops the
+    //      sort under this aggregate, since it counts min/max as order-free.
+    def total(s: RunningSpec): Column = {
+      lazy val v = col(inName(s.out))
+      def firstOf(key: Column*) =
+        min_by(v, when(v.isNotNull, struct(key ++ orderBy.map(col): _*)))
+      s.op match {
+        case Op.Min => firstOf(v)
+        case Op.Max => firstOf(!isnan(v), -v) // NaN is the greatest value
+        case _      => agg(s)
+      }
+    }
+    val totalAggs = specs.map(s => total(s).as(s"__t_${s.out}"))
     val totals = local.groupBy(col(rid)).agg(totalAggs.head, totalAggs.tail: _*)
     // UNPARTITIONED window — deliberately: this frame has exactly numRanges rows
     // (64–1024), not corpus rows, so the single-partition WindowExec Spark WARNs

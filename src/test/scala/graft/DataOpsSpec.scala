@@ -2,12 +2,15 @@ package graft
 
 import graft.data._
 import graft.functions.TextKernels
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.scalacheck.{Arbitrary, Gen, Prop, Test => SCTest}
+import org.scalacheck.rng.Seed
 
-/** Training-data ops: dedup family vs brute-force oracles, ANN recall, text analysis,
-  * multimodal plumbing. Runs on the driver-provided documents/embeddings tables plus
-  * synthesized near-duplicates.
+/** Training-data ops: dedup family vs brute-force oracles, ANN recall, text analysis.
+  * Runs on the driver-provided documents/embeddings tables plus synthesized
+  * near-duplicates.
   */
 class DataOpsSpec extends SparkTestBase {
   private val dir = "/root/testdata/sf0.001"
@@ -324,92 +327,6 @@ class DataOpsSpec extends SparkTestBase {
     val b = TextAnalysis.fingerprint(lit("hello world"))
     val r = spark.range(1).select(a.as("a"), b.as("b")).head
     assert(r.getLong(0) == r.getLong(1))
-  }
-
-  test("multimodal plumbing: undecodable and non-image media yield no rows") {
-    import spark.implicits._
-    val img = new java.awt.image.BufferedImage(6, 4, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    val png = bos.toByteArray
-    // crawled-media shape: document text bytes tagged as every kind, plus one real PNG
-    // tagged image (decodes) and the same PNG tagged video (not an image row)
-    val text = docs.where(col("doc_id") < 300).select(col("doc_id"),
-        element_at(array(lit("image"), lit("audio"), lit("video")),
-          (pmod(xxhash64(col("doc_id")), lit(3)) + 1).cast("int")).as("kind"),
-        encode(col("text"), "UTF-8").as("bytes"))
-      .as[Multimodal.MediaRow]
-    assert(text.filter(_.kind == "image").count() > 0)
-    val media = text.union(spark.createDataset(Seq(
-      Multimodal.MediaRow(-1L, "image", png), Multimodal.MediaRow(-2L, "video", png))))
-    val decoded = Multimodal.decodeImages(media).collect()
-    assert(decoded.map(d => (d.doc_id, d.width, d.height)).toSeq == Seq((-1L, 6, 4)))
-    val thumbs = Multimodal.resizeImageBytes(media, 3, 2).collect()
-    assert(thumbs.map(t => (t.doc_id, t.width, t.height)).toSeq == Seq((-1L, 3, 2)))
-  }
-
-  test("multimodal real decode: generated PNGs yield exact dimensions and luma") {
-    import spark.implicits._
-    // 3 solid-color PNGs rendered in-test: black (luma 0), white (luma 1), pure red
-    def png(id: Long, w: Int, h: Int, rgb: Int): Multimodal.MediaRow = {
-      val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, rgb)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      Multimodal.MediaRow(id, "image", bos.toByteArray)
-    }
-    val media = spark.createDataset(Seq(
-      png(1L, 20, 10, 0x000000), png(2L, 8, 8, 0xFFFFFF), png(3L, 5, 7, 0xFF0000)))
-    val out = Multimodal.decodeImages(media).collect().sortBy(_.doc_id)
-    assert(out.map(d => (d.doc_id, d.width, d.height, d.channels)).toSeq ==
-      Seq((1L, 20, 10, 3), (2L, 8, 8, 3), (3L, 5, 7, 3)))
-    assert(math.abs(out(0).meanLuma - 0.0) < 1e-9)
-    assert(math.abs(out(1).meanLuma - 1.0) < 1e-9)
-    assert(math.abs(out(2).meanLuma - 0.299) < 1e-2) // Rec.601 red weight
-    // real resize: thumbnails decode back at the target size
-    val thumbs = Multimodal.resizeImageBytes(media, 4, 4).collect()
-    assert(thumbs.length == 3)
-    thumbs.foreach { t =>
-      val back = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(t.thumbnail))
-      assert(back.getWidth == 4 && back.getHeight == 4)
-    }
-    // undecodable payloads (kind=image, garbage bytes) are dropped, not faked or a crash
-    val dirty = spark.createDataset(Seq(Multimodal.MediaRow(9L, "image", Array[Byte](1, 2, 3))))
-    assert(Multimodal.decodeImages(dirty).collect().isEmpty)
-  }
-
-  test("multimodal decode fixpoint: re-encode → re-decode stats are stable") {
-    import spark.implicits._
-    // horizontal gray gradient with an ANALYTIC mean luma (gray ⇒ luma = v/255
-    // exactly under Rec.601, since the weights sum to 1) — a second oracle on the
-    // real decoder that no hash-based fake could satisfy
-    def gradient(id: Long, w: Int, h: Int): Multimodal.MediaRow = {
-      val img = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) {
-        val v = if (w == 1) 0 else (x * 255) / (w - 1)
-        img.setRGB(x, y, (v << 16) | (v << 8) | v)
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      Multimodal.MediaRow(id, "image", bos.toByteArray)
-    }
-    val w = 16; val h = 4
-    val media = spark.createDataset(Seq(gradient(1L, w, h)))
-    val first = Multimodal.decodeImages(media).collect().head
-    val analytic = (0 until w).map(x => (x * 255 / (w - 1)).toDouble / 255).sum / w
-    assert(first.width == w && first.height == h && first.channels == 3)
-    assert(math.abs(first.meanLuma - analytic) < 1e-9,
-      s"decoded luma ${first.meanLuma} != analytic $analytic")
-    // decode → same-size bilinear resize → PNG re-encode → re-decode: PNG is
-    // lossless and 1:1 bilinear is the identity, so every stat must survive exactly
-    val thumb1 = Multimodal.resizeImageBytes(media, w, h).collect().head
-    val roundTrip1 = spark.createDataset(Seq(Multimodal.MediaRow(1L, "image", thumb1.thumbnail)))
-    val second = Multimodal.decodeImages(roundTrip1).collect().head
-    assert(second == first, s"re-decoded stats drifted: $second vs $first")
-    // and the encoder itself is a fixpoint: a second encode round emits identical bytes
-    val thumb2 = Multimodal.resizeImageBytes(roundTrip1, w, h).collect().head
-    assert(java.util.Arrays.equals(thumb1.thumbnail, thumb2.thumbnail),
-      "PNG re-encode is not deterministic — decode goldens would be unstable")
   }
 
   test("repetition signals: planted line/word/symbol geometry yields exact fractions") {
@@ -1090,96 +1007,141 @@ class DataOpsSpec extends SparkTestBase {
     assert(a.map(_._1).toSet == top)
   }
 
+  // ---- r7 kernel swaps: each kernel against the Column formula it replaced, as a
+  //      seeded ScalaCheck property (generated code and interpreted eval alike)
+
+  /** Text pieces: ASCII, separators, combining marks (bare and composed), surrogate
+    * pairs (emoji, math letters), CJK, Cyrillic, a no-break space. */
+  private val fuzzPiece = Gen.oneOf("a", "b", "Z", "7", " ", "\t", "\n", "-", "_", ".",
+    "\u00e9", "e\u0301", "\u0301", "\u00df", "\u0130", "\u732b", "\u0416", "\ud83c\udf89",
+    "\ud835\udd38", "\u00a0", "ab")
+  /** Null, empty, or 1–12 pieces among which a piece may repeat 20–300 times. */
+  private val fuzzText: Gen[String] = {
+    val run = for { p <- fuzzPiece; n <- Gen.choose(20, 300) } yield p * n
+    Gen.frequency((1, Gen.const(null: String)), (1, Gen.const("")),
+      (8, Gen.choose(1, 12).flatMap(Gen.listOfN(_, Gen.frequency((8, fuzzPiece), (1, run))))
+        .map(_.mkString)))
+  }
+  private val fuzzLong: Gen[Long] = Gen.frequency((6, Arbitrary.arbitrary[Long]),
+    (2, Gen.choose(-999L, 999L)), (1, Gen.oneOf(Long.MinValue, Long.MaxValue, 0L, -1L)))
+
+  private def frame(schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+  private def textFrame(texts: Seq[String]): DataFrame =
+    frame(StructType(Seq(StructField("id", IntegerType), StructField("t", StringType))),
+      texts.zipWithIndex.map { case (t, i) => Row(i, t) })
+
+  /** `mismatches` is empty for 15 seeded draws of `gen`, under whole-stage codegen and
+    * under the interpreted eval. */
+  private def holdsInBothEvals[T](gen: Gen[T], seed: Long)(mismatches: T => Seq[Row]): Unit = {
+    val prop = Prop.forAllNoShrink(gen) { in =>
+      Prop.all(Seq(("true", "CODEGEN_ONLY"), ("false", "NO_CODEGEN")).map { case (ws, mode) =>
+        spark.conf.set("spark.sql.codegen.wholeStage", ws)
+        spark.conf.set("spark.sql.codegen.factoryMode", mode)
+        try {
+          val bad = mismatches(in)
+          Prop(bad.isEmpty) :| s"$mode: ${bad.take(3).mkString("; ")}"
+        } finally {
+          spark.conf.unset("spark.sql.codegen.wholeStage")
+          spark.conf.unset("spark.sql.codegen.factoryMode")
+        }
+      }: _*)
+    }
+    val result = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(15).withInitialSeed(Seed(seed)), prop)
+    assert(result.passed, result.status.toString)
+  }
+
   test("Md5Fraction kernel is bit-identical to the conv/substring/md5 formula (r7 swap)") {
-    import spark.implicits._
-    val d = Seq("", "a", "hello world", "Émile café 猫", "0", "UPPER lower",
-      "a" * 500, "\ttabs and\nnewlines\t", null.asInstanceOf[String])
-      .toDF("s")
-    val mism = d.select(
-        graft.data.Sampling.hashFraction(col("s")).as("k"),
-        (conv(substring(md5(col("s").cast("string")), 1, 13), 16, 10).cast("double") /
-          4503599627370496.0).as("o"))
-      .where(not(col("k") <=> col("o"))).count()
-    assert(mism == 0)
+    def formula(c: Column) =
+      conv(substring(md5(c.cast("string")), 1, 13), 16, 10).cast("double") / 4503599627370496.0
+    holdsInBothEvals(Gen.listOfN(40, fuzzText), seed = 21L) { texts =>
+      // string keys and the integer ids every sampler also keys on (cast to string)
+      textFrame(texts).where(Seq("t", "id").map { c =>
+          not(graft.data.Sampling.hashFraction(col(c)) <=> formula(col(c)))
+        }.reduce(_ || _))
+        .collect().toSeq
+    }
   }
 
   test("TokenNgramHashes kernel is bit-identical to the HOF gram-hash chain (r7 swap)") {
-    import graft.data.{Decontaminate, TextAnalysis}
-    import spark.implicits._
-    def oldChain(text: org.apache.spark.sql.Column, n: Int) = {
+    def oldChain(text: Column, n: Int) = {
       val w = TextAnalysis.wordTokens(text)
       when(size(w) >= n,
         transform(sequence(lit(0), size(w) - n),
           i => xxhash64(concat_ws(" ", slice(w, i + lit(1), lit(n))))))
         .otherwise(array().cast("array<bigint>"))
     }
-    val d = Seq(null.asInstanceOf[String], "", "one", "one two",
-      "  Émile café 猫 ABC-123 x  ", "a-b_c d..e", "a b c d e f g h i j",
-      "ПРИВЕТ мир 你好 123abc", "x").toDF("text")
-    for (n <- Seq(1, 2, 3, 8)) {
-      val mism = d.select(oldChain(col("text"), n).as("o"),
-          Decontaminate.tokenNgramHashes(col("text"), n).as("k"))
-        .where(not(col("o") <=> col("k"))).count()
-      assert(mism == 0, s"n=$n")
+    holdsInBothEvals(Gen.listOfN(30, fuzzText), seed = 22L) { texts =>
+      textFrame(texts).where(Seq(1, 2, 3, 8).map { n =>
+          not(oldChain(col("t"), n) <=> Decontaminate.tokenNgramHashes(col("t"), n))
+        }.reduce(_ || _))
+        .collect().toSeq
     }
   }
 
   test("DistinctShingles kernel matches the HOF chain modulo the filtered null (r7 swap)") {
-    import spark.implicits._
-    def oldChain(text: org.apache.spark.sql.Column, k: Int) =
+    def oldChain(text: Column, k: Int) =
       array_distinct(transform(
         sequence(lit(0), greatest(length(text) - k, lit(0)) - lit(0)),
         i => when(length(text) >= k, substring(text, (i + 1).cast("int"), lit(k)))))
-    val d = Seq(null.asInstanceOf[String], "", "abc", "abcd", "ababab",
-      "Émile café 猫猫猫 x", "aaaaa", "ab\ncd ef").toDF("t")
-    for (k <- Seq(1, 2, 5)) {
-      // consumers filter null grams: compare after dropping them on the old side
-      // consumers explode + drop null grams: the old chain's [null] (short text)
-      // and [] -after-filter (null text) both explode to nothing, like the
-      // kernel's empty/null results — compare after that normalization
-      val mism = d.select(col("t"),
-          filter(oldChain(col("t"), k), g => g.isNotNull).as("o"),
-          coalesce(graft.data.Dedup.shingles(col("t"), k), array()).as("n"))
-        .where(not(col("o") <=> col("n"))).collect()
-      assert(mism.isEmpty, s"k=$k: ${mism.mkString("; ")}")
+    // consumers explode + drop null grams: the old chain's [null] (short text) and
+    // [] -after-filter (null text) both explode to nothing, like the kernel's
+    // empty/null results — compare after that normalization
+    holdsInBothEvals(Gen.listOfN(30, fuzzText), seed = 23L) { texts =>
+      textFrame(texts).where(Seq(1, 2, 5).map { k =>
+          not(filter(oldChain(col("t"), k), g => g.isNotNull) <=>
+            coalesce(Dedup.shingles(col("t"), k), array()))
+        }.reduce(_ || _))
+        .collect().toSeq
     }
   }
 
   test("band-key kernels are bit-identical to the expression folds (r7 swap)") {
     import graft.functions.hashfns
-    import spark.implicits._
-    val d = (0L until 200L).map(i => (i, s"w${i % 31} w${i % 7} w${i % 13} tail$i"))
-      .toDF("id", "text")
-    // minhash: per-band xxhash64(concat_ws(",", element_at..)) vs the kernel
-    val (rows, bands) = (2, 32)
-    val sig = d.select(hashfns.minhashSignature(col("text"), 5, rows * bands).as("s"))
-    val mh = sig.select(
-        array((0 until bands).map { b =>
-          xxhash64(concat_ws(",", (0 until rows).map(r =>
-            element_at(col("s"), b * rows + r + 1)): _*))
-        }: _*).as("o"),
-        hashfns.minhashBandKeys(col("s"), rows, bands).as("k"))
-      .where(not(col("o") <=> col("k"))).count()
-    assert(mh == 0)
-    // simhash: per-combo shift/or fold vs the kernel (blocks=8, maxHamming=3)
-    val width = 8
-    val mask = (1L << width) - 1L
-    def blockVal(b: Int) = shiftright(col("sim"), b * width).bitwiseAND(lit(mask))
-    val combos = (0 until 8).combinations(5).map(_.toSeq).toSeq
-    val sh = d.select(hashfns.simhash64(col("text")).as("sim"))
-    val sm = sh.select(
-        array(combos.map(c =>
-          c.map(blockVal).reduce((a, b) => shiftleft(a, width).bitwiseOR(b))): _*).as("o"),
-        hashfns.simhashBucketKeys(col("sim"), width, combos).as("k"))
-      .where(not(col("o") <=> col("k"))).count()
-    assert(sm == 0)
+    // per row: a text, 64 signature slots (or null) and a simhash (or null)
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("t", StringType),
+      StructField("raw", ArrayType(LongType, containsNull = false)),
+      StructField("sim", LongType)))
+    val rowGen = for {
+      t <- fuzzText
+      raw <- Gen.frequency((1, Gen.const(null: Seq[Long])), (6, Gen.listOfN(64, fuzzLong)))
+      sim <- Gen.frequency((1, Gen.const(null: java.lang.Long)), (6, fuzzLong.map(Long.box)))
+    } yield (t, raw, sim)
+    // minhash: per band, xxhash64(concat_ws(",", element_at..)) over the band's slots;
+    // a null signature gives null keys
+    def bandFold(sig: Column, rows: Int, bands: Int) =
+      when(sig.isNotNull, array((0 until bands).map { b =>
+        xxhash64(concat_ws(",", (0 until rows).map(r => element_at(sig, b * rows + r + 1)): _*))
+      }: _*))
+    // simhash: per block combination, the shift/or fold of the chosen blocks; a null
+    // simhash gives null keys
+    def comboFold(sim: Column, width: Int, combos: Seq[Seq[Int]]) = {
+      val mask = (1L << width) - 1L
+      def blockVal(b: Int) = shiftright(sim, b * width).bitwiseAND(lit(mask))
+      when(sim.isNotNull, array(combos.map(c =>
+        c.map(blockVal).reduce((a, b) => shiftleft(a, width).bitwiseOR(b))): _*))
+    }
+    holdsInBothEvals(Gen.listOfN(30, rowGen), seed = 24L) { in =>
+      val d = frame(schema, in.zipWithIndex.map { case ((t, raw, sim), i) => Row(i, t, raw, sim) })
+      val bandChecks = Seq((2, 32), (1, 4), (5, 3)).flatMap { case (rows, bands) =>
+        Seq(hashfns.minhashSignature(col("t"), 5, rows * bands),
+            slice(col("raw"), 1, rows * bands)).map { sig =>
+          not(bandFold(sig, rows, bands) <=> hashfns.minhashBandKeys(sig, rows, bands))
+        }
+      }
+      val comboChecks = Seq((8, 8, 5), (16, 4, 2), (21, 3, 2)).flatMap { case (width, blocks, keep) =>
+        val combos = (0 until blocks).combinations(keep).map(_.toSeq).toSeq
+        Seq(hashfns.simhash64(col("t")), col("sim")).map { sim =>
+          not(comboFold(sim, width, combos) <=> hashfns.simhashBucketKeys(sim, width, combos))
+        }
+      }
+      d.where((bandChecks ++ comboChecks).reduce(_ || _)).collect().toSeq
+    }
   }
 
   test("ArgMaxCosine kernel equals the greatest-of-structs formula (r7 swap, property)") {
     import graft.functions.vecfns
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import org.scalacheck.{Gen, Prop, Test => SCTest}
     val dim = 3
     // few distinct values: exact cosine ties, ±0.0 and zero vectors (NaN cosine) are common
     val elem = Gen.oneOf(-1.0, -0.0, 0.0, 0.5, 1.0, 2.0)
@@ -1205,28 +1167,12 @@ class DataOpsSpec extends SparkTestBase {
       df.select(col("id"), col("v"), formula(cents).as("o"),
           vecfns.argMaxCosine(col("v"), cents.map(_._1), cents.map(_._2)).as("k"))
         .where(not(col("o") <=> col("k"))).collect().toSeq
-    val prop = Prop.forAllNoShrink(centroidsGen, Gen.listOfN(40, vecGen)) { (cents, vecs) =>
-      val rows = vecs.zipWithIndex.map { case (v, i) => Row(i, v) }
-      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-      // both the generated code and the interpreted eval
-      Prop.all(Seq(("true", "CODEGEN_ONLY"), ("false", "NO_CODEGEN")).map { case (ws, mode) =>
-        spark.conf.set("spark.sql.codegen.wholeStage", ws)
-        spark.conf.set("spark.sql.codegen.factoryMode", mode)
-        try {
-          val bad = mismatches(cents, df)
-          Prop(bad.isEmpty) :| s"$mode centroids=$cents: ${bad.mkString("; ")}"
-        } finally {
-          spark.conf.unset("spark.sql.codegen.wholeStage")
-          spark.conf.unset("spark.sql.codegen.factoryMode")
-        }
-      }: _*)
+    holdsInBothEvals(Gen.zip(centroidsGen, Gen.listOfN(40, vecGen)), seed = 11L) {
+      case (cents, vecs) =>
+        mismatches(cents, frame(schema, vecs.zipWithIndex.map { case (v, i) => Row(i, v) }))
     }
-    val result = SCTest.check(SCTest.Parameters.default
-      .withMinSuccessfulTests(15).withInitialSeed(org.scalacheck.rng.Seed(11L)), prop)
-    assert(result.passed, result.status.toString)
     // an exact tie goes to the smallest id, wherever it sits in the centroid list
-    val tie = spark.createDataFrame(spark.sparkContext.parallelize(
-      Seq(Row(0, Seq[java.lang.Double](1.0, 0.0, 0.0))), 1), schema)
+    val tie = frame(schema, Seq(Row(0, Seq[java.lang.Double](1.0, 0.0, 0.0))))
     val cents = Seq(9L -> List(1.0, 0.0, 0.0), 4L -> List(2.0, 0.0, 0.0), 6L -> List(0.0, 1.0, 0.0))
     assert(tie.select(vecfns.argMaxCosine(col("v"), cents.map(_._1), cents.map(_._2)))
       .head().getLong(0) == 4L)

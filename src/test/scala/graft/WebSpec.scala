@@ -296,7 +296,9 @@ class WebSpec extends SparkTestBase {
     import graft.web.PrefixAgg.{Op, RunningSpec}
     import org.apache.spark.sql.expressions.Window
 
-    def check(df: DataFrame, numRanges: Int, label: String): Unit = {
+    // `outs` picks the outputs read: column pruning drops the unread ones from the plan
+    def check(df: DataFrame, numRanges: Int, label: String,
+        outs: Seq[String] = Seq("c", "s", "mn", "mx")): Unit = {
       val got = PrefixAgg.running(df, Seq("k", "id"), Seq(
           PrefixAgg.runningCount("c"),
           RunningSpec(Op.Sum, "v", "s"),
@@ -307,20 +309,22 @@ class WebSpec extends SparkTestBase {
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val want = df.select(col("id"), count(lit(1)).over(w).as("c"),
         sum("v").over(w).as("s"), min("v").over(w).as("mn"), max("v").over(w).as("mx"))
-      val g = got.select("id", "c", "s", "mn", "mx").orderBy("id").collect()
-      val e = want.orderBy("id").collect()
+      val g = got.select("id", outs: _*).orderBy("id").collect()
+      val e = want.select("id", outs: _*).orderBy("id").collect()
       assert(g.length == e.length, label)
       g.zip(e).foreach { case (a, b) =>
-        assert(a.getLong(1) == b.getLong(1), s"$label: count at id ${a.getLong(0)}")
-        Seq(2, 3, 4).foreach { i =>
-          assert(a.isNullAt(i) == b.isNullAt(i), s"$label: null col $i at id ${a.getLong(0)}")
+        outs.zipWithIndex.foreach { case (out, j) =>
+          val i = j + 1
+          assert(a.isNullAt(i) == b.isNullAt(i), s"$label: null $out at id ${a.getLong(0)}")
           // sum reassociates once per range boundary; min/max are bit-exact, so a
           // -0.0 where the window keeps 0.0 (or the reverse) is a mismatch
-          if (!a.isNullAt(i)) {
-            val (av, bv) = (a.getDouble(i), b.getDouble(i))
-            assert(if (i == 2) math.abs(av - bv) < 1e-9
-              else java.lang.Double.doubleToLongBits(av) == java.lang.Double.doubleToLongBits(bv),
-              s"$label: col $i at id ${a.getLong(0)}: $av vs $bv")
+          if (!a.isNullAt(i)) out match {
+            case "c" => assert(a.getLong(i) == b.getLong(i), s"$label: count at id ${a.getLong(0)}")
+            case _ =>
+              val (av, bv) = (a.getDouble(i), b.getDouble(i))
+              assert(if (out == "s") math.abs(av - bv) < 1e-9
+                else java.lang.Double.doubleToLongBits(av) == java.lang.Double.doubleToLongBits(bv),
+                s"$label: $out at id ${a.getLong(0)}: $av vs $bv")
           }
         }
       }
@@ -349,6 +353,16 @@ class WebSpec extends SparkTestBase {
           .otherwise(rest).as("v"))
     check(zeros(0.0, -0.0, col("id").cast("double")), numRanges = 5, "0.0 then -0.0, min")
     check(zeros(-0.0, 0.0, -col("id").cast("double")), numRanges = 5, "-0.0 then 0.0, max")
+
+    // only a Min (or only a Max) read: no Sum keeps the range totals' input sorted,
+    // so their tie rule must not depend on row order. Descending key; zeros alternate
+    // 0.0 / -0.0 (as a product: Spark folds a CASE between the literals 0.0 and -0.0,
+    // which compare equal, into one of them), and one NaN is the greatest value.
+    val alternating = spark.range(3000).select(col("id"), (-col("id")).as("k"),
+      when(col("id") === 1000, lit(Double.NaN))
+        .otherwise((-(col("id") % 2)).cast("double").multiply(0.0)).as("v"))
+    check(alternating, numRanges = 7, "alternating zeros, min only", Seq("mn"))
+    check(alternating, numRanges = 7, "alternating zeros, max only", Seq("mx"))
   }
 
   test("WARC source parses records, skips malformed ones, and filters pages") {
