@@ -165,12 +165,8 @@ final class TempNamer {
   * (reference transformers/base.py:12-42) and emits a staged Spark plan.
   */
 trait FeatureTransformer {
-  /** Column specs this transformer consumes positionally (for validation). */
-  def inputColumns: Seq[ColumnSpec]
   /** Expected type selector per positional input. */
   def inputTypes: Seq[TypeSelector]
-  /** Drives commutative dedup at optimization level 2. */
-  def isCommutative: Boolean
   def returnType: ColType
   def outputName: String
   final def outputSpec: ColumnSpec = ColumnSpec(outputName, returnType)

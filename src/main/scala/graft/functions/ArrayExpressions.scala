@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, TypeUtils}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Mode of an array with the reference's tie-break: among the most frequent values the
   * LARGEST wins (aggregating_transformers.py:136 `mode().sort(descending=True).first()`).
@@ -47,23 +48,21 @@ case class ArrayMode(child: Expression) extends UnaryExpression with CodegenFall
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-/** Shannon entropy (base 2) of the value distribution of an array — the rolling-window
-  * form of entity entropy (window contents collected, then aggregated whole, matching
-  * Polars' rolling evaluation of the full inner expression).
-  */
-case class ArrayEntropy(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  private lazy val elementType: DataType = child.dataType.asInstanceOf[ArrayType].elementType
-
-  override def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
+/** Kernels over a whole collected array, called through [[KernelCall]]. */
+object ArrayKernels {
+  /** Shannon entropy (base 2) of the value distribution of a string array — the
+    * rolling-window form of entity entropy (window contents collected, then aggregated
+    * whole, matching Polars' rolling evaluation of the full inner expression). Null
+    * when the array has no non-null element.
+    */
+  def entropy(arr: ArrayData): java.lang.Double = {
     val n = arr.numElements()
     if (n == 0) return null
-    val counts = new java.util.HashMap[Any, Integer]()
+    val counts = new java.util.HashMap[UTF8String, Integer]()
     var total = 0
     var i = 0
     while (i < n) {
-      if (!arr.isNullAt(i)) { counts.merge(arr.get(i, elementType), 1, (a, b) => a + b); total += 1 }
+      if (!arr.isNullAt(i)) { counts.merge(arr.getUTF8String(i), 1, (a, b) => a + b); total += 1 }
       i += 1
     }
     if (total == 0) return null
@@ -76,8 +75,6 @@ case class ArrayEntropy(child: Expression) extends UnaryExpression with CodegenF
     }
     h
   }
-
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
 /** Arg-extreme over an array of (value, arg) structs: the arg at the minimal (or
@@ -125,7 +122,8 @@ case class ArrayArgExtreme(child: Expression, findMax: Boolean)
 
 object arrayfns {
   def arrayMode(c: Column): Column = ColumnBridge.column(ArrayMode(ColumnBridge.expression(c)))
-  def arrayEntropy(c: Column): Column = ColumnBridge.column(ArrayEntropy(ColumnBridge.expression(c)))
+  /** [[ArrayKernels.entropy]] of an array&lt;string&gt; column. */
+  def arrayEntropy(c: Column): Column = KernelCall.orNull(ArrayKernels, "entropy", DoubleType, c)
   def arrayArgExtreme(c: Column, findMax: Boolean): Column =
     ColumnBridge.column(ArrayArgExtreme(ColumnBridge.expression(c), findMax))
 }

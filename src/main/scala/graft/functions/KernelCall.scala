@@ -21,9 +21,9 @@ import org.apache.spark.sql.types.{DataType, ObjectType}
   *
   * A kernel keeps its own Expression class only when it must read its input's
   * resolved type: [[SrpSketchBands]], [[CosineSimilarity]] and [[ArgMaxCosine]]
-  * pick a numeric element tag, [[ArrayMode]], [[ArrayEntropy]] and
-  * [[ArrayArgExtreme]] read the element type. Every other kernel is a method on
-  * a kernel object, called through here.
+  * pick a numeric element tag, [[ArrayMode]] and [[ArrayArgExtreme]] read the
+  * element type. Every other kernel is a method on a kernel object, called
+  * through here.
   */
 private[graft] object KernelCall {
   /** `kernels.fn(args...)` as a Column of `dataType`. */

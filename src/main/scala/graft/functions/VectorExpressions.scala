@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -124,32 +124,16 @@ case class CosineSimilarity(left: Expression, right: Expression) extends BinaryE
 }
 
 /** The literal centroid table for [[ArgMaxCosine]], shipped once per executor as a
-  * codegen reference object.
+  * codegen reference object. Each centroid is stored once as a double array, so
+  * every cosine is [[VectorKernels.cosineBoxed]] itself.
   */
-final class CentroidBank(val ids: Array[Long], val vecs: Array[Array[Double]])
-    extends Serializable {
+final class CentroidBank(val ids: Array[Long], vecs: Seq[Seq[Double]]) extends Serializable {
   require(ids.length == vecs.length && ids.length >= 1)
+  private val cents: Array[ArrayData] =
+    vecs.map(c => UnsafeArrayData.fromPrimitiveArray(c.toArray): ArrayData).toArray
 
-  /** Cosine against centroid `c` — the EXACT loop of [[VectorKernels.cosineBoxed]]
-    * (same accumulation order, same short-vs-long null padding rule), with the
-    * centroid side a plain double[] (it came from a collected literal row).
-    */
-  private def cos(v: ArrayData, tag: Int, c: Array[Double]): java.lang.Double = {
-    val n = math.min(v.numElements(), c.length)
-    var dotAb = 0.0; var dotAa = 0.0; var dotBb = 0.0
-    var i = 0
-    while (i < n) {
-      if (v.isNullAt(i)) return null
-      val x = NumArrays.get(v, tag, i)
-      val y = c(i)
-      dotAb += x * y
-      dotAa += x * x
-      dotBb += y * y
-      i += 1
-    }
-    if (v.numElements() != c.length) return null
-    java.lang.Double.valueOf(dotAb / (math.sqrt(dotAa) * math.sqrt(dotBb)))
-  }
+  private def cos(v: ArrayData, tag: Int, i: Int): java.lang.Double =
+    VectorKernels.cosineBoxed(v, tag, cents(i), NumArrays.TDouble)
 
   // Spark's struct max over (sim, -id): null sim smallest, NaN largest,
   // -0.0 == 0.0 (nanSafeCompareDoubles), ties broken by the LARGER -id — i.e.
@@ -173,11 +157,11 @@ final class CentroidBank(val ids: Array[Long], val vecs: Array[Array[Double]])
     */
   def argMax(v: ArrayData, tag: Int): Long = {
     if (v == null) return -negMax()
-    var bestS: java.lang.Double = cos(v, tag, vecs(0))
+    var bestS: java.lang.Double = cos(v, tag, 0)
     var bestNegc: Long = -ids(0)
     var i = 1
     while (i < ids.length) {
-      val s = cos(v, tag, vecs(i))
+      val s = cos(v, tag, i)
       if (beats(s, -ids(i), bestS, bestNegc)) { bestS = s; bestNegc = -ids(i) }
       i += 1
     }
@@ -209,7 +193,7 @@ case class ArgMaxCosine(child: Expression, ids: Seq[Long], vecs: Seq[Seq[Double]
 
   private lazy val tag = NumArrays.tagOf(child.dataType, "argMaxCosine")
   @transient private lazy val bank =
-    new CentroidBank(ids.toArray, vecs.map(_.toArray).toArray)
+    new CentroidBank(ids.toArray, vecs)
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val v = child.eval(input)

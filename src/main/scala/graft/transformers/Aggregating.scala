@@ -58,9 +58,7 @@ import aggutil._
 
 final case class CountTransformer(cumulative: Cum = Cum.None, cond: Option[Cond] = None)
     extends AggregatingTransformer {
-  def inputColumns: Seq[ColumnSpec] = Nil
   def inputTypes: Seq[TypeSelector] = Nil
-  def isCommutative: Boolean = true
   def returnType: ColType = ColType.Numeric
   override def skipValidation: Boolean = true
   def outputName: String = s"${cumulative.prefix}count" + whereSuffix(cond)
@@ -73,9 +71,7 @@ final case class CountTransformer(cumulative: Cum = Cum.None, cond: Option[Cond]
 
 final case class LaggedTransformer(column: ColumnSpec, lagN: Int, fillValue: Option[Any] = None)
     extends AggregatingTransformer {
-  def inputColumns: Seq[ColumnSpec] = Seq(column)
   def inputTypes: Seq[TypeSelector] = Seq(TypeSelector.any)
-  def isCommutative: Boolean = true
   def returnType: ColType = column.colType
   def outputName: String = s"${column.name}_lagged_$lagN"
   def plan(ctx: AggContext, tmp: TempNamer): FeaturePlan = {
@@ -90,9 +86,7 @@ final case class LaggedTransformer(column: ColumnSpec, lagN: Int, fillValue: Opt
 
 final case class FirstValueTransformer(column: ColumnSpec, cond: Option[Cond] = None)
     extends AggregatingTransformer {
-  def inputColumns: Seq[ColumnSpec] = Seq(column)
   def inputTypes: Seq[TypeSelector] = Seq(TypeSelector.any)
-  def isCommutative: Boolean = true
   def returnType: ColType = column.colType
   def outputName: String = s"${column.name}_first_value" + whereSuffix(cond)
   def plan(ctx: AggContext, tmp: TempNamer): FeaturePlan =
@@ -101,9 +95,7 @@ final case class FirstValueTransformer(column: ColumnSpec, cond: Option[Cond] = 
 
 final case class ModeTransformer(column: ColumnSpec, cumulative: Cum = Cum.None, cond: Option[Cond] = None)
     extends AggregatingTransformer {
-  def inputColumns: Seq[ColumnSpec] = Seq(column)
   def inputTypes: Seq[TypeSelector] = Seq(TypeSelector.any)
-  def isCommutative: Boolean = true
   def returnType: ColType = column.colType
   def outputName: String = s"${column.name}_${cumulative.prefix}mode" + whereSuffix(cond)
 
@@ -151,9 +143,7 @@ final case class ModeTransformer(column: ColumnSpec, cumulative: Cum = Cum.None,
 
 final case class NumUniqueTransformer(column: ColumnSpec, cumulative: Cum = Cum.None, cond: Option[Cond] = None)
     extends AggregatingTransformer {
-  def inputColumns: Seq[ColumnSpec] = Seq(column)
   def inputTypes: Seq[TypeSelector] = Seq(TypeSelector.any)
-  def isCommutative: Boolean = true
   def returnType: ColType = ColType.Numeric
   def outputName: String = s"${column.name}_${cumulative.prefix}num_unique" + whereSuffix(cond)
 
@@ -219,11 +209,9 @@ final case class NumUniqueTransformer(column: ColumnSpec, cumulative: Cum = Cum.
   */
 final case class EntityEntropyTransformer(source: ColumnSpec, target: ColumnSpec, cumulative: Cum = Cum.None)
     extends AggregatingTransformer {
-  def inputColumns: Seq[ColumnSpec] = Seq(source, target)
   def inputTypes: Seq[TypeSelector] = Seq(
     TypeSelector.exclude(ColType.Numeric, ColType.Datetime),
     TypeSelector.exclude(ColType.Numeric, ColType.Datetime))
-  def isCommutative: Boolean = false
   def returnType: ColType = ColType.Numeric
   def outputName: String = s"${target.name}_by_${source.name}_${cumulative.prefix}entropy"
 
@@ -279,11 +267,9 @@ final case class EntityEntropyTransformer(source: ColumnSpec, target: ColumnSpec
   */
 final case class PmiTransformer(a: ColumnSpec, b: ColumnSpec, cumulative: Cum = Cum.None,
     cond: Option[Cond] = None) extends AggregatingTransformer {
-  def inputColumns: Seq[ColumnSpec] = Seq(a, b)
   def inputTypes: Seq[TypeSelector] = Seq(
     TypeSelector.exclude(ColType.Numeric, ColType.Datetime),
     TypeSelector.exclude(ColType.Numeric, ColType.Datetime))
-  def isCommutative: Boolean = true
   def returnType: ColType = ColType.Numeric
   def outputName: String = s"${a.name}_${b.name}_${cumulative.prefix}pmi" + whereSuffix(cond)
 
@@ -319,9 +305,7 @@ sealed abstract class ArithmeticAggTransformer extends AggregatingTransformer {
   def cond: Option[Cond]
   def aggName: String
 
-  def inputColumns: Seq[ColumnSpec] = Seq(column)
   def inputTypes: Seq[TypeSelector] = Seq(ColType.Numeric | ColType.Boolean)
-  def isCommutative: Boolean = true
   def returnType: ColType = ColType.Numeric
   def outputName: String = s"${column.name}_${cumulative.prefix}$aggName" + whereSuffix(cond)
 
@@ -445,10 +429,8 @@ sealed abstract class ArgExtremeTransformer extends AggregatingTransformer {
   def cond: Option[Cond]
   def direction: String // "argmin" | "argmax"
 
-  def inputColumns: Seq[ColumnSpec] = Seq(valueColumn, argColumn)
   def inputTypes: Seq[TypeSelector] =
     Seq(TypeSelector.exclude(ColType.Nominal, ColType.Text), TypeSelector.any)
-  def isCommutative: Boolean = false
   def returnType: ColType = argColumn.colType
   def outputName: String =
     s"${cumulative.prefix}${direction}_of_${valueColumn.name}_by_${argColumn.name}" + whereSuffix(cond)

@@ -18,9 +18,7 @@ object inputs {
 }
 
 abstract class UnaryNumericTransformer(val column: ColumnSpec) extends FeatureTransformer {
-  def inputColumns: Seq[ColumnSpec] = Seq(column)
   def inputTypes: Seq[TypeSelector] = Seq(ColType.Numeric.asSelector)
-  def isCommutative: Boolean = true
   def returnType: ColType = ColType.Numeric
 }
 
@@ -72,7 +70,6 @@ final case class MinMaxScaler(c: ColumnSpec) extends UnaryNumericTransformer(c) 
 }
 
 abstract class BinaryTransformer(val left: ColumnSpec, val right: ColumnSpec) extends FeatureTransformer {
-  def inputColumns: Seq[ColumnSpec] = Seq(left, right)
 }
 
 abstract class ArithmeticTransformer(l: ColumnSpec, r: ColumnSpec) extends BinaryTransformer(l, r) {
@@ -84,25 +81,21 @@ abstract class ArithmeticTransformer(l: ColumnSpec, r: ColumnSpec) extends Binar
 }
 
 final case class AddTransformer(l: ColumnSpec, r: ColumnSpec) extends ArithmeticTransformer(l, r) {
-  def isCommutative: Boolean = true
   def outputName: String = s"${l.name}_add_${r.name}"
   def plan(ctx: AggContext, tmp: TempNamer): FeaturePlan = simple(lc + rc)
 }
 
 final case class SubtractTransformer(l: ColumnSpec, r: ColumnSpec) extends ArithmeticTransformer(l, r) {
-  def isCommutative: Boolean = false
   def outputName: String = s"${l.name}_subtract_${r.name}"
   def plan(ctx: AggContext, tmp: TempNamer): FeaturePlan = simple(lc - rc)
 }
 
 final case class MultiplyTransformer(l: ColumnSpec, r: ColumnSpec) extends ArithmeticTransformer(l, r) {
-  def isCommutative: Boolean = true
   def outputName: String = s"${l.name}_multiply_${r.name}"
   def plan(ctx: AggContext, tmp: TempNamer): FeaturePlan = simple(lc * rc)
 }
 
 final case class DivideTransformer(l: ColumnSpec, r: ColumnSpec) extends ArithmeticTransformer(l, r) {
-  def isCommutative: Boolean = false
   def outputName: String = s"${l.name}_divide_${r.name}"
   def plan(ctx: AggContext, tmp: TempNamer): FeaturePlan = simple(PolarsCompat.ieeeDiv(lc, rc))
 }
@@ -113,19 +106,16 @@ abstract class ComparisonTransformer(l: ColumnSpec, r: ColumnSpec) extends Binar
 }
 
 final case class EqualTransformer(l: ColumnSpec, r: ColumnSpec) extends ComparisonTransformer(l, r) {
-  def isCommutative: Boolean = true
   def outputName: String = s"${l.name}_equal_${r.name}"
   def plan(ctx: AggContext, tmp: TempNamer): FeaturePlan = simple(col(l.name) === col(r.name))
 }
 
 final case class GreaterThanTransformer(l: ColumnSpec, r: ColumnSpec) extends ComparisonTransformer(l, r) {
-  def isCommutative: Boolean = false
   def outputName: String = s"${l.name}_greater_than_${r.name}"
   def plan(ctx: AggContext, tmp: TempNamer): FeaturePlan = simple(col(l.name) > col(r.name))
 }
 
 final case class GreaterOrEqualTransformer(l: ColumnSpec, r: ColumnSpec) extends ComparisonTransformer(l, r) {
-  def isCommutative: Boolean = false
   def outputName: String = s"${l.name}_greater_or_equal_${r.name}"
   def plan(ctx: AggContext, tmp: TempNamer): FeaturePlan = simple(col(l.name) >= col(r.name))
 }
@@ -143,9 +133,7 @@ object GonTransformation {
 abstract class SeasonalTransformer(val column: ColumnSpec, val angular: Boolean,
     val gon: Option[GonTransformation]) extends FeatureTransformer {
   require(angular || gon.isEmpty, "gon_transformation can be used only with angular=true")
-  def inputColumns: Seq[ColumnSpec] = Seq(column)
   def inputTypes: Seq[TypeSelector] = Seq(ColType.Datetime.asSelector)
-  def isCommutative: Boolean = true
   def returnType: ColType = if (gon.isEmpty) ColType.Ordinal else ColType.Numeric
 
   protected def raw: Column
@@ -197,7 +185,6 @@ final case class TimeDiffTransformer(l: ColumnSpec, r: ColumnSpec, unit: String 
     extends BinaryTransformer(l, r) {
   require(Set("s", "h", "d").contains(unit), s"unit must be one of s/h/d, got $unit")
   def inputTypes: Seq[TypeSelector] = Seq(ColType.Datetime.asSelector, ColType.Datetime.asSelector)
-  def isCommutative: Boolean = false
   def returnType: ColType = ColType.Numeric
   private def unitWord: String = unit match { case "s" => "seconds"; case "h" => "hours"; case "d" => "days" }
   def outputName: String = s"${l.name}_total_${unitWord}_diff_${r.name}"

@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
 abstract class TextSimilarityTransformer(l: ColumnSpec, r: ColumnSpec) extends BinaryTransformer(l, r) {
   private val stringy = TypeSelector(Set(ColType.Text, ColType.Nominal, ColType.Ordinal))
   def inputTypes: Seq[TypeSelector] = Seq(stringy, stringy)
-  def isCommutative: Boolean = true
   def returnType: ColType = ColType.Numeric
   protected def distStr: String
   def outputName: String = s"${l.name}_${distStr}_text_similarity_${r.name}"
@@ -44,10 +43,8 @@ final case class JaroWinklerSimilarityTransformer(l: ColumnSpec, r: ColumnSpec, 
 }
 
 abstract class TextExtractionTransformer(val column: ColumnSpec) extends FeatureTransformer {
-  def inputColumns: Seq[ColumnSpec] = Seq(column)
   def inputTypes: Seq[TypeSelector] =
     Seq(TypeSelector(Set(ColType.Text, ColType.Nominal, ColType.Ordinal)))
-  def isCommutative: Boolean = true
 }
 
 final case class TextLengthTransformer(c: ColumnSpec) extends TextExtractionTransformer(c) {

@@ -9,9 +9,7 @@ import graft.core._
   */
 final case class OverWrapper(inner: AggregatingTransformer, overColumns: Seq[String])
     extends AggregatingTransformer {
-  def inputColumns: Seq[ColumnSpec] = inner.inputColumns
   def inputTypes: Seq[TypeSelector] = inner.inputTypes
-  def isCommutative: Boolean = true
   def returnType: ColType = inner.returnType
   override def skipValidation: Boolean = true
   def outputName: String = inner.outputName + "_over_" + overColumns.mkString("_and_")
@@ -28,9 +26,7 @@ final case class RollingWrapper(inner: AggregatingTransformer, indexColumn: Colu
     extends AggregatingTransformer {
   require(indexColumn.colType == ColType.Datetime,
     s"Currently only DATETIME columns are supported for rolling aggregation but ${indexColumn.colType} was passed for ${indexColumn.name}.")
-  def inputColumns: Seq[ColumnSpec] = inner.inputColumns
   def inputTypes: Seq[TypeSelector] = inner.inputTypes
-  def isCommutative: Boolean = true
   def returnType: ColType = inner.returnType
   override def skipValidation: Boolean = true
   def outputName: String = inner.outputName + s"_in_the_last_$window"

@@ -149,17 +149,18 @@ object PrefixAgg {
     //      aggregating before the shuffle is deliberate: merging per-split partials
     //      in shuffle order reassociates the sums. The two branches agree on
     //      ranges because rid is a pure row function.
-    //      Min/Max totals spell the window's tie rule out (the extreme value, and of
-    //      equal values such as -0.0 and 0.0 the first in `orderBy`) rather than
-    //      read it off the row order: without a Sum, Spark's optimizer drops the
-    //      sort under this aggregate, since it counts min/max as order-free.
+    //      A Min/Max total is the extreme value; when that is a zero, the window
+    //      keeps the first zero in `orderBy` (-0.0 equals 0.0), so the total takes
+    //      its sign from `first`. Being order-sensitive, `first` also keeps the
+    //      optimizer from dropping the sort under this aggregate (it would for
+    //      min/max alone), and its fixed-width buffer keeps a HashAggregate.
     def total(s: RunningSpec): Column = {
       lazy val v = col(inName(s.out))
-      def firstOf(key: Column*) =
-        min_by(v, when(v.isNotNull, struct(key ++ orderBy.map(col): _*)))
+      def signedZero(extreme: Column) =
+        when(extreme === 0.0, first(when(v === 0.0, v), ignoreNulls = true)).otherwise(extreme)
       s.op match {
-        case Op.Min => firstOf(v)
-        case Op.Max => firstOf(!isnan(v), -v) // NaN is the greatest value
+        case Op.Min => signedZero(min(v))
+        case Op.Max => signedZero(max(v))
         case _      => agg(s)
       }
     }

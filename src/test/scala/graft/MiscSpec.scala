@@ -26,10 +26,12 @@ class MiscSpec extends SparkTestBase {
   }
 
   test("sinkParquet roundtrip") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString + "/out"
-    Pipeline(basicDataset()).withPolynomial("NUMERIC_FEATURE", Seq(2)).sinkParquet(dir)
-    val back = spark.read.parquet(dir)
-    assertColumn(back, "NUMERIC_FEATURE_pow_2", Seq(0, 1, 4, 9, 16, 25))
+    withTempDir("graft_sink") { tmp =>
+      val dir = tmp.toString + "/out"
+      Pipeline(basicDataset()).withPolynomial("NUMERIC_FEATURE", Seq(2)).sinkParquet(dir)
+      val back = spark.read.parquet(dir)
+      assertColumn(back, "NUMERIC_FEATURE_pow_2", Seq(0, 1, 4, 9, 16, 25))
+    }
   }
 
   test("dropColumnsOutsideSchema keeps order columns") {

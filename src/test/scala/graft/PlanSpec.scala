@@ -146,23 +146,24 @@ class PlanSpec extends SparkTestBase {
   test("bucketed+sorted storage makes the per-key window family exchange-free") {
     // the 100-TB layout recipe: persist the page table bucketed by url (Iceberg
     // sorted-partition analogue) and the whole per-url window family needs NO shuffle
-    val dir = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
-    val pages = Pages.generate(spark, 500, seed = 5L, numPartitions = 4)
-      .select("url", "warc_ts", "text", "lang")
-    pages.write.format("parquet").option("path", s"$dir/pages_b")
-      .bucketBy(8, "url").sortBy("url", "warc_ts")
-      .mode("overwrite").saveAsTable("pages_bucketed")
-    try {
-      val t = spark.table("pages_bucketed")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("url")).orderBy(col("warc_ts"))
-      val df = t
-        .withColumn("prev_ts", lag(col("warc_ts"), 1).over(w))
-        .withColumn("snap_idx", row_number().over(w))
-      assert(count(plan(df), "Exchange hashpartitioning") == 0,
-        s"bucketed scan should satisfy the window distribution:\n${plan(df).take(2000)}")
-      assert(df.count() == pages.count())
-    } finally spark.sql("DROP TABLE IF EXISTS pages_bucketed")
+    withTempDir("graft_bucketed") { dir =>
+      val pages = Pages.generate(spark, 500, seed = 5L, numPartitions = 4)
+        .select("url", "warc_ts", "text", "lang")
+      pages.write.format("parquet").option("path", s"$dir/pages_b")
+        .bucketBy(8, "url").sortBy("url", "warc_ts")
+        .mode("overwrite").saveAsTable("pages_bucketed")
+      try {
+        val t = spark.table("pages_bucketed")
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("url")).orderBy(col("warc_ts"))
+        val df = t
+          .withColumn("prev_ts", lag(col("warc_ts"), 1).over(w))
+          .withColumn("snap_idx", row_number().over(w))
+        assert(count(plan(df), "Exchange hashpartitioning") == 0,
+          s"bucketed scan should satisfy the window distribution:\n${plan(df).take(2000)}")
+        assert(df.count() == pages.count())
+      } finally spark.sql("DROP TABLE IF EXISTS pages_bucketed")
+    }
   }
 
   test("LSH banding shuffle carries ids only, never document text") {

@@ -23,14 +23,13 @@ class ProbeSpec extends SparkTestBase {
       "secs_per_iter", "edges_per_iter_sec")),
     "dsir" -> ("300", Seq("docs", "tokens", "secs", "tokens_per_sec", "docs_per_sec")))
 
-  /** The gate workload's tables: a tiny lineitem for q1_agg. */
-  private lazy val sfDir: String = {
+  /** Runs `Probe.run(args)` over the gate workload's tables: a tiny lineitem for q1_agg. */
+  private def probe(args: String*): String = withTempDir("graft_probe_sf") { dir =>
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_probe_sf").toString
     Seq(("A", "F", 1.0, 10.0, 0.1), ("N", "O", 2.0, 20.0, 0.0), ("A", "F", 3.0, 30.0, 0.5))
       .toDF("l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice", "l_discount")
       .write.parquet(s"$dir/lineitem.parquet")
-    dir
+    Probe.run(spark, args, Some(dir.toString))
   }
 
   test("the workload table is the eight named workloads") {
@@ -39,7 +38,7 @@ class ProbeSpec extends SparkTestBase {
 
   expected.toSeq.sortBy(_._1).foreach { case (name, (size, keys)) =>
     test(s"probe $name prints one JSON line with its keys") {
-      val line = Probe.run(spark, Seq(name, size), Some(sfDir))
+      val line = probe(name, size)
       assert(!line.contains("\n"))
       val node = new ObjectMapper().readTree(line)
       assert(node.fieldNames().asScala.toSeq == common ++ keys :+ "task_metrics")
@@ -49,13 +48,13 @@ class ProbeSpec extends SparkTestBase {
   }
 
   test("probe gate reports every named gate with its row count") {
-    val node = new ObjectMapper().readTree(Probe.run(spark, Seq("gate", "q1_agg"), Some(sfDir)))
+    val node = new ObjectMapper().readTree(probe("gate", "q1_agg"))
     val gates = node.get("gates").elements().asScala.toSeq
     assert(gates.map(g => (g.get("gate").asText, g.get("rows").asLong)) == Seq(("q1_agg", 2L)))
   }
 
   test("probe decontam times the one n-gram path at each benchmark size") {
-    val node = new ObjectMapper().readTree(Probe.run(spark, Seq("decontam", "300"), Some(sfDir)))
+    val node = new ObjectMapper().readTree(probe("decontam", "300"))
     val points = node.get("points").elements().asScala.toSeq
     assert(points.map(_.get("modulus").asLong) == Seq(300L, 30L, 3L))
     points.foreach(p => assert(p.fieldNames().asScala.toSeq ==

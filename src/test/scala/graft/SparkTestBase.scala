@@ -25,6 +25,12 @@ abstract class SparkTestBase extends AnyFunSuite {
 
   val Idx = "row_idx"
 
+  /** Runs `body` on a fresh temp directory, then deletes the directory. */
+  def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir) finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
   def ts(day: Int): Timestamp = Timestamp.from(Instant.parse(f"2000-01-$day%02dT00:00:00Z"))
 
   lazy val basicFrame: DataFrame = {

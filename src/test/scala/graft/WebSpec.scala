@@ -144,83 +144,91 @@ class WebSpec extends SparkTestBase {
   }
 
   test("checkpoint resume recomputes only uncommitted partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val df = pages.withColumn("bucket", pmod(col("url_id"), lit(4L)))
-      .select("url", "warc_ts", "text", "bucket")
-    // simulate a first run that only managed buckets 0 and 1
-    val r1 = Checkpoint.resumeWrite(spark, df.where(col("bucket") < 2), "bucket", dir)
-    assert(r1.written.map(_.value).toSet == Set("0", "1") && r1.snapshotId == 0)
-    // resumed run: full input, but only 2 and 3 get written
-    val r2 = Checkpoint.resumeWrite(spark, df, "bucket", dir)
-    assert(r2.written.map(_.value).toSet == Set("2", "3"), r2)
-    assert(r2.skipped.toSet == Set("0", "1") && r2.snapshotId == 1)
-    // total rows intact, committed map complete
-    assert(spark.read.parquet(s"$dir/data").count() == df.count())
-    assert(Checkpoint.committed(dir).keySet == Set("0", "1", "2", "3"))
-    // per-partition lineage row counts match the data
-    val expected = df.groupBy("bucket").count().collect()
-      .map(r => r.getLong(0).toString -> r.getLong(1)).toMap
-    assert(Checkpoint.committed(dir).view.mapValues(_.rows).toMap == expected)
-    // idempotent third run writes nothing
-    val r3 = Checkpoint.resumeWrite(spark, df, "bucket", dir)
-    assert(r3.written.isEmpty && r3.skipped.size == 4)
+    withTempDir("graft_ckpt") { tmp =>
+      val dir = tmp.toString
+      val df = pages.withColumn("bucket", pmod(col("url_id"), lit(4L)))
+        .select("url", "warc_ts", "text", "bucket")
+      // simulate a first run that only managed buckets 0 and 1
+      val r1 = Checkpoint.resumeWrite(spark, df.where(col("bucket") < 2), "bucket", dir)
+      assert(r1.written.map(_.value).toSet == Set("0", "1") && r1.snapshotId == 0)
+      // resumed run: full input, but only 2 and 3 get written
+      val r2 = Checkpoint.resumeWrite(spark, df, "bucket", dir)
+      assert(r2.written.map(_.value).toSet == Set("2", "3"), r2)
+      assert(r2.skipped.toSet == Set("0", "1") && r2.snapshotId == 1)
+      // total rows intact, committed map complete
+      assert(spark.read.parquet(s"$dir/data").count() == df.count())
+      assert(Checkpoint.committed(dir).keySet == Set("0", "1", "2", "3"))
+      // per-partition lineage row counts match the data
+      val expected = df.groupBy("bucket").count().collect()
+        .map(r => r.getLong(0).toString -> r.getLong(1)).toMap
+      assert(Checkpoint.committed(dir).view.mapValues(_.rows).toMap == expected)
+      // idempotent third run writes nothing
+      val r3 = Checkpoint.resumeWrite(spark, df, "bucket", dir)
+      assert(r3.written.isEmpty && r3.skipped.size == 4)
+    }
   }
 
   test("commit recount reads only newly written partitions, never the committed table") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt2").toString
-    val df = pages.withColumn("bucket", when(col("url_id") < 270, lit(0L)).otherwise(lit(1L)))
-      .select("url", "warc_ts", "text", "bucket")
-    Checkpoint.resumeWrite(spark, df.where(col("bucket") === 0), "bucket", dir) // ~90% of rows
-    val n = df.count()
-    val (r2, l) = GraftMetricsListener.during(spark)(Checkpoint.resumeWrite(spark, df, "bucket", dir))
-    assert(r2.written.map(_.value) == Seq("1"))
-    // reads = input scan (≤ n) + recount of ONLY bucket 1 (~0.1 n); a full-table
-    // recount on commit would add the committed ~0.9 n again
-    assert(l.totalRecordsRead.sum() < (1.35 * n).toLong,
-      s"commit appears to re-scan committed data: read=${l.totalRecordsRead.sum()} of n=$n")
+    withTempDir("graft_ckpt2") { tmp =>
+      val dir = tmp.toString
+      val df = pages.withColumn("bucket", when(col("url_id") < 270, lit(0L)).otherwise(lit(1L)))
+        .select("url", "warc_ts", "text", "bucket")
+      Checkpoint.resumeWrite(spark, df.where(col("bucket") === 0), "bucket", dir) // ~90% of rows
+      val n = df.count()
+      val (r2, l) = GraftMetricsListener.during(spark)(Checkpoint.resumeWrite(spark, df, "bucket", dir))
+      assert(r2.written.map(_.value) == Seq("1"))
+      // reads = input scan (≤ n) + recount of ONLY bucket 1 (~0.1 n); a full-table
+      // recount on commit would add the committed ~0.9 n again
+      assert(l.totalRecordsRead.sum() < (1.35 * n).toLong,
+        s"commit appears to re-scan committed data: read=${l.totalRecordsRead.sum()} of n=$n")
+    }
   }
 
   test("checkpoint resume keeps partition values that contain , \" and }") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt3").toString
-    val values = Seq("a", "a,b", "say \"hi\"", "x}y")
-    val df = values.flatMap(v => (0 until 3).map(i => (v, i))).toDF("v", "i")
-    Checkpoint.resumeWrite(spark, df.where(col("v") === "a,b"), "v", dir)
-    val r2 = Checkpoint.resumeWrite(spark, df, "v", dir)
-    assert(r2.skipped == Seq("a,b"), r2)
-    assert(Checkpoint.committed(dir).keySet == values.toSet)
-    assert(Checkpoint.committed(dir).values.forall(_.rows == 3))
-    val back = spark.read.parquet(s"$dir/data").groupBy("v").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(back == values.map(_ -> 3L).toMap)
+    withTempDir("graft_ckpt3") { tmp =>
+      val dir = tmp.toString
+      val values = Seq("a", "a,b", "say \"hi\"", "x}y")
+      val df = values.flatMap(v => (0 until 3).map(i => (v, i))).toDF("v", "i")
+      Checkpoint.resumeWrite(spark, df.where(col("v") === "a,b"), "v", dir)
+      val r2 = Checkpoint.resumeWrite(spark, df, "v", dir)
+      assert(r2.skipped == Seq("a,b"), r2)
+      assert(Checkpoint.committed(dir).keySet == values.toSet)
+      assert(Checkpoint.committed(dir).values.forall(_.rows == 3))
+      val back = spark.read.parquet(s"$dir/data").groupBy("v").count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(back == values.map(_ -> 3L).toMap)
+    }
   }
 
   test("end-to-end kill/resume of the feature job reproduces the direct run exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_e2e").toString
-    // feature table partitioned by month — the realistic resumable layout
-    val features = WebFeatures.pointInTime(pages)
-      .withColumn("month_bucket", date_format(col("warc_ts"), "yyyy-MM"))
-    // "killed" first run: only managed a prefix of the months
-    val months = features.select("month_bucket").distinct()
-      .collect().map(_.getString(0)).sorted
-    assert(months.length >= 3, s"fixture too small: ${months.toSeq}")
-    val firstHalf = months.take(months.length / 2)
-    val r1 = Checkpoint.resumeWrite(spark,
-      features.where(col("month_bucket").isin(firstHalf: _*)), "month_bucket", dir)
-    assert(r1.written.map(_.value).toSet == firstHalf.toSet)
-    // resume with the full job: only the remaining months are recomputed
-    val r2 = Checkpoint.resumeWrite(spark, features, "month_bucket", dir)
-    assert(r2.written.map(_.value).toSet == months.toSet -- firstHalf)
-    assert(r2.skipped.toSet == firstHalf.toSet)
-    // resumed output == a direct single-shot run, row for row
-    val resumed = spark.read.parquet(s"$dir/data").drop("month_bucket")
-    val direct = WebFeatures.pointInTime(pages)
-    assert(resumed.count() == direct.count())
-    assert(resumed.exceptAll(direct).count() == 0 && direct.exceptAll(resumed).count() == 0)
-    // time travel: snapshot 0 sees only the first run's months
-    val atFirst = Checkpoint.readSnapshot(spark, dir, r1.snapshotId, "month_bucket")
-    assert(atFirst.select("month_bucket").distinct().collect()
-      .map(_.getString(0)).toSet == firstHalf.toSet)
+    withTempDir("graft_e2e") { tmp =>
+      val dir = tmp.toString
+      // feature table partitioned by month — the realistic resumable layout
+      val features = WebFeatures.pointInTime(pages)
+        .withColumn("month_bucket", date_format(col("warc_ts"), "yyyy-MM"))
+      // "killed" first run: only managed a prefix of the months
+      val months = features.select("month_bucket").distinct()
+        .collect().map(_.getString(0)).sorted
+      assert(months.length >= 3, s"fixture too small: ${months.toSeq}")
+      val firstHalf = months.take(months.length / 2)
+      val r1 = Checkpoint.resumeWrite(spark,
+        features.where(col("month_bucket").isin(firstHalf: _*)), "month_bucket", dir)
+      assert(r1.written.map(_.value).toSet == firstHalf.toSet)
+      // resume with the full job: only the remaining months are recomputed
+      val r2 = Checkpoint.resumeWrite(spark, features, "month_bucket", dir)
+      assert(r2.written.map(_.value).toSet == months.toSet -- firstHalf)
+      assert(r2.skipped.toSet == firstHalf.toSet)
+      // resumed output == a direct single-shot run, row for row
+      val resumed = spark.read.parquet(s"$dir/data").drop("month_bucket")
+      val direct = WebFeatures.pointInTime(pages)
+      assert(resumed.count() == direct.count())
+      assert(resumed.exceptAll(direct).count() == 0 && direct.exceptAll(resumed).count() == 0)
+      // time travel: snapshot 0 sees only the first run's months
+      val atFirst = Checkpoint.readSnapshot(spark, dir, r1.snapshotId, "month_bucket")
+      assert(atFirst.select("month_bucket").distinct().collect()
+        .map(_.getString(0)).toSet == firstHalf.toSet)
+    }
   }
 
   test("prefix running aggregates equal a sequential global window, across partitions") {
@@ -277,6 +285,15 @@ class WebSpec extends SparkTestBase {
       plan.take(2000))
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
       plan.take(2000))
+    // the range totals keep fixed-width buffers, so they stay a hash aggregate
+    // whichever outputs are read (a struct buffer, as min_by's, plans SortAggregate)
+    import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec}
+    for (outs <- Seq(Seq("mn"), Seq("mx"), Seq("c", "s", "mn", "mx"))) {
+      val p = got.select("id", outs: _*).queryExecution.sparkPlan
+      val aggs = p.collect { case a: BaseAggregateExec => a }
+      assert(aggs.nonEmpty && aggs.forall(_.isInstanceOf[HashAggregateExec]),
+        s"reading ${outs.mkString(", ")}: range totals left the hash aggregate:\n$p")
+    }
   }
 
   test("prefix range ids built twice give equal plans that print their bounds") {
@@ -389,71 +406,74 @@ class WebSpec extends SparkTestBase {
       http(200, "<html>beta</html>"))
     val shard = good1 ++ req ++ notFound ++ broken ++ good2
 
-    val dir = java.nio.file.Files.createTempDirectory("warc_test")
-    java.nio.file.Files.write(dir.resolve("shard-00000.warc"), shard)
-    // gzipped twin of the same shard (multi-record, one member)
-    val bos = new java.io.ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(bos)
-    gz.write(shard); gz.close()
-    java.nio.file.Files.write(dir.resolve("shard-00001.warc.gz"), bos.toByteArray)
+    withTempDir("warc_test") { dir =>
+      java.nio.file.Files.write(dir.resolve("shard-00000.warc"), shard)
+      // gzipped twin of the same shard (multi-record, one member)
+      val bos = new java.io.ByteArrayOutputStream()
+      val gz = new java.util.zip.GZIPOutputStream(bos)
+      gz.write(shard); gz.close()
+      java.nio.file.Files.write(dir.resolve("shard-00001.warc.gz"), bos.toByteArray)
 
-    val recs = WarcSource.records(spark, dir.toString + "/*")
-    val all = recs.collect()
-    // per shard: good1 + req + notFound + good2 parse; broken is skipped — ×2 shards
-    assert(all.length == 8, all.map(r => (r.path, r.record_type, r.url)).mkString(", "))
-    val g1 = all.filter(r => r.url == "http://a.example/x" && r.record_type == "response")
-    assert(g1.length == 2 && g1.forall(r =>
-      new String(r.body, "UTF-8") == "<html><body>alpha page</body></html>" &&
-        r.http_status == 200 && r.content_type == "text/html"))
-    assert(all.count(_.record_type == "request") == 2)
+      val recs = WarcSource.records(spark, dir.toString + "/*")
+      val all = recs.collect()
+      // per shard: good1 + req + notFound + good2 parse; broken is skipped — ×2 shards
+      assert(all.length == 8, all.map(r => (r.path, r.record_type, r.url)).mkString(", "))
+      val g1 = all.filter(r => r.url == "http://a.example/x" && r.record_type == "response")
+      assert(g1.length == 2 && g1.forall(r =>
+        new String(r.body, "UTF-8") == "<html><body>alpha page</body></html>" &&
+          r.http_status == 200 && r.content_type == "text/html"))
+      assert(all.count(_.record_type == "request") == 2)
 
-    val pages = WarcSource.pages(recs).collect()
-    // only 2xx responses with a url survive: good1 + good2, from each shard
-    assert(pages.length == 4, pages.mkString(", "))
-    assert(pages.forall(_.getInt(3) == 200))
-    assert(pages.map(_.getString(0)).toSet ==
-      Set("http://a.example/x", "http://b.example/y"))
-    val ts = pages.map(_.getTimestamp(1).toInstant.toString).toSet
-    assert(ts == Set("2024-01-01T00:00:00Z", "2024-01-04T12:30:00Z"))
+      val pages = WarcSource.pages(recs).collect()
+      // only 2xx responses with a url survive: good1 + good2, from each shard
+      assert(pages.length == 4, pages.mkString(", "))
+      assert(pages.forall(_.getInt(3) == 200))
+      assert(pages.map(_.getString(0)).toSet ==
+        Set("http://a.example/x", "http://b.example/y"))
+      val ts = pages.map(_.getTimestamp(1).toInstant.toString).toSet
+      assert(ts == Set("2024-01-01T00:00:00Z", "2024-01-04T12:30:00Z"))
 
-    // truncated gzip shard (upload cut mid-member): the decompressed prefix is
-    // salvaged, so intact leading records still parse — one torn record lost,
-    // not the shard
-    val dir2 = java.nio.file.Files.createTempDirectory("warc_trunc")
-    def member(bytes: Array[Byte]): Array[Byte] = {
-      val b = new java.io.ByteArrayOutputStream()
-      val g = new java.util.zip.GZIPOutputStream(b)
-      g.write(bytes); g.close(); b.toByteArray
+      // truncated gzip shard (upload cut mid-member): the decompressed prefix is
+      // salvaged, so intact leading records still parse — one torn record lost,
+      // not the shard
+      withTempDir("warc_trunc") { dir2 =>
+        def member(bytes: Array[Byte]): Array[Byte] = {
+          val b = new java.io.ByteArrayOutputStream()
+          val g = new java.util.zip.GZIPOutputStream(b)
+          g.write(bytes); g.close(); b.toByteArray
+        }
+        // CC layout: one gzip member per record; tear the SECOND member mid-stream
+        val m2 = member(good2)
+        val torn = member(good1) ++ java.util.Arrays.copyOfRange(m2, 0, m2.length - 20)
+        java.nio.file.Files.write(dir2.resolve("torn.warc.gz"), torn)
+        val salvaged = WarcSource.records(spark, dir2.toString + "/*").collect()
+        assert(salvaged.length >= 1 && salvaged.head.url == "http://a.example/x",
+          salvaged.map(_.url).mkString(", "))
+
+        // 40 records of random size in both gzip layouts — one member per record (CC)
+        // and the whole shard as ONE member — each read whole-shard to exactly the
+        // written records; a torn last member loses only that record
+        val rng = new scala.util.Random(11)
+        val pads = (0 until 40).map(_ => rng.nextInt(3000))
+        def body(i: Int) = s"<html><body>page $i ${"x" * pads(i)}</body></html>"
+        val many = (0 until 40).map(i => rec("response", s"http://ex.test/p$i",
+          s"2024-02-0${1 + i % 9}T00:00:00Z", http(200, body(i))))
+        val members = many.map(member)
+        withTempDir("warc_layouts") { dir3 =>
+          java.nio.file.Files.write(dir3.resolve("cc.warc.gz"), members.reduce(_ ++ _))
+          java.nio.file.Files.write(dir3.resolve("whole.warc.gz"), member(many.reduce(_ ++ _)))
+          java.nio.file.Files.write(dir3.resolve("torn.warc.gz"),
+            members.init.reduce(_ ++ _) ++ members.last.take(members.last.length / 2))
+          def read(name: String) = WarcSource.records(spark, s"$dir3/$name").collect()
+            .map(r => (r.url, r.warc_ts.toInstant.toString, new String(r.body, "UTF-8"))).toSeq
+          val want = (0 until 40).map(i =>
+            (s"http://ex.test/p$i", s"2024-02-0${1 + i % 9}T00:00:00Z", body(i)))
+          assert(read("cc.warc.gz") == want)
+          assert(read("whole.warc.gz") == want)
+          assert(read("torn.warc.gz") == want.init)
+        }
+      }
     }
-    // CC layout: one gzip member per record; tear the SECOND member mid-stream
-    val m2 = member(good2)
-    val torn = member(good1) ++ java.util.Arrays.copyOfRange(m2, 0, m2.length - 20)
-    java.nio.file.Files.write(dir2.resolve("torn.warc.gz"), torn)
-    val salvaged = WarcSource.records(spark, dir2.toString + "/*").collect()
-    assert(salvaged.length >= 1 && salvaged.head.url == "http://a.example/x",
-      salvaged.map(_.url).mkString(", "))
-
-    // 40 records of random size in both gzip layouts — one member per record (CC)
-    // and the whole shard as ONE member — each read whole-shard to exactly the
-    // written records; a torn last member loses only that record
-    val rng = new scala.util.Random(11)
-    val pads = (0 until 40).map(_ => rng.nextInt(3000))
-    def body(i: Int) = s"<html><body>page $i ${"x" * pads(i)}</body></html>"
-    val many = (0 until 40).map(i => rec("response", s"http://ex.test/p$i",
-      s"2024-02-0${1 + i % 9}T00:00:00Z", http(200, body(i))))
-    val members = many.map(member)
-    val dir3 = java.nio.file.Files.createTempDirectory("warc_layouts")
-    java.nio.file.Files.write(dir3.resolve("cc.warc.gz"), members.reduce(_ ++ _))
-    java.nio.file.Files.write(dir3.resolve("whole.warc.gz"), member(many.reduce(_ ++ _)))
-    java.nio.file.Files.write(dir3.resolve("torn.warc.gz"),
-      members.init.reduce(_ ++ _) ++ members.last.take(members.last.length / 2))
-    def read(name: String) = WarcSource.records(spark, s"$dir3/$name").collect()
-      .map(r => (r.url, r.warc_ts.toInstant.toString, new String(r.body, "UTF-8"))).toSeq
-    val want = (0 until 40).map(i =>
-      (s"http://ex.test/p$i", s"2024-02-0${1 + i % 9}T00:00:00Z", body(i)))
-    assert(read("cc.warc.gz") == want)
-    assert(read("whole.warc.gz") == want)
-    assert(read("torn.warc.gz") == want.init)
   }
 
   test("WARC pages decode under their declared charset, falling back to UTF-8") {
@@ -477,29 +497,30 @@ class WebSpec extends SparkTestBase {
       // UTF-8 page through the charset-aware path: byte-identical to the UTF-8 overload
       rec("http://l.example/d", "text/html; charset=utf-8",
         "<html><body>café 中文</body></html>".getBytes("UTF-8"))
-    val dir = java.nio.file.Files.createTempDirectory("warc_charset")
-    java.nio.file.Files.write(dir.resolve("cs.warc"), shard)
+    withTempDir("warc_charset") { dir =>
+      java.nio.file.Files.write(dir.resolve("cs.warc"), shard)
 
-    val pages = WarcSource.pages(WarcSource.records(spark, dir.toString + "/*"))
-    val decoded = pages
-      .withColumn("text_cs", WebFeatures.htmlText(col("html"), col("content_type")))
-      .withColumn("text_utf8", WebFeatures.htmlText(col("html")))
-      .select("url", "text_cs", "text_utf8")
-      .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
-    assert(decoded("http://l.example/a")._1 == "café résumé")
-    // UTF-8 decode of 0xE9 is malformed → replacement chars, never a crash/null
-    assert(decoded("http://l.example/b")._1 == decoded("http://l.example/b")._2 &&
-      decoded("http://l.example/b")._1.contains('�'))
-    assert(decoded("http://l.example/c")._1 == "plain ascii")
-    assert(decoded("http://l.example/d")._1 == "café 中文" &&
-      decoded("http://l.example/d")._1 == decoded("http://l.example/d")._2)
+      val pages = WarcSource.pages(WarcSource.records(spark, dir.toString + "/*"))
+      val decoded = pages
+        .withColumn("text_cs", WebFeatures.htmlText(col("html"), col("content_type")))
+        .withColumn("text_utf8", WebFeatures.htmlText(col("html")))
+        .select("url", "text_cs", "text_utf8")
+        .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+      assert(decoded("http://l.example/a")._1 == "café résumé")
+      // UTF-8 decode of 0xE9 is malformed → replacement chars, never a crash/null
+      assert(decoded("http://l.example/b")._1 == decoded("http://l.example/b")._2 &&
+        decoded("http://l.example/b")._1.contains('�'))
+      assert(decoded("http://l.example/c")._1 == "plain ascii")
+      assert(decoded("http://l.example/d")._1 == "café 中文" &&
+        decoded("http://l.example/d")._1 == decoded("http://l.example/d")._2)
 
-    // charsetOf unit surface: parameter extraction shapes
-    import spark.implicits._
-    val cs = Seq("text/html; charset=ISO-8859-1", """TEXT/HTML;CHARSET = "Windows-1252" """,
-      "text/html", null).toDF("ct")
-      .select(WarcSource.charsetOf(col("ct")).as("cs")).collect().map(_.getString(0))
-    assert(cs(0) == "iso-8859-1" && cs(1) == "windows-1252" && cs(2) == "")
+      // charsetOf unit surface: parameter extraction shapes
+      import spark.implicits._
+      val cs = Seq("text/html; charset=ISO-8859-1", """TEXT/HTML;CHARSET = "Windows-1252" """,
+        "text/html", null).toDF("ct")
+        .select(WarcSource.charsetOf(col("ct")).as("cs")).collect().map(_.getString(0))
+      assert(cs(0) == "iso-8859-1" && cs(1) == "windows-1252" && cs(2) == "")
+    }
   }
 
   private def warcRec(typ: String, url: String, date: String, payload: Array[Byte],
@@ -529,21 +550,22 @@ class WebSpec extends SparkTestBase {
     val bytes = shard.reduce(_ ++ _)
     assert(bytes.length > 4 * cap) // the shard genuinely exceeds the memory bound
 
-    val dir = java.nio.file.Files.createTempDirectory("warc_bound")
-    java.nio.file.Files.write(dir.resolve("big.warc"), bytes)
-    // gzipped twin: the decompressed stream also never materializes
-    val bos = new java.io.ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(bos)
-    gz.write(bytes); gz.close()
-    java.nio.file.Files.write(dir.resolve("big2.warc.gz"), bos.toByteArray)
+    withTempDir("warc_bound") { dir =>
+      java.nio.file.Files.write(dir.resolve("big.warc"), bytes)
+      // gzipped twin: the decompressed stream also never materializes
+      val bos = new java.io.ByteArrayOutputStream()
+      val gz = new java.util.zip.GZIPOutputStream(bos)
+      gz.write(bytes); gz.close()
+      java.nio.file.Files.write(dir.resolve("big2.warc.gz"), bos.toByteArray)
 
-    val recs = WarcSource.records(spark, dir.toString + "/*", maxRecordBytes = cap).collect()
-    // per shard: all 120 small records parse; the oversized one is skipped
-    assert(recs.length == 240, s"got ${recs.length}")
-    assert(!recs.exists(_.url == "http://s.example/huge"))
-    assert(recs.count(_.url == "http://s.example/7") == 2)
-    assert(recs.filter(_.url == "http://s.example/7").forall(r =>
-      new String(r.body, "UTF-8") == s"<html>page 7 ${"x" * 500}</html>"))
+      val recs = WarcSource.records(spark, dir.toString + "/*", maxRecordBytes = cap).collect()
+      // per shard: all 120 small records parse; the oversized one is skipped
+      assert(recs.length == 240, s"got ${recs.length}")
+      assert(!recs.exists(_.url == "http://s.example/huge"))
+      assert(recs.count(_.url == "http://s.example/7") == 2)
+      assert(recs.filter(_.url == "http://s.example/7").forall(r =>
+        new String(r.body, "UTF-8") == s"<html>page 7 ${"x" * 500}</html>"))
+    }
   }
 
   test("WARC adversarial Content-Length near 2^31 cannot kill the task") {
@@ -554,18 +576,19 @@ class WebSpec extends SparkTestBase {
     // poison record is skipped (its declared length is trusted for framing)
     val poison = warcRec("response", "http://bad.example/b", "2024-03-01T00:00:00Z",
       "tiny".getBytes("UTF-8"), lengthOverride = Some(Int.MaxValue.toLong - 50))
-    val dir = java.nio.file.Files.createTempDirectory("warc_adv")
-    java.nio.file.Files.write(dir.resolve("adv.warc"), good ++ good ++ poison)
-    val recs = WarcSource.records(spark, dir.toString + "/*").collect()
-    assert(recs.length == 2 && recs.forall(_.url == "http://ok.example/a"))
+    withTempDir("warc_adv") { dir =>
+      java.nio.file.Files.write(dir.resolve("adv.warc"), good ++ good ++ poison)
+      val recs = WarcSource.records(spark, dir.toString + "/*").collect()
+      assert(recs.length == 2 && recs.forall(_.url == "http://ok.example/a"))
 
-    // lying length UNDER the cap mid-shard: ensure() hits EOF, and the salvage
-    // rescan still recovers intact records buffered after the liar
-    val liar = warcRec("response", "http://liar.example/c", "2024-03-02T00:00:00Z",
-      "short".getBytes("UTF-8"), lengthOverride = Some(1 << 20))
-    java.nio.file.Files.write(dir.resolve("liar.warc"), liar ++ good)
-    val salvaged = WarcSource.records(spark, dir.toString + "/liar.warc").collect()
-    assert(salvaged.exists(_.url == "http://ok.example/a"), salvaged.mkString(", "))
+      // lying length UNDER the cap mid-shard: ensure() hits EOF, and the salvage
+      // rescan still recovers intact records buffered after the liar
+      val liar = warcRec("response", "http://liar.example/c", "2024-03-02T00:00:00Z",
+        "short".getBytes("UTF-8"), lengthOverride = Some(1 << 20))
+      java.nio.file.Files.write(dir.resolve("liar.warc"), liar ++ good)
+      val salvaged = WarcSource.records(spark, dir.toString + "/liar.warc").collect()
+      assert(salvaged.exists(_.url == "http://ok.example/a"), salvaged.mkString(", "))
+    }
   }
 
   test("WARC shard streams end-to-end into the point-in-time feature job") {
@@ -581,27 +604,28 @@ class WebSpec extends SparkTestBase {
         "GET /a HTTP/1.1\r\n\r\n".getBytes("UTF-8")),
       warcRec("response", "http://e2e.example/gone", "2024-04-01T00:00:00Z",
         warcHttp(500, "boom")))
-    val dir = java.nio.file.Files.createTempDirectory("warc_e2e")
-    java.nio.file.Files.write(dir.resolve("e2e.warc"),
-      (docs ++ noise).reduce(_ ++ _))
+    withTempDir("warc_e2e") { dir =>
+      java.nio.file.Files.write(dir.resolve("e2e.warc"),
+        (docs ++ noise).reduce(_ ++ _))
 
-    val pages = WarcSource.pages(WarcSource.records(spark, dir.toString + "/*"))
-      .withColumn("text", WebFeatures.htmlText(col("html")))
-      .withColumn("lang", lit("en"))
-    val feats = WebFeatures.pointInTime(pages)
-    val rows = feats.collect()
-    assert(rows.length == 7, s"got ${rows.length}")
-    // per-row invariant: extracted text survives the whole chain byte-identically
-    val txt = feats.where(col("url") === "http://e2e.example/a")
-      .orderBy("warc_ts").select("text").collect().map(_.getString(0))
-    assert(txt.toSeq == (0 until 4).map(i => s"doc http://e2e.example/a rev $i"))
-    // zero leakage: the cumulative count at the first snapshot of each url is 1
-    val firstCounts = feats.withColumn("rn",
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy("url").orderBy("warc_ts")))
-      .where(col("rn") === 1).select("inclusive_cum_count_over_url")
-      .collect().map(_.getLong(0))
-    assert(firstCounts.toSeq == Seq(1L, 1L))
+      val pages = WarcSource.pages(WarcSource.records(spark, dir.toString + "/*"))
+        .withColumn("text", WebFeatures.htmlText(col("html")))
+        .withColumn("lang", lit("en"))
+      val feats = WebFeatures.pointInTime(pages)
+      val rows = feats.collect()
+      assert(rows.length == 7, s"got ${rows.length}")
+      // per-row invariant: extracted text survives the whole chain byte-identically
+      val txt = feats.where(col("url") === "http://e2e.example/a")
+        .orderBy("warc_ts").select("text").collect().map(_.getString(0))
+      assert(txt.toSeq == (0 until 4).map(i => s"doc http://e2e.example/a rev $i"))
+      // zero leakage: the cumulative count at the first snapshot of each url is 1
+      val firstCounts = feats.withColumn("rn",
+        row_number().over(org.apache.spark.sql.expressions.Window
+          .partitionBy("url").orderBy("warc_ts")))
+        .where(col("rn") === 1).select("inclusive_cum_count_over_url")
+        .collect().map(_.getLong(0))
+      assert(firstCounts.toSeq == Seq(1L, 1L))
+    }
   }
 
   test("metrics listener captures per-task lineage and skew ratio") {
