@@ -40,9 +40,12 @@ object TextAnalysis {
     when(best.getField("s") >= minScore, best.getField("l")).otherwise(lit("und"))
   }
 
-  /** Whitespace-delimited token count. */
+  /** Whitespace-delimited token count; NULL for NULL text (the guard keeps
+    * `size(NULL)`'s −1 out when ANSI is off).
+    */
   def whitespaceTokenCount(text: Column): Column =
-    size(split(trim(text), "\\s+")) - when(length(trim(text)) === 0, 1).otherwise(0)
+    when(text.isNotNull,
+      size(split(trim(text), "\\s+")) - when(length(trim(text)) === 0, 1).otherwise(0))
 
   /** BPE-ish token count: letter runs, digit runs, and single non-space symbols —
     * the pre-tokenizer split most BPE vocabularies assume.

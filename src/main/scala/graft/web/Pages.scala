@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   *
   * Fully distributed generation (spark.range → column expressions; no driver loops):
   *  - Zipf-skewed domains AND Zipf-skewed snapshot counts per url → hot-domain /
-  *    hot-url skew for exercising the salted as-of join and AQE skew handling.
+  *    hot-url skew for exercising the as-of join (one window partition per url)
+  *    and AQE skew handling.
   *  - `text` derives deterministically from `html` (both functions of (urlId, snap)),
   *    giving the per-row byte-identity invariant: same (url, warc_ts) ⇒ same text.
   *  - Timestamps form per-url increasing snapshot chains with variable gaps,

@@ -7,12 +7,13 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import java.sql.Timestamp
 
 /** Property test (SURVEY §5.2): for arbitrary key/timestamp distributions — duplicate
-  * timestamps, keys with no right rows, events before the first snapshot — both as-of
-  * physical strategies must equal the brute-force oracle at every row.
+  * timestamps, keys with no right rows, events before the first snapshot — the as-of
+  * join must equal the brute-force oracle at every row, inclusive and strict, with and
+  * without a tolerance.
   */
 class AsOfPropertySpec extends SparkTestBase {
 
-  // includes null keys: every strategy groups NULL keys into one partition
+  // includes null keys: the as-of join groups NULL keys into one partition
   private val keyGen = Gen.frequency(
     (9, Gen.choose(0, 5).map(i => s"k$i")), (1, Gen.const(null: String)))
   private val tsGen = Gen.choose(0L, 2000L) // seconds; collisions on purpose
@@ -21,7 +22,7 @@ class AsOfPropertySpec extends SparkTestBase {
 
   private def ts(sec: Long) = Timestamp.from(java.time.Instant.ofEpochSecond(sec))
 
-  test("as-of join (both strategies) equals brute force on random inputs") {
+  test("as-of join equals brute force on random inputs (inclusive, strict, tolerance, strict+tolerance)") {
     val prop = Prop.forAll(
       Gen.listOfN(60, leftRowGen), Gen.listOfN(40, rightRowGen)) { (lefts, rights0) =>
       // de-duplicate right (key, ts): as-of is ambiguous under full ties
@@ -57,22 +58,17 @@ class AsOfPropertySpec extends SparkTestBase {
         Seq("k"), "rts", Seq("payload"), tolerance = Some(500L)))
       val strictRes = actual(AsOfJoin.backward(leftDf, rightDf, Seq("k"), "ts",
         Seq("k"), "rts", Seq("payload"), strict = true))
-      val bucketed = actual(AsOfJoin.backwardBucketed(leftDf, rightDf, Seq("k"), "ts",
-        Seq("k"), "rts", Seq("payload"), bucketSeconds = 300))
-      val bucketedStrict = actual(AsOfJoin.backwardBucketed(leftDf, rightDf, Seq("k"), "ts",
-        Seq("k"), "rts", Seq("payload"), bucketSeconds = 300, strict = true))
-      val bucketedTol = actual(AsOfJoin.backwardBucketed(leftDf, rightDf, Seq("k"), "ts",
-        Seq("k"), "rts", Seq("payload"), bucketSeconds = 300, tolerance = Some(500L)))
+      val strictTol = actual(AsOfJoin.backward(leftDf, rightDf, Seq("k"), "ts",
+        Seq("k"), "rts", Seq("payload"), strict = true, tolerance = Some(500L)))
 
       val e = expected(strict = false); val eStrict = expected(strict = true)
       val eTol = expected(strict = false, tolerance = Some(500L))
+      val eStrictTol = expected(strict = true, tolerance = Some(500L))
       Prop.all(
         Prop(plain == e) :| "plain mismatch",
         Prop(plainTol == eTol) :| "plain tolerance mismatch",
         Prop(strictRes == eStrict) :| "strict mismatch",
-        Prop(bucketed == e) :| "bucketed mismatch",
-        Prop(bucketedStrict == eStrict) :| "bucketed-strict mismatch",
-        Prop(bucketedTol == eTol) :| "bucketed-tolerance mismatch")
+        Prop(strictTol == eStrictTol) :| "strict tolerance mismatch")
     }
     val result = SCTest.check(SCTest.Parameters.default
       .withMinSuccessfulTests(8).withInitialSeed(org.scalacheck.rng.Seed(42L)), prop)

@@ -327,6 +327,10 @@ class DataOpsSpec extends SparkTestBase {
     val b = TextAnalysis.fingerprint(lit("hello world"))
     val r = spark.range(1).select(a.as("a"), b.as("b")).head
     assert(r.getLong(0) == r.getLong(1))
+    // whitespace token count: NULL text stays NULL (not size(NULL)'s -1); blank is 0
+    val wsText = Seq(null.asInstanceOf[String], "", "   ", " a  b ").toDF("text")
+    val ws = wsText.select(TextAnalysis.whitespaceTokenCount(col("text"))).collect().map(_.get(0))
+    assert(ws.toSeq == Seq(null, 0, 0, 2), s"whitespace token counts ${ws.toSeq}")
   }
 
   test("repetition signals: planted line/word/symbol geometry yields exact fractions") {
