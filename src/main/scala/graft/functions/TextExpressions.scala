@@ -29,7 +29,35 @@ object TextKernels {
     jaroWinkler(a.toString, b.toString, w)
   def ngramJaccardU8(a: UTF8String, b: UTF8String, n: Int): Double =
     ngramJaccard(a.toString, b.toString, n)
-  def charEntropyU8(s: UTF8String): Double = charEntropy(s.toString)
+  /** [[charEntropy]] of `s`. An ASCII string (every byte < 0x80, one code point per
+    * byte) is counted into a 128-slot table and summed in ascending code point, the
+    * order the sort gives, so the result has the same bits; other strings are decoded
+    * and sorted.
+    */
+  def charEntropyU8(s: UTF8String): Double = {
+    val n = s.numBytes()
+    if (n == 0) return 0.0
+    val counts = new Array[Int](128)
+    var i = 0
+    while (i < n) {
+      val b = s.getByte(i)
+      if (b < 0) return charEntropy(s.toString)
+      counts(b) += 1
+      i += 1
+    }
+    val total = n.toDouble
+    val invLog2 = 1.0 / math.log(2.0)
+    var h = 0.0
+    var c = 0
+    while (c < 128) {
+      if (counts(c) > 0) {
+        val p = counts(c) / total
+        h -= p * math.log(p) * invLog2
+      }
+      c += 1
+    }
+    h
+  }
   /** Unicode NFC (canonical composition) via the JDK normalizer. */
   def nfcU8(s: UTF8String): UTF8String =
     UTF8String.fromString(java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.NFC))

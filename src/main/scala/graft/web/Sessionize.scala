@@ -28,15 +28,17 @@ object Sessionize {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
     val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tsLong = col(tsCol).cast("timestamp").cast("long")
-    val delta = tsLong - lag(tsLong, 1).over(w)
-    val isNew = when(delta.isNull || delta > gapSeconds, 1L).otherwise(0L)
+    val gap = s"${prefix}gap_seconds"
     val rn = row_number().over(w)
+    // the gap is materialized before `__new` reads it, so `lag` is one window
+    // expression rather than one per mention
+    val isNew = when(col(gap).isNull || col(gap) > gapSeconds, 1L).otherwise(0L)
     // event_idx without a (keys, session_id) re-partition: distance from the row that
     // started the current session (sessions are contiguous runs in this order)
     val d = df
       .withColumn("__rn", rn)
+      .withColumn(gap, tsLong - lag(tsLong, 1).over(w))
       .withColumn("__new", isNew)
-      .withColumn(s"${prefix}gap_seconds", delta)
     d.withColumn(s"${prefix}id", sum(col("__new")).over(run) - 1)
       .withColumn(s"${prefix}event_idx",
         (col("__rn") - last(when(col("__new") === 1, col("__rn")), ignoreNulls = true).over(run))

@@ -103,6 +103,61 @@ class PlanSpec extends SparkTestBase {
     assert(many == 1, s"expected exactly 1 exchange, got $many")
   }
 
+  /** Every window expression of the analyzed plan. */
+  private def windowExpressions(df: DataFrame) = {
+    import org.apache.spark.sql.catalyst.expressions.WindowExpression
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    df.queryExecution.analyzed.collect { case w: Window => w.windowExpressions }.flatten
+      .flatMap(_.collect { case we: WindowExpression => we })
+  }
+
+  /** 200 events of 5 users ten minutes apart, with two double columns. */
+  private def clicks = {
+    val df = spark.range(200).select(col("id").as("event_id"),
+      timestamp_seconds(col("id") * 600).as("ts"), pmod(col("id"), lit(5)).as("user_id"),
+      sin(col("id")).as("a"), cos(col("id")).as("b"))
+    GraftDataset(df, FeatureSchema(
+      ColumnSpec.numeric("event_id", ColRole.Identifier), ColumnSpec.datetime("ts", ColRole.TimeInfo),
+      ColumnSpec.nominal("user_id", ColRole.Identifier), ColumnSpec.numeric("a"), ColumnSpec.numeric("b")),
+      Seq("ts", "event_id"))
+  }
+
+  test("a rolling mean and std take one sum, one count, one stddev per frame") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+    val df = Pipeline(clicks)
+      .withArithmeticAggregation("a", Seq(ops.Agg.Mean, ops.Agg.Std),
+        overColumnsCombinations = Seq(Seq("user_id")), timeWindows = Seq("1h", "7d"),
+        indexColumnName = Some("ts"))
+      .toDF()
+    val byFrame = windowExpressions(df).groupBy(_.windowSpec.frameSpecification).map {
+      case (frame, wes) => frame -> wes.map(_.windowFunction).collect {
+        case ae: AggregateExpression => ae.aggregateFunction.prettyName }.sorted
+    }
+    assert(byFrame.size == 2 && byFrame.values.forall(_ == Seq("count", "stddev_samp", "sum")),
+      byFrame.mkString("\n"))
+  }
+
+  test("IEEE division and log cast nothing to string") {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.types.StringType
+    val df = Pipeline(clicks)
+      .withArithmetic(Seq("a"), Seq("b"), Seq(ops.Arithmetic.Divide))
+      .withLog(Seq("a"), Seq(math.E))
+      .toDF()
+    assert(df.columns.toSet.contains("a_divide_b") && df.columns.toSet.contains("a_ln"))
+    val plans = Seq(df.queryExecution.analyzed, df.queryExecution.optimizedPlan)
+    val casts = plans.flatMap(_.collect { case p => p.expressions }.flatten
+      .flatMap(_.collect { case c: Cast if c.dataType == StringType => c }))
+    assert(casts.isEmpty, casts.mkString("\n"))
+  }
+
+  test("sessionize takes lag(ts) once") {
+    import org.apache.spark.sql.catalyst.expressions.Lag
+    val df = graft.web.Sessionize.withSessionIds(clicks.df, Seq("user_id"), "ts", 1800L,
+      orderBy = Seq("ts", "event_id"))
+    assert(windowExpressions(df).count(_.windowFunction.isInstanceOf[Lag]) == 1)
+  }
+
   test("column pruning reaches the parquet scan") {
     val dir = "/root/testdata/sf0.001"
     val df = spark.read.parquet(s"$dir/events.parquet")

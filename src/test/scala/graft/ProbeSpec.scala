@@ -21,7 +21,8 @@ class ProbeSpec extends SparkTestBase {
       "mb_per_sec", "full_vocab", "score_secs_full_vocab")),
     "pagerank" -> ("2000", Seq("edges", "hosts", "secs_1_iter", "secs_5_iters",
       "secs_per_iter", "edges_per_iter_sec")),
-    "dsir" -> ("300", Seq("docs", "tokens", "secs", "tokens_per_sec", "docs_per_sec")))
+    "dsir" -> ("300", Seq("docs", "tokens", "secs", "tokens_per_sec", "docs_per_sec")),
+    "width" -> ("1", Seq("k", "rows", "features", "window_exprs", "lower_ms", "exec_ms")))
 
   /** Runs `Probe.run(args)` over the gate workload's tables: a tiny lineitem for q1_agg. */
   private def probe(args: String*): String = withTempDir("graft_probe_sf") { dir =>
@@ -32,7 +33,7 @@ class ProbeSpec extends SparkTestBase {
     Probe.run(spark, args, Some(dir.toString))
   }
 
-  test("the workload table is the eight named workloads") {
+  test("the workload table is exactly the named workloads") {
     assert(Probe.workloads.keySet == expected.keySet)
   }
 

@@ -66,6 +66,97 @@ class ScalarSpec extends SparkTestBase {
       Seq("Infinity", "-Infinity", "Infinity", "NaN", "-Infinity"))
   }
 
+  /** The `when` chains [[PolarsCompat]] used before its kernels: the oracle the
+    * kernels are held to.
+    */
+  private object WhenChains {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    private val (nanLit, posInfLit, negInfLit) = (lit(NaN), lit(Inf), lit(NegInf))
+    def div(lRaw: Column, rRaw: Column): Column = {
+      val l = lRaw.cast("double")
+      val r = rRaw.cast("double")
+      val divisorSign = when(r.cast("string").startsWith("-"), -1.0).otherwise(1.0)
+      when(isnan(l) || isnan(r), nanLit)
+        .when(r === 0.0, when(l === 0.0, nanLit).otherwise(signum(l) * divisorSign * posInfLit))
+        .otherwise(l / r)
+    }
+    def logBase(base: Double, cRaw: Column): Column = {
+      val c = cRaw.cast("double")
+      when(isnan(c), nanLit).when(c === 0.0, negInfLit).when(c < 0.0, nanLit).otherwise(log(base, c))
+    }
+    def log2Of(c: Column): Column =
+      when(isnan(c), nanLit).when(c === 0.0, negInfLit).when(c < 0.0, nanLit).otherwise(log2(c))
+  }
+
+  test("IEEE kernels equal the when-chains they replaced, bit for bit (property)") {
+    import org.apache.spark.sql.{Column, Row}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import org.apache.spark.sql.types._
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // the raw bits, taken inside the generated code before any row write
+    def bits(c: Column): Column = ColumnBridge.column(StaticInvoke(classOf[java.lang.Double],
+      LongType, "doubleToRawLongBits", Seq(ColumnBridge.expression(c))))
+    val special: Seq[java.lang.Double] = Seq(0.0, -0.0, NaN, Inf, NegInf, 1.0, -1.0, 2.0, 0.5,
+      Double.MinPositiveValue, -Double.MinPositiveValue, 2.2e-308, Double.MaxValue, -Double.MaxValue,
+      java.lang.Double.longBitsToDouble(0xfff8000000000001L)).map(Double.box)
+    val value: Gen[java.lang.Double] = Gen.frequency((1, Gen.const(null: java.lang.Double)),
+      (4, Gen.oneOf(special)),
+      (3, Gen.long.map(b => Double.box(java.lang.Double.longBitsToDouble(b)))),
+      (2, Gen.choose(-1e3, 1e3).map(Double.box)), (2, Gen.choose(-3, 3).map(i => Double.box(i.toDouble))))
+    val bases = Seq(math.E, 10.0, 2.0, 0.5, 1.0, 0.0, -2.0, NaN)
+    val (l, r) = (col("l"), col("r"))
+    val pairs: Seq[(String, Column, Column)] =
+      Seq(("div", WhenChains.div(l, r), PolarsCompat.ieeeDiv(l, r)),
+        ("log2", WhenChains.log2Of(l), PolarsCompat.ieeeLog2(l)),
+        ("pmi", WhenChains.log2Of(WhenChains.div(l, r)), PolarsCompat.ieeeLog2(PolarsCompat.ieeeDiv(l, r)))) ++
+      bases.map(b => (s"log$b", WhenChains.logBase(b, l), PolarsCompat.ieeeLog(b, l)))
+    val schema = StructType(Seq(StructField("id", IntegerType),
+      StructField("l", DoubleType), StructField("r", DoubleType)))
+    def frame(rows: Seq[(java.lang.Double, java.lang.Double)]) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.zipWithIndex.map {
+        case ((a, b), i) => Row(i, a, b) }, 2), schema)
+    /** Rows where an old and a new column differ in nullness or raw bits, under `mode`. */
+    def mismatches(rows: Seq[(java.lang.Double, java.lang.Double)], mode: String): Seq[String] = {
+      val df = frame(rows).select(col("id") +: pairs.flatMap { case (n, o, k) =>
+        Seq(bits(o).as(s"${n}_old"), bits(k).as(s"${n}_new")) }: _*)
+      spark.conf.set("spark.sql.codegen.wholeStage", mode == "CODEGEN_ONLY")
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      val out = try df.orderBy("id").collect().toSeq finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+      assert(out.size == rows.size)
+      out.flatMap { row =>
+        pairs.indices.collect { case j if row.get(1 + 2 * j) != row.get(2 + 2 * j) =>
+          s"${pairs(j)._1}${rows(row.getInt(0))}: ${row.get(1 + 2 * j)} vs ${row.get(2 + 2 * j)}" }
+      }
+    }
+    // every pair of specials and null, then random pairs; codegen'd and interpreted
+    val grid = for (a <- special :+ null; b <- special :+ null) yield (a, b)
+    Seq("CODEGEN_ONLY", "NO_CODEGEN").foreach { m =>
+      val bad = mismatches(grid, m)
+      assert(bad.isEmpty, bad.take(5))
+    }
+    val prop = Prop.forAllNoShrink(Gen.listOfN(60, Gen.zip(value, value))) { rows =>
+      val bad = mismatches(rows, "CODEGEN_ONLY") ++ mismatches(rows, "NO_CODEGEN")
+      Prop(bad.isEmpty) :| bad.take(5).mkString("; ")
+    }
+    val result = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(8).withInitialSeed(org.scalacheck.rng.Seed(17L)), prop)
+    assert(result.passed, result.status.toString)
+    // the same output nullability, over nullable and over non-nullable inputs
+    val nonNull = spark.range(2).select(col("id").cast("double").as("l"), lit(1.0).as("r"))
+    Seq(frame(grid), nonNull).foreach { in =>
+      val fields = in.select(pairs.flatMap { case (n, o, k) =>
+        Seq(o.as(s"${n}_old"), k.as(s"${n}_new")) }: _*).schema.fields
+      assert(fields.grouped(2).forall { case Array(o, k) => o.nullable == k.nullable },
+        fields.mkString(", "))
+    }
+  }
+
   test("comparisons golden (incl. lexicographic strings)") {
     val cat = ColumnSpec.ordinal("CATEGORICAL_FEATURE")
     val cat2 = ColumnSpec.nominal("CATEGORICAL_FEATURE_2")

@@ -223,6 +223,29 @@ class TextSpec extends SparkTestBase {
     assert(result.passed, result.status.toString)
   }
 
+  test("charEntropyU8's ASCII count table gives the bits of the sorting count (property)") {
+    import graft.functions.TextKernels
+    import java.lang.Double.doubleToRawLongBits
+    import org.apache.spark.unsafe.types.UTF8String
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // every ASCII code point, a four-letter alphabet (long runs of equal counts) and
+    // multi-byte code points, which take the decode-and-sort path
+    val ascii = Gen.frequency((1, Gen.choose(0, 127)), (1, Gen.choose(97, 100))).map(_.toChar.toString)
+    val wide = Gen.oneOf("é", "e\u0301", "猫", "\ud83c\udf89", "ß", "\u00a0", "\u007f")
+    val text = Gen.frequency(
+      (6, Gen.choose(0, 400).flatMap(Gen.listOfN(_, ascii))),
+      (2, Gen.choose(1, 60).flatMap(Gen.listOfN(_, Gen.frequency((8, ascii), (1, wide))))))
+      .map(_.mkString)
+    val prop = Prop.forAllNoShrink(text) { s =>
+      val table = TextKernels.charEntropyU8(UTF8String.fromString(s))
+      val sorted = TextKernels.charEntropy(s)
+      Prop(doubleToRawLongBits(table) == doubleToRawLongBits(sorted)) :| s"$table vs $sorted for '$s'"
+    }
+    val result = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(3000).withInitialSeed(org.scalacheck.rng.Seed(23L)), prop)
+    assert(result.passed, result.status.toString)
+  }
+
   test("charset cache: a junk-name flood keeps real entries and stays bounded") {
     import graft.functions.CharsetKernels
     import java.nio.charset.StandardCharsets
